@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.Checkpoints.StageOps
 import graft.functions.VectorOps
@@ -541,6 +542,15 @@ object Ann {
   private def liveListDir(path: String, cid: Int, gen: Long): String =
     s"$path/corpus/cid=$cid/gen=$gen"
 
+  /** The data files of one list directory, as Spark's own listing keeps
+    * them (no `_SUCCESS`, `.crc` or in-flight copies): one driver
+    * `listStatus`. */
+  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).filter(st => st.isFile &&
+      org.apache.spark.sql.graftshim.FileIndexShim
+        .isDataFileName(st.getPath.getName))
+
   // ---- per-list id-bloom sidecars (maintenance-discovery acceleration)
 
   /** False-positive rate for the per-list id blooms. A false positive
@@ -944,21 +954,51 @@ object Ann {
     readLists(spark, path, readManifest(spark, path).gens, cids)
   }
 
+  /** Partition columns of the corpus layout `cid=C/gen=G`. */
+  private val ListPartitionSchema = StructType(Seq(
+    StructField("cid", IntegerType), StructField("gen", LongType)))
+
+  /** The selected live lists as one parquet scan, built from the manifest
+    * with NO Spark listing or schema-inference job:
+    *  - each selected live dir is listed on the driver, one `listStatus`
+    *    per dir — the calls Spark's own listing makes, which past
+    *    `parallelPartitionDiscovery.threshold` (32) dirs it runs as a
+    *    distributed job of one task per dir;
+    *  - the data schema is the Spark row-metadata footer of the first
+    *    (by path) listed file — the footer Spark's inference reads with
+    *    `mergeSchema` off, read here on the driver instead of in a job;
+    *  - Spark gets those listings plus the explicit `(cid, gen)`
+    *    partition spec, so `cid` filters still prune at planning time.
+    * The driver listing is per call, never cached across calls:
+    * [[appendToIvfIndex]] adds files to live dirs without a manifest
+    * bump, so a cached listing would hide appended rows. */
   private def readLists(spark: org.apache.spark.sql.SparkSession,
       path: String, gens: Map[Int, Long],
       cids: Option[Seq[Int]]): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.graftshim.FileIndexShim
     require(gens.nonEmpty, s"IVF index at $path has no live lists " +
       "(everything was deleted) — rebuild it")
     val selected = cids match {
       case Some(cs) => cs.filter(gens.contains).map(c => c -> gens(c))
       case None => gens.toSeq
     }
-    // empty cid selection: zero rows with the index's real schema, at the
-    // cost of ONE live dir's listing — not the whole index's
-    if (selected.isEmpty)
-      readLists(spark, path, gens, Some(Seq(gens.keysIterator.min))).limit(0)
-    else spark.read.option("basePath", s"$path/corpus")
-      .parquet(selected.map { case (c, g) => liveListDir(path, c, g) }: _*)
+    val fs = hadoopFs(spark, path)
+    def listDir(c: Int, g: Long): (Seq[Any], Path, Array[FileStatus]) = {
+      val dir = fs.makeQualified(new Path(liveListDir(path, c, g)))
+      (Seq[Any](c, g), dir, listDataFiles(fs, dir))
+    }
+    def dataSchema(dirs: Seq[(Seq[Any], Path, Array[FileStatus])]) =
+      FileIndexShim.parquetFooterSchema(spark,
+        dirs.flatMap(_._3).minByOption(_.getPath.toString).getOrElse(
+          throw new IllegalStateException(
+            s"IVF index at $path: live lists ${dirs.map(_._2)} hold no data files")))
+    val dirs = selected.map { case (c, g) => listDir(c, g) }
+    // an empty selection scans no dir; its schema still comes from one
+    // live file, because the id and payload types are the caller's
+    val schema = dataSchema(
+      if (dirs.nonEmpty) dirs else Seq((listDir _).tupled(gens.minBy(_._1))))
+    FileIndexShim.listedParquet(spark, ListPartitionSchema, schema, dirs)
       .drop("gen")
   }
 
@@ -1261,9 +1301,7 @@ object Ann {
     val fs = hadoopFs(spark, path)
     val frag = gens.toSeq.filter { case (c, g) =>
       val d = new org.apache.hadoop.fs.Path(liveListDir(path, c, g))
-      fs.exists(d) && fs.listStatus(d).count(f => f.isFile &&
-        !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith(".")) > maxFilesPerList
+      fs.exists(d) && listDataFiles(fs, d).length > maxFilesPerList
     }.map(_._1).sorted
     if (frag.isEmpty) return Nil
     val newGen = metaGen + 1
@@ -1369,12 +1407,13 @@ object Ann {
 
   /** Load the centroid matrix of a persisted index as the flat row-major
     * array [[graft.functions.TopCentroids]] consumes:
-    * (flat, numCentroids, dim). Bounded driver state by construction. */
+    * (flat, numCentroids, dim). Bounded driver state by construction.
+    * Read with the schema [[writeCentroids]] always writes, so the load is
+    * one small collect job and no schema-inference job. */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String, meta: IndexMeta): (Array[Double], Int, Int) = {
-    val centRows = spark.read
-      .parquet(s"$path/centroids/gen=${meta.centGen}")
-      .select(col("cid"), col("vec")).collect()
+    val centRows = spark.read.schema("cid INT, vec ARRAY<DOUBLE>")
+      .parquet(s"$path/centroids/gen=${meta.centGen}").collect()
     val numCentroids = centRows.length
     val dim = centRows.head.getSeq[Double](1).length
     val flat = new Array[Double](numCentroids * dim)
@@ -1386,37 +1425,59 @@ object Ann {
     (flat, numCentroids, dim)
   }
 
-  /** Number of distinct inverted lists a probe set would open — the
-    * pruning diagnostic q167 gates (`probed < materialized lists`). */
-  def probedCidCount(spark: org.apache.spark.sql.SparkSession, path: String,
-      probes: DataFrame, idCol: String, vecCol: String, nProbe: Int): Long = {
+  /** Probe routing, the ONE place probes map to inverted lists: each probe
+    * row (projected to `carry`) is exploded to its `nProbe` nearest
+    * centroids as column `cid` and collected to the driver once — the
+    * probe set is small by contract. Returns those rows as a local frame
+    * (the search's broadcast side, no second [[graft.functions.TopCentroids]]
+    * pass) and the sorted set of probed cids (no distinct job). */
+  private def routeProbes(probes: DataFrame, vecCol: String,
+      flat: Array[Double], numCentroids: Int, nProbe: Int,
+      carry: Column*): (DataFrame, Seq[Int]) = {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
+    val routed = probes.select(carry :+ explode(ColumnShim.column(TopCentroids(
+      ColumnShim.expression(col(vecCol)), flat, numCentroids, nProbe)))
+      .as("cid"): _*)
+    val rows = routed.collect()
+    val cids = rows.iterator.map(_.getInt(carry.size)).toSeq.distinct.sorted
+    (probes.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      routed.schema), cids)
+  }
+
+  /** Number of distinct inverted lists a probe set would open — the
+    * pruning diagnostic q167 gates (`probed < materialized lists`).
+    * Same routing as [[searchIvfIndex]]: one centroid collect plus one
+    * probe collect. */
+  def probedCidCount(spark: org.apache.spark.sql.SparkSession, path: String,
+      probes: DataFrame, idCol: String, vecCol: String, nProbe: Int): Long = {
     val (flat, numCentroids, _) =
       loadCentroids(spark, path, readManifest(spark, path))
-    probes.select(explode(ColumnShim.column(TopCentroids(
-        ColumnShim.expression(col(vecCol)), flat, numCentroids, nProbe)))
-        .as("cid"))
-      .distinct().count()
+    routeProbes(probes, vecCol, flat, numCentroids, nProbe)._2.size.toLong
   }
 
   /** Search a [[buildIvfIndex]] index: probes pick their `nProbe` nearest
     * centroids, the corpus read opens ONLY those lists' live generation
     * directories (path-selection pruning through the commit manifest —
-    * the probe set is small by contract, so collecting its cid set is a
-    * bounded driver step, and unprobed lists are never even listed),
-    * candidates score exact cosine, ranking keeps top k. */
+    * unprobed lists are never even listed), candidates score exact
+    * cosine, ranking keeps top k.
+    *
+    * Jobs per search: one collect of the centroids (known schema, no
+    * inference job), one collect of the routed probes ([[routeProbes]]:
+    * it yields both the probed cid set and the broadcast side), then the
+    * returned frame's own action — the broadcast of the local probe rows,
+    * the scan of the probed lists and the ranking. The probed lists'
+    * directories are listed by the driver ([[readLists]]), so no listing
+    * or schema-inference job runs however many lists are probed. */
   def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       probes: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 8): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.functions.TopCentroids
     requireIntegralId(probes, idCol, "searchIvfIndex")
     val meta = readManifest(spark, path)
-    val (flat, numCentroids, _) = loadCentroids(spark, path, meta)
     val gens = meta.gens
     require(gens.nonEmpty, s"IVF index at $path has no live lists " +
       "(everything was deleted) — rebuild it")
+    val (flat, numCentroids, _) = loadCentroids(spark, path, meta)
     val int8 = meta.int8
     // probe payload mirrors the stored codec: float probes against float
     // lists (bit-identical to ivfTopK), coded probes against coded lists
@@ -1427,12 +1488,8 @@ object Ann {
     // ids normalized to long (as bruteForceTopKFast does) so callers with
     // int id columns — and autoTuneNProbe's getLong decode — never hit a
     // runtime cast error; a no-op for the bigint fixture ids
-    val p = probes.select(col(idCol).cast("long").as("query_id"), pPayload,
-      explode(ColumnShim.column(TopCentroids(
-        ColumnShim.expression(col(vecCol)), flat, numCentroids, nProbe)))
-        .as("cid"))
-    val probedCids = p.select(col("cid")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val (p, probedCids) = routeProbes(probes, vecCol, flat, numCentroids,
+      nProbe, col(idCol).cast("long").as("query_id"), pPayload)
     val c = readLists(spark, path, gens, Some(probedCids))
       .select(col("id").cast("long").as("neighbor_id"),
         (if (int8) col("code") else col("vec")).as("cvec"), col("cid"))

@@ -27,6 +27,71 @@ class AnnIndexSpec extends SparkSpec {
     assert(fromIndex.nonEmpty)
   }
 
+  private def triples(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("64-list index past the 32-dir parallel-listing threshold: search equals ivfTopK and ivfTopKInt8 bit-for-bit") {
+    val probes = embs.filter(col("vec_id") < 10)
+    val nProbe = 40
+    for ((codec, inMemory) <- Seq(
+        "float" -> Ann.ivfTopK(embs, probes, "vec_id", "embedding", k = 5,
+          numCentroids = 64, nProbe = nProbe),
+        "int8" -> Ann.ivfTopKInt8(embs, probes, "vec_id", "embedding", k = 5,
+          numCentroids = 64, nProbe = nProbe))) {
+      val p = tmpPath(s"ivf_wide_$codec")
+      Ann.buildIvfIndex(embs, "vec_id", "embedding", p, numCentroids = 64,
+        codec = codec)
+      val res = Ann.searchIvfIndex(spark, p, probes, "vec_id", "embedding",
+        k = 5, nProbe = nProbe)
+      val opened = res.inputFiles.filter(_.contains("/corpus/"))
+        .map(_.split("/cid=")(1).split("/")(0)).toSet
+      assert(opened.size > 32,
+        s"$codec search opened only ${opened.size} live lists")
+      val got = triples(res)
+      assert(got.nonEmpty)
+      assert(got === triples(inMemory), s"$codec search diverged")
+    }
+  }
+
+  test("one search runs at most 5 jobs and fewer tasks than the lists it probes") {
+    val jPath = tmpPath("ivf_jobs")
+    Ann.buildIvfIndex(embs, "vec_id", "embedding", jPath, numCentroids = 64)
+    // a local probe batch, as a serving client sends one
+    val local = embs.filter(col("vec_id") < 50)
+      .select(col("vec_id"), col("embedding"))
+    val probes = spark.createDataFrame(
+      java.util.Arrays.asList(local.collect(): _*), local.schema)
+    val lists = Ann.probedCidCount(spark, jPath, probes, "vec_id",
+      "embedding", nProbe = 8)
+    val (rows, spent) = jobsDuring(Ann.searchIvfIndex(spark, jPath, probes,
+      "vec_id", "embedding", k = 5, nProbe = 8).collect().length)
+    assert(rows === 50 * 5)
+    assert(spent.jobs <= 5, s"search ran $spent")
+    assert(spent.tasks < lists, s"search ran $spent over $lists probed lists")
+  }
+
+  test("search sees rows appendToIvfIndex wrote into live lists in place (no manifest bump)") {
+    val aPath = tmpPath("ivf_inplace")
+    Ann.buildIvfIndex(embs, "vec_id", "embedding", aPath, numCentroids = 16)
+    val src = embs.filter(col("vec_id") < 20)
+    // copies under negative ids win the cosine-1.0 tie against their
+    // originals (rank breaks ties by ascending id); probes carry ids of
+    // their own so the self-match filter drops neither
+    val copies = src.select((-col("vec_id") - 1).as("vec_id"), col("embedding"))
+    val probes = src.select((col("vec_id") + 1000000L).as("vec_id"),
+      col("embedding"))
+    def copiesFound(): Set[Long] = Ann.searchIvfIndex(spark, aPath, probes,
+        "vec_id", "embedding", k = 1, nProbe = 16)
+      .collect().map(_.getLong(1)).filter(_ < 0).toSet
+    assert(copiesFound().isEmpty)
+    val before = Ann.readManifest(spark, aPath)
+    Ann.appendToIvfIndex(copies, "vec_id", "embedding", aPath)
+    assert(Ann.readManifest(spark, aPath) === before,
+      "the copies must land in already-live lists, without a new manifest")
+    val expected = copies.collect().map(_.getLong(0)).toSet
+    assert(expected.nonEmpty && copiesFound() === expected)
+  }
+
   test("appendToIvfIndex: incremental build equals one-shot assignment against the same centroids") {
     val appendPath = tmpPath("ivf_append")
     val half1 = embs.filter(pmod(col("vec_id"), lit(2L)) === 0)
@@ -508,6 +573,10 @@ class AnnIndexSpec extends SparkSpec {
       .map(_.split("/cid=")(1).split("/")(0)).toSet
     assert(scopedCids.nonEmpty && scopedCids.subsetOf(Set("0", "1")),
       s"scoped read opened $scopedCids")
+    // an empty selection opens nothing and keeps the corpus schema
+    val none = Ann.readIndexCorpus(spark, path, Some(Nil))
+    assert(none.schema === Ann.readIndexCorpus(spark, path).schema)
+    assert(none.inputFiles.isEmpty && none.count() === 0)
   }
 
   test("manifest publish refuses to replace an existing generation: the race loser dies loudly, index readable throughout") {

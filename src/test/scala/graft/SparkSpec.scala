@@ -17,9 +17,45 @@ trait SparkSpec extends AnyFunSuite {
     * mid-test; every state-store path is caller-owned and
     * process-unique now. */
   def tmpPath(name: String): String = TmpDirs.path(name)
+
+  /** Run `f` under a job group of its own and count the Spark jobs and
+    * finished tasks tagged with it. Jobs of other threads (concurrent
+    * suites share the session) carry other groups, so they never enter
+    * the count; broadcast and AQE stage jobs inherit the caller's group. */
+  def jobsDuring[A](f: => A): (A, SparkSpec.JobCount) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val group = s"jobsDuring-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsDuring")
+      val out = f
+      org.apache.spark.graftshim.ListenerShim.waitUntilListenerBusEmpty(sc)
+      (out, SparkSpec.JobCount(jobs.get, tasks.get))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {
+  final case class JobCount(jobs: Int, tasks: Int)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
