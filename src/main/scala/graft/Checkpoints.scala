@@ -97,9 +97,9 @@ object Checkpoints {
     rddLeaves.foreach(_.rdd.unpersist(blocking = false): Unit)
   }
 
-  /** Try/finally companion for multi-stage operators: [[stage]] each
-    * internal frame through the tracker, then `releaseAll()` in ONE
-    * `finally` — so an exception anywhere mid-pipeline (a failed
+  /** Tracker for multi-stage operators: [[stage]] each internal frame
+    * through it and release them all at the end — normally through
+    * [[staging]], so an exception anywhere mid-pipeline (a failed
     * materialization, a failed commit write) still frees every staging
     * block created so far instead of leaking it back to ContextCleaner
     * timing. Frames the caller RETURNS must not ride the tracker. */
@@ -117,6 +117,39 @@ object Checkpoints {
     /** Track an already-checkpointed frame for [[releaseAll]]. */
     def track(df: DataFrame): DataFrame = { frames += df; df }
 
-    def releaseAll(): Unit = frames.foreach(release)
+    /** [[release]] EVERY tracked frame, then rethrow the first failure
+      * (a multi-leaf frame's `require`, say) with any later ones attached
+      * as suppressed — one bad frame never leaks the frames after it. */
+    def releaseAll(): Unit = {
+      var first: Throwable = null
+      frames.foreach { df =>
+        try release(df)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            if (first == null) first = e else first.addSuppressed(e)
+        }
+      }
+      frames.clear()
+      if (first != null) throw first
+    }
+  }
+
+  /** Run `body` with a fresh [[Staging]] tracker and release every frame
+    * it tracked on the way out, success or failure. When `body` throws,
+    * ITS exception propagates and a release failure rides it as
+    * suppressed — a `finally { releaseAll() }` would replace the body's
+    * exception with the release's. */
+  def staging[T](body: Staging => T): T = {
+    val st = new Staging
+    val out =
+      try body(st)
+      catch {
+        case t: Throwable =>
+          try st.releaseAll()
+          catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
+          throw t
+      }
+    st.releaseAll()
+    out
   }
 }

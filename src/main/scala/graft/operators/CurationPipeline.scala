@@ -252,8 +252,7 @@ object CurationPipeline {
       textCol: String, sourceCol: String,
       config: Config = Config()): DataFrame = {
     import graft.Checkpoints.StageOps
-    val st = new graft.Checkpoints.Staging
-    try {
+    graft.Checkpoints.staging { st =>
       stageList(eval, idCol, textCol, sourceCol, config)
         .foldLeft(docs) { case (df, (name, f)) =>
           val out = f(df)
@@ -261,7 +260,7 @@ object CurationPipeline {
           else if (stagedStages(name)) st.track(out.staged)
           else out
         }
-    } finally st.releaseAll() // near_dedup's checkpoint cut their lineage
+    } // tracked stages released here: near_dedup's checkpoint cut their lineage
   }
 
   /** [[run]] with per-stage wall-clock attribution: each stage output is

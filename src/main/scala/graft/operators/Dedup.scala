@@ -189,21 +189,48 @@ object Dedup {
   def lshBands(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
       seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    import org.apache.spark.sql.graftshim.ColumnShim
-    val sigCol = ColumnShim.column(graft.functions.MinHashSig(
-      ColumnShim.expression(col(textCol)), shingleN, numHashes, seed))
-    val sig = df.select(col(idCol), sigCol.as("mh"))
+    val sig = df.select(col(idCol),
+        minhashSig(col(textCol), shingleN, numHashes, seed).as("mh"))
       .filter(col("mh").isNotNull)
-    val bandSigs = (0 until bands).map { bnd =>
-      xxhash64(concat_ws(",",
-        (bnd * rows until (bnd + 1) * rows)
-          .map(i => element_at(col("mh"), i + 1)): _*))
-    }
-    sig.select(col(idCol), posexplode(array(bandSigs: _*)))
+    sig.select(col(idCol), posexplode(bandSigArray(col("mh"), numHashes, bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_sig")
   }
+
+  /** The scan-stage [[graft.functions.MinHashSig]] kernel as a column:
+    * the whole signature per document, NULL when it has no shingles. */
+  private def minhashSig(text: Column, shingleN: Int, numHashes: Int,
+      seed: Long): Column = {
+    import org.apache.spark.sql.graftshim.ColumnShim
+    ColumnShim.column(graft.functions.MinHashSig(
+      ColumnShim.expression(text), shingleN, numHashes, seed))
+  }
+
+  /** Band `b`'s signature is the xxhash64 of signature elements
+    * `[b·rows, (b+1)·rows)` joined by "," — the array [[lshBands]]
+    * explodes, indexed by band. Reference `mh` as a projected column:
+    * every band re-reads it. */
+  private def bandSigArray(mh: Column, numHashes: Int, bands: Int): Column = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rows = numHashes / bands
+    array((0 until bands).map { bnd =>
+      xxhash64(concat_ws(",",
+        (bnd * rows until (bnd + 1) * rows)
+          .map(i => element_at(mh, i + 1)): _*))
+    }: _*)
+  }
+
+  /** `df` plus `outCol`: the document's [[lshBands]] band signatures as
+    * one array (element `b` is band `b`'s `band_sig`), NULL for a
+    * document with no shingles — where [[lshBands]] emits no row. Lets a
+    * caller stage the signatures beside the document instead of as
+    * corpus × bands rows. */
+  def withBandSigs(df: DataFrame, textCol: String, outCol: String,
+      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
+      seed: Long = 42L): DataFrame =
+    df.withColumn("__mh", minhashSig(col(textCol), shingleN, numHashes, seed))
+      .withColumn(outCol, when(col("__mh").isNotNull,
+        bandSigArray(col("__mh"), numHashes, bands)))
+      .drop("__mh")
 
   /** All ordered pairs (a<b) from a sorted id array, as an expression. */
   private def pairCombos(ids: Column): Column =
@@ -363,11 +390,11 @@ object Dedup {
     // whole MinHash+shuffle subtree (measured: the fused path cost ~2.5×
     // the sum of its stages at the 10× fixture before this and the `sh`
     // checkpoint below; tools/NearDupProbe decomposes it).
-    // all internal staging rides a tracker released in ONE finally, so an
-    // exception mid-pipeline still frees the blocks created so far
-    // (round-12 ADVICE: releases outside try/finally leak on failure)
-    val st = new graft.Checkpoints.Staging
-    try {
+    // all internal staging rides a tracker released on the way out of
+    // Checkpoints.staging, so an exception mid-pipeline still frees the
+    // blocks created so far (round-12 ADVICE: releases outside
+    // try/finally leak on failure)
+    graft.Checkpoints.staging { st =>
     val rawCands = st.track(lshCandidatePairs(df, idCol, textCol, shingleN,
       numHashes, bands, seed, maxBucket)
       .staged)
@@ -405,11 +432,11 @@ object Dedup {
       // when it becomes unreachable). NOT tracked — it is the result.
       .staged
     // the internal staging frames' last consumer just materialized —
-    // the finally below frees their blocks NOW instead of waiting for a
+    // Checkpoints.staging frees their blocks NOW instead of waiting for a
     // driver GC to reach the ContextCleaner (round-12: eventually-freed
     // internal checkpoints stack up across a long session and the
     // pressure taxes every later operator)
-    } finally st.releaseAll()
+    }
   }
 
   /** EXACT n-gram Jaccard similarity join via prefix filtering — the
@@ -432,8 +459,7 @@ object Dedup {
     * the same bucket-collect shape as LSH, never O(N²). */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, shingleN: Int = 3): DataFrame = {
-    val st = new graft.Checkpoints.Staging
-    try {
+    graft.Checkpoints.staging { st =>
     val sh = df.select(col(idCol),
         shingles(col(textCol), shingleN).as("sh"))
       .withColumn("hs", sort_array(array_distinct(
@@ -476,17 +502,24 @@ object Dedup {
       .select(col("id_a"), col("id_b"), jaccard(col("s_a"), col("s_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .staged // eager; result contract as in nearDupPairs — NOT tracked
-    // internal staging released in the finally — see nearDupPairs
-    } finally st.releaseAll()
+    // internal staging released by Checkpoints.staging — see nearDupPairs
+    }
   }
 
   /** Transitive duplicate CLUSTERS from a near-dup pair list: connected
     * components by iterative min-label propagation. Each doc's label starts
     * as its own id; every round each doc takes the min label among itself
     * and its neighbors; fixpoint = components labeled by their min member.
+    * Round 0 — identity labels meeting their neighbors — is computed
+    * straight from the symmetric edge list: one aggregate per node,
+    * `least(id, min(neighbor))`, over the edge cache's existing
+    * hash-partitioning (no identity-label staging, no join), with the
+    * round's changed count (`label < id`) observed on its staging. Labels,
+    * round count and the `maxRounds` contract equal the identity-seeded
+    * loop's (a test twin pins both).
     *
     * 100 TB posture: operates on the PAIR list (∝ duplicate density, not
-    * corpus size); each round is one join + one groupBy of that list;
+    * corpus size); each later round is one join + one groupBy of that list;
     * convergence in O(diameter) rounds (near-dup components are
     * low-diameter in practice — chains of borderline pairs are rare).
     * `localCheckpoint` per round truncates the growing lineage. The driver
@@ -508,21 +541,25 @@ object Dedup {
     * (the DuckDB oracle uses a recursive CTE over the same pairs). */
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxRounds: Int = 20): DataFrame = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
+    // both directions of every pair from one scan of `pairs`
+    val edges = pairs
+      .select(explode(array(
+        struct(col(idA).as("src"), col(idB).as("dst")),
+        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       // round-14: cache the edge set ALREADY hash-partitioned on the join
-      // key — the per-round join needs hashpartitioning(dst) and the
-      // distinct's (src, dst) partitioning does not satisfy it, so every
-      // propagation round was re-exchanging the whole edge cache; the
-      // InMemoryRelation preserves this partitioning, so rounds now
-      // shuffle only the (small) label side (guide §2.4: two operations
-      // keyed the same way share one exchange)
+      // key — the per-round join needs hashpartitioning(dst), and the
+      // InMemoryRelation preserves this partitioning, so rounds shuffle
+      // only the (small) label side (guide §2.4: two operations keyed the
+      // same way share one exchange). The distinct comes after the
+      // repartition: hashpartitioning(dst) already clusters every
+      // (src, dst) key, so it needs no exchange of its own
       .repartition(col("dst"))
+      .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .staged
+    // null until round 0 stages: with maxRounds <= 0 no round runs and
+    // the non-convergence throw below fires
+    var labels: DataFrame = null
     var round = 0
     var converged = false
     var failed = true // any exit before the success flip releases labels
@@ -532,23 +569,33 @@ object Dedup {
     // ContextCleaner timing (round-12 ADVICE)
     try {
     while (round < maxRounds && !converged) {
-      // candidate labels flowing across edges, then min per id (incl. own).
-      // The own label rides the same aggregate (min over the single
-      // own=true row), so convergence detection needs no per-round join
-      // back onto labels. Round-15: the changed-count rides the staging
-      // materialization itself as an OBSERVED metric (CollectMetricsExec
-      // accumulates during the checkpoint action; codegen-transparent) —
-      // one job per round instead of staging + a follow-up filter-count
-      // job over the checkpointed blocks.
-      val viaNeighbor = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("cluster"), lit(false).as("own"))
+      // (id, cluster, old): the round's min label per id and the label it
+      // held before the round. Round 0 is the identity labeling's first
+      // propagation, read off the edge list: by symmetry a node's
+      // neighbors are the `src` of its `dst` rows, and grouping on `dst`
+      // rides the edge cache's hashpartitioning(dst), so the round needs
+      // no exchange. Later rounds: candidate labels flowing across edges,
+      // then min per id (incl. own); the own label rides the same
+      // aggregate (min over the single own=true row), so convergence
+      // detection needs no per-round join back onto labels.
+      val step =
+        if (labels == null) edges.groupBy(col("dst"))
+          .agg(least(col("dst"), min(col("src"))).as("cluster"))
+          .select(col("dst").as("id"), col("cluster"), col("dst").as("old"))
+        else labels.select(col("id"), col("cluster"), lit(true).as("own"))
+          .union(edges
+            .join(labels.withColumnRenamed("id", "dst"), "dst")
+            .select(col("src").as("id"), col("cluster"), lit(false).as("own")))
+          .groupBy(col("id"))
+          .agg(min(col("cluster")).as("cluster"),
+            min(when(col("own"), col("cluster"))).as("old"))
+      // Round-15: the changed-count rides the staging materialization
+      // itself as an OBSERVED metric (CollectMetricsExec accumulates
+      // during the checkpoint action; codegen-transparent) — one job per
+      // round instead of staging + a follow-up filter-count job over the
+      // checkpointed blocks.
       val obs = org.apache.spark.sql.Observation(s"dupclusters_r$round")
-      val next = labels.select(col("id"), col("cluster"), lit(true).as("own"))
-        .union(viaNeighbor)
-        .groupBy(col("id"))
-        .agg(min(col("cluster")).as("cluster"),
-          min(when(col("own"), col("cluster"))).as("old"))
+      val next = step
         .observe(obs,
           sum(when(col("cluster") < col("old"), 1L).otherwise(0L))
             .as("changed"))
@@ -560,7 +607,7 @@ object Dedup {
       // the previous round's label blocks are dead once `next` is
       // materialized — release them now rather than stacking one
       // labels-sized cache entry per round until a driver GC
-      graft.Checkpoints.release(labels)
+      if (labels != null) graft.Checkpoints.release(labels)
       labels = next.select(col("id"), col("cluster"))
       converged = changed == 0
       round += 1
@@ -574,7 +621,7 @@ object Dedup {
     failed = false
     } finally {
       edges.unpersist(blocking = false)
-      if (failed) graft.Checkpoints.release(labels)
+      if (failed && labels != null) graft.Checkpoints.release(labels)
     }
     labels
   }
@@ -960,8 +1007,7 @@ object Dedup {
     // `exploded` deliberately stays lazy: recomputing the scan-stage
     // WordSegments kernel is cheaper than checkpointing corpus-sized
     // segment rows.
-    val st = new graft.Checkpoints.Staging
-    try {
+    graft.Checkpoints.staging { st =>
       val exploded = explodeSegments(newDocs, idCol, textCol, segmentWords, keep)
       val firsts = st.track(exploded.groupBy(col("segment"))
         .agg(min(packedPos(idCol)).as("__first")).staged)
@@ -982,7 +1028,7 @@ object Dedup {
         segmentIndex.select(col("segment"))
           .unionAll(newFirsts.select(col("segment")))
       (reassemble(marked, idCol, keep), updatedIndex)
-    } finally st.releaseAll()
+    }
   }
 
   /** Deterministic fixed-window segmentation shared by the dedup variants:
@@ -1403,11 +1449,10 @@ object Dedup {
     // anti-join's two branches, and the new-gram delta three times (the
     // coverage join, the returned index delta, and the next drop's
     // probe). Stage each once; the batch-firsts blocks die as soon as
-    // the delta materializes and are released in the finally. The
+    // the delta materializes and are released on return. The
     // RETURNED delta frame is the staged frame itself (result contract
     // as in nearDupPairs: callers need not re-stage it).
-    val st = new graft.Checkpoints.Staging
-    try {
+    graft.Checkpoints.staging { st =>
       val occ = spanGramOccurrences(newDocs, idCol, textCol, k)
       val batchFirsts0 = occ.groupBy(col("h"))
         .agg(min(spanPacked(idCol)).as("__first"))
@@ -1432,7 +1477,7 @@ object Dedup {
       (reassembleSpansCov(newDocs, idCol, textCol,
           spanCoverArrays(coveredRows, idCol, k)),
         newFirsts.select(col("h")))
-    } finally st.releaseAll()
+    }
   }
 
   /** Corpus duplication PROFILE by `groupCol` (source/lang/shard): how

@@ -16,12 +16,13 @@ import graft.operators.{Decontam, Dedup, Mixing, TextAnalysis}
   *
   *   1. exact dedup   — in-batch first-occurrence + anti-join against the
   *                      persisted fingerprint set
-  *   2. near dedup    — the batch's LSH band signatures are joined
-  *                      against the persisted band INDEX of previously
-  *                      kept docs (the stored side is never re-hashed —
-  *                      each batch computes signatures only for itself),
-  *                      plus the usual in-batch bucket-collect; exact
-  *                      Jaccard verifies both candidate sets
+  *   2. near dedup    — the batch's LSH buckets are grouped together
+  *                      with the persisted band INDEX rows of previously
+  *                      kept docs that share them (the stored side is
+  *                      never re-hashed — each batch computes signatures
+  *                      only for itself); one pass enumerates in-batch
+  *                      and batch-vs-store candidates and exact Jaccard
+  *                      verifies both ([[verifiedPairs]])
   *   3. decontaminate — broadcast eval n-gram probe (stateless per doc)
   *   4. quality gate + deterministic split (stateless per doc)
   *
@@ -62,14 +63,19 @@ import graft.operators.{Decontam, Dedup, Mixing, TextAnalysis}
   * [[reconcileKept]] re-collapses the persisted edge log on the
   * `reconcileEvery` cadence and retracts the over-kept members.
   *
-  * 100 TB posture: per batch, one scan of the batch (signatures in the
-  * scan stage), one hash join per state table keyed on fp / (band,
-  * band_sig) — the stored side is a growing but bucketable index, and
-  * nothing unbounded reaches the driver. After thousands of batches the
-  * one-delta-dir-per-batch layout decays into the classic small-files
-  * problem (listing + parquet footer reads dominate every batch) — fold
-  * old deltas into a single snapshot with [[compactState]] on the
-  * caller's cadence.
+  * 100 TB posture: per batch, one scan of the batch and ONE feature
+  * staging — the post-exact (or post-span) frame with its band-signature
+  * array and hashed shingles computed in the same stage; one bucket
+  * shuffle chain, where the batch's band rows meet the stored `bands/`
+  * rows semi-joined on the batch's (band, band_sig) keys, so the stored
+  * side is a growing but bucketable index that is never grouped whole;
+  * one verify over the batch docs and the matched `kept/` docs; and one
+  * anti-join of the losers. The state deltas are projections of staged
+  * frames, and nothing unbounded reaches the driver. After thousands of
+  * batches the one-delta-dir-per-batch layout decays into the classic
+  * small-files problem (listing + parquet footer reads dominate every
+  * batch) — fold old deltas into a single snapshot with [[compactState]]
+  * on the caller's cadence.
   */
 object StreamingCuration {
 
@@ -202,13 +208,19 @@ object StreamingCuration {
     val bandsSchema = StateSchemas("bands")
     val keptSchema = StateSchemas("kept")
 
-    // every internal staging frame rides a tracker released in ONE
-    // finally at the bottom, so a batch that fails anywhere between its
-    // eager checkpoints and the commit still frees its staging blocks
+    // every internal staging frame rides a tracker released on the way
+    // out of Checkpoints.staging, so a batch that fails anywhere between
+    // its eager checkpoints and the commit still frees its staging blocks
     // instead of leaking them back to ContextCleaner timing (round-12
     // ADVICE)
-    val st = new graft.Checkpoints.Staging
-    try {
+    graft.Checkpoints.staging { st =>
+    // the near-dup FEATURES — band-signature array and hashed shingles —
+    // ride the one staging of the frame near dedup reads (post-exact, or
+    // post-span when span dedup runs), computed in its last stage
+    def withFeatures(df: DataFrame): DataFrame =
+      Dedup.withBandSigs(df, textCol, "__bands")
+        .withColumn("__sh", Dedup.shingleHashes64(col(textCol), 3))
+
     // 1. exact dedup: in-batch first occurrence per fingerprint, then
     //    anti-join the persisted fingerprint set
     val seenFps = readState(spark, fpPath, fpSchema, batchId)
@@ -216,11 +228,12 @@ object StreamingCuration {
       TextAnalysis.fingerprint(col(textCol)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__fp")).orderBy(col(idCol))
-    val postExact = st.track(withFp
+    val firsts = withFp
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
       .join(seenFps, col("__fp") === col("fp"), "left_anti")
-      .staged)
+    val postExact = st.track(
+      (if (config.spanDedupK.isEmpty) withFeatures(firsts) else firsts).staged)
 
     // 1b. optional incremental duplicated-SPAN excision (keep-first): the
     //     batch is scrubbed against the persisted gram index + intra-batch
@@ -236,84 +249,45 @@ object StreamingCuration {
         val seenGrams = readState(spark, gramsPath, gramSchema, batchId)
         val (cleaned, delta) = Dedup.removeDuplicatedSpansIncremental(
           postExact, seenGrams, idCol, textCol, k)
-        val swapped = st.track(postExact.drop(textCol)
+        val swapped = st.track(withFeatures(postExact.drop(textCol)
           .join(cleaned.filter(col("n_removed") < col("n_words"))
             .select(col(idCol), col("clean_text")), Seq(idCol))
-          .withColumnRenamed("clean_text", textCol)
+          .withColumnRenamed("clean_text", textCol))
           .staged)
         (swapped, Some(delta))
       case None => (postExact, None)
     }
 
-    // 2. near dedup: batch-side signatures only; the stored index is
-    //    probed by equi-join on (band, band_sig)
-    val batchBands = st.track(Dedup.lshBands(postSpan, idCol, textCol)
-      .staged)
+    // 2. near dedup: one candidate-and-verify pass over the batch's
+    //    buckets and the stored index rows sharing them, then the
+    //    in-batch representatives (component-min over verified in-batch
+    //    pairs) and every batch doc matching a kept doc drop in ONE
+    //    anti-join. dupClusters returns a PROJECTION over its final
+    //    staged frame, already eagerly checkpointed (so no re-stage), and
+    //    single-leaf, so release's owned-leaf contract holds on it
     val storedBands = readState(spark, bandsPath, bandsSchema, batchId)
     val storedKept = readState(spark, keptPath, keptSchema, batchId)
-    // in-batch candidates (bucket-collect, capped like the batch path)
-    val internalCands = batchBands
-      .groupBy(col("band"), col("band_sig"))
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      // bucket-content dedup before the quadratic enumeration (round-15;
-      // see Dedup.lshCandidatePairs — candidate set provably unchanged)
-      .select(col("ids")).distinct()
-      .select(explode(Dedup.cappedPairCombos(col("ids"), Dedup.MaxBucket))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b")).distinct()
-    // batch-vs-store candidates: shared band bucket with any kept doc
-    val storeCands = batchBands
-      .join(storedBands
-          .select(col("id").as("__kept_id"), col("band"), col("band_sig")),
-        Seq("band", "band_sig"))
-      .select(col(idCol).as("new_id"), col("__kept_id")).distinct()
-    // verify on hashed shingles (same trade as the batch twin
-    // Dedup.nearDupPairs: 8-byte join payload + one-pass merge Jaccard,
-    // exact up to 64-bit collisions), candidates only
-    val sh = Dedup.shingleHashes64(col("text"), 3)
-    val batchSh = st.track(postSpan
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .select(col("id"), sh.as("sh")).staged)
-    val keptSh = storedKept
-      .join(storeCands.select(col("__kept_id").as("id")).distinct(), Seq("id"),
-        "left_semi")
-      .select(col("id"), sh.as("sh"))
-    val internalPairs = st.track(internalCands
-      .join(batchSh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(batchSh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .filter(Dedup.jaccardHashedGE(col("sh_a"), col("sh_b"),
-        config.nearDupThreshold).isNotNull)
-      .select(col("id_a"), col("id_b"))
-      .staged)
-    val storePairs = st.track(storeCands
-      .join(batchSh.select(col("id").as("new_id"), col("sh").as("sh_a")),
-        "new_id")
-      .join(keptSh.select(col("id").as("__kept_id"), col("sh").as("sh_b")),
-        "__kept_id")
-      .filter(Dedup.jaccardHashedGE(col("sh_a"), col("sh_b"),
-        config.nearDupThreshold).isNotNull)
-      .select(col("new_id"), col("__kept_id"))
-      .staged)
-    val droppedByStore = storePairs.select(col("new_id").as(idCol)).distinct()
-    // in-batch representatives: component-min over verified batch pairs
-    // track the frame dupClusters returns — a PROJECTION over its final
-    // staged frame, already eagerly checkpointed (so no re-stage), and
-    // single-leaf, so release's owned-leaf contract holds on it directly
-    val internalLabels = st.track(Dedup.dupClusters(internalPairs))
-    val internalLosers = internalLabels
-      .filter(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
+    val verified = st.track(verifiedPairs(postSpan, idCol, storedBands,
+      storedKept, config.nearDupThreshold))
+    val internalLabels = st.track(
+      Dedup.dupClusters(verified.filter(!col("stored"))))
+    val losers = internalLabels.filter(col("id") =!= col("cluster"))
+      .select(col("id"))
+      .union(verified.filter(col("stored")).select(col("id_a").as("id")))
+    // the losers are a subset of the batch's ids — broadcast them like
+    // Decontam.decontaminate broadcasts its batch-bounded flagged set
     val postNear = st.track(postSpan
-      .join(internalLosers, Seq(idCol), "left_anti")
-      .join(droppedByStore, Seq(idCol), "left_anti")
+      .join(broadcast(losers.select(
+        col("id").cast(postSpan.schema(idCol).dataType).as(idCol))),
+        Seq(idCol), "left_anti")
       .staged)
 
     // 3. decontaminate (stateless), 4. quality + split (stateless)
+    val nearKept = postNear.drop("__bands", "__sh")
     val postDecontam = eval match {
-      case Some(ev) => Decontam.decontaminate(postNear, ev, idCol, textCol,
+      case Some(ev) => Decontam.decontaminate(nearKept, ev, idCol, textCol,
         n = config.decontaminateNgram)
-      case None => postNear
+      case None => nearKept
     }
     val kept = Mixing.splitAssign(
       postDecontam
@@ -336,24 +310,25 @@ object StreamingCuration {
       .write.mode("overwrite").parquet(s"$fpPath/batch=$batchId")
     newGramDelta.foreach(
       _.write.mode("overwrite").parquet(s"$gramsPath/batch=$batchId"))
-    batchBands.join(postNear.select(col(idCol)), Seq(idCol), "left_semi")
-      .select(col(idCol).as("id"), col("band"), col("band_sig"))
+    // the kept docs' band rows, straight from the signatures they carry
+    // (a doc with no shingles has a NULL array and writes no row)
+    postNear.select(col(idCol).as("id"),
+        posexplode(col("__bands")).as(Seq("band", "band_sig")))
       .write.mode("overwrite").parquet(s"$bandsPath/batch=$batchId")
     postNear.select(col(idCol).as("id"), col(textCol).as("text"))
       .write.mode("overwrite").parquet(s"$keptPath/batch=$batchId")
     // the verified near-dup EDGE set, normalized (least, greatest) — the
     // pair graph [[reconcileKept]] re-collapses over; edges through docs
     // this very batch drops are exactly the chain evidence a kept/-only
-    // re-scan could never recover
-    internalPairs
-      .select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .union(storePairs.select(
-        least(col("new_id"), col("__kept_id")).cast("long"),
-        greatest(col("new_id"), col("__kept_id")).cast("long")))
-      .toDF("id_a", "id_b").distinct()
+    // re-scan could never recover. `verified` is already distinct, and an
+    // in-batch (new–new) edge and a stored (new–old) edge name different
+    // id pairs unless an id is re-delivered under a new batch id — a
+    // duplicate edge the set-semantics readers absorb.
+    verified.select(least(col("id_a"), col("id_b")).as("id_a"),
+        greatest(col("id_a"), col("id_b")).as("id_b"))
       .write.mode("overwrite").parquet(s"$storePath/duppairs/batch=$batchId")
     // every internal staging frame's last consumer has now materialized —
-    // the finally frees their checkpoint blocks deterministically
+    // Checkpoints.staging frees their checkpoint blocks deterministically
     // (graft.Checkpoints.release; Dataset.unpersist no-ops on local
     // checkpoints), so a long-running stream holds ONE batch's staging at
     // a time instead of stacking every past batch's until a driver GC
@@ -361,7 +336,74 @@ object StreamingCuration {
     // too. `kept` is the returned frame (its own checkpoint, not
     // tracked) and stays live for the caller.
     kept
-    } finally st.releaseAll()
+    }
+  }
+
+  /** One micro-batch's verified near-dup pairs in ONE candidate-and-verify
+    * pass. `feats` is the batch as staged by [[curateBatch]] (`idCol`,
+    * `__bands` — [[Dedup.withBandSigs]] — and `__sh` —
+    * [[Dedup.shingleHashes64]]).
+    *
+    * Candidates: the batch's band rows and the stored `bands/` rows
+    * semi-joined on the batch's `(band, band_sig)` keys are grouped ONCE
+    * per bucket into the sorted batch ids `n` and the stored ids `o`.
+    * In-batch pairs are `cappedPairCombos(n, maxBucket)` — the batch
+    * path's capped enumeration; batch-vs-store pairs are every `n × o`
+    * (uncapped: a match against the stored index drops the batch doc, so
+    * no stored edge may be lost to a star collapse). Bucket contents are
+    * deduplicated before either expansion (round-15; identical `(n, o)`
+    * buckets enumerate identical pairs).
+    *
+    * Verify: one kind-tagged payload — the batch docs' staged shingle
+    * hashes and the matched `kept/` docs' — joined on `(id_b, stored)`,
+    * so an id present in both the batch and the store is verified against
+    * the right text on each side. Exact up to 64-bit shingle-hash
+    * collisions, like [[Dedup.nearDupPairs]].
+    *
+    * Returns `(id_a, id_b, stored)`, ids as long, staged: `stored = false`
+    * is an in-batch pair (`id_a < id_b`), `stored = true` pairs batch doc
+    * `id_a` with kept doc `id_b`. */
+  private[graft] def verifiedPairs(feats: DataFrame, idCol: String,
+      storedBands: DataFrame, storedKept: DataFrame, threshold: Double,
+      maxBucket: Int = Dedup.MaxBucket): DataFrame = {
+    val longId = col(idCol).cast("long")
+    val batchRows = feats.select(longId.as("id"),
+      posexplode(col("__bands")).as(Seq("band", "band_sig")))
+    // stored rows sharing a bucket with the batch: the only ones that can
+    // pair, so the growing index is never grouped whole
+    val storeRows = storedBands.join(
+      batchRows.select(col("band"), col("band_sig")),
+      Seq("band", "band_sig"), "left_semi")
+    val tag = (df: DataFrame, stored: Boolean) =>
+      df.select(col("band"), col("band_sig"), col("id"),
+        lit(stored).as("stored"))
+    val cands = tag(batchRows, false).union(tag(storeRows, true))
+      .groupBy(col("band"), col("band_sig"))
+      .agg(sort_array(collect_list(when(!col("stored"), col("id")))).as("n"),
+        sort_array(collect_set(when(col("stored"), col("id")))).as("o"))
+      .filter(size(col("n")) > 1 || size(col("o")) > 0)
+      .select(col("n"), col("o")).distinct()
+      .select(explode(concat(
+        transform(Dedup.cappedPairCombos(col("n"), maxBucket), p =>
+          struct(p.getField("id_a").as("id_a"), p.getField("id_b").as("id_b"),
+            lit(false).as("stored"))),
+        flatten(transform(col("n"), x => transform(col("o"), y =>
+          struct(x.as("id_a"), y.as("id_b"), lit(true).as("stored")))))))
+        .as("p"))
+      .select(col("p.id_a"), col("p.id_b"), col("p.stored")).distinct()
+    val payload = feats.select(longId.as("id"), lit(false).as("stored"),
+        col("__sh").as("sh"))
+      .union(storedKept.join(storeRows.select(col("id")), Seq("id"), "left_semi")
+        .select(col("id"), lit(true).as("stored"),
+          Dedup.shingleHashes64(col("text"), 3).as("sh")))
+    cands
+      .join(feats.select(longId.as("id_a"), col("__sh").as("sh_a")), "id_a")
+      .join(payload.select(col("id").as("id_b"), col("stored"),
+        col("sh").as("sh_b")), Seq("id_b", "stored"))
+      .filter(Dedup.jaccardHashedGE(col("sh_a"), col("sh_b"), threshold)
+        .isNotNull)
+      .select(col("id_a"), col("id_b"), col("stored"))
+      .staged
   }
 
   /** Union of every retraction tombstone recorded so far (one `id`
@@ -524,8 +566,7 @@ object StreamingCuration {
     // second copy and leave the first to ContextCleaner timing, the
     // accumulate-until-GC class this module closes elsewhere); track it
     // so the blocks are freed once both consumers below materialized
-    val st = new graft.Checkpoints.Staging
-    try {
+    graft.Checkpoints.staging { st =>
       val labels = st.track(Dedup.dupClusters(pairs))
       val keptClusters = labels.join(effectiveKept, Seq("id"), "left_semi")
       val reps = keptClusters.groupBy(col("cluster"))
@@ -538,7 +579,7 @@ object StreamingCuration {
       if (!losers.isEmpty) recordRetractions(spark, storePath, losers, upToBatch)
       if (compactPairs) foldDupPairs(spark, storePath, labels, upToBatch)
       losers
-    } finally st.releaseAll()
+    }
   }
 
   /** Fold every committed `batch=<id>` delta with `0 <= id < upToBatch`,

@@ -111,6 +111,46 @@ class CheckpointsSpec extends SparkSpec {
       !persistentIds(spark).contains(idB))
   }
 
+  test("releaseAll frees every frame past a failing release; staging keeps the body's exception") {
+    def multiLeaf(): DataFrame = Checkpoints.stage(spark.range(0, 100).toDF("id"))
+      .join(Checkpoints.stage(spark.range(0, 100).toDF("id")), "id")
+    val st = new Checkpoints.Staging
+    st.track(multiLeaf())
+    val a = st.stage(spark.range(0, 1000).toDF("id"))
+    st.track(multiLeaf())
+    val b = st.stage(spark.range(0, 1000).toDF("id").withColumn("x", col("id")))
+    val e = intercept[IllegalArgumentException] { st.releaseAll() }
+    assert(e.getMessage.contains("LogicalRDD leaves"))
+    assert(e.getSuppressed.toSeq.map(_.getClass) ===
+      Seq(classOf[IllegalArgumentException]),
+      "the second failing release rides the first as suppressed")
+    val ids = (leafRddIds(a) ++ leafRddIds(b)).toSet
+    assert((persistentIds(spark) intersect ids).isEmpty,
+      "frames tracked after a failing release must still be released")
+
+    // a failing body: its exception propagates, the release failure rides
+    // it as suppressed, and every releasable frame is freed
+    var c: DataFrame = null
+    val boom = intercept[RuntimeException] {
+      Checkpoints.staging { st2 =>
+        st2.track(multiLeaf())
+        c = st2.stage(spark.range(0, 1000).toDF("id"))
+        throw new RuntimeException("boom")
+      }
+    }
+    assert(boom.getMessage === "boom")
+    assert(boom.getSuppressed.toSeq.map(_.getClass) ===
+      Seq(classOf[IllegalArgumentException]))
+    assert(!persistentIds(spark).contains(leafRddIds(c).head))
+    // a clean body returns its value and releases what it tracked
+    var d: DataFrame = null
+    assert(Checkpoints.staging { st3 =>
+      d = st3.stage(spark.range(0, 10).toDF("id"))
+      d.count()
+    } === 10L)
+    assert(!persistentIds(spark).contains(leafRddIds(d).head))
+  }
+
   test("reliable flag routes stage to recoverable checkpoint files; release no-ops there") {
     val s2 = spark.newSession()
     s2.sparkContext.setCheckpointDir(tmpPath("reliable_ckpt"))

@@ -528,6 +528,63 @@ class PipelineSpec extends SparkSpec {
     assert(ok.values.toSet === Set(1L) && ok.size === 7)
   }
 
+  /** Declarative twin of [[Dedup.dupClusters]]: identity-seeded min-label
+    * propagation — every id starts labeled by itself, each round takes the
+    * min over its own and its neighbors' labels, and the loop stops at the
+    * first round that changes nothing. None when `maxRounds` rounds do not
+    * reach that round (where dupClusters throws). */
+  private def identitySeededClusters(pairs: Seq[(Long, Long)],
+      maxRounds: Int): Option[Map[Long, Long]] = {
+    val nbrs = (pairs ++ pairs.map(_.swap)).groupBy(_._1)
+      .map { case (id, es) => id -> es.map(_._2) }
+    var labels = nbrs.map { case (id, _) => id -> id }
+    var round = 0
+    var converged = false
+    while (round < maxRounds && !converged) {
+      val next = labels.map { case (id, l) => id -> (l +: nbrs(id).map(labels)).min }
+      converged = next == labels
+      labels = next
+      round += 1
+    }
+    if (converged) Some(labels) else None
+  }
+
+  test("edge-seeded dupClusters equals the identity-seeded propagation: labels, maxRounds, fewer jobs") {
+    import spark.implicits._
+    def clusters(pairs: Seq[(Long, Long)], maxRounds: Int): Option[Map[Long, Long]] =
+      try Some(Dedup.dupClusters(pairs.toDF("id_a", "id_b"), maxRounds = maxRounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      catch { case e: IllegalStateException
+        if e.getMessage.contains("did not converge") => None }
+    val clique = for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)
+    val chain = Seq((20L, 21L), (21L, 22L)) // A~B, B~C, A≁C
+    val star = (31L to 36L).map(leaf => (37L, leaf)) // center above its leaves
+    val selfPair = Seq((40L, 40L))
+    val shapes = Seq("clique" -> clique, "chain" -> chain, "star" -> star,
+      "self-pair" -> selfPair, "empty" -> Seq.empty[(Long, Long)],
+      "all" -> (clique ++ chain ++ star ++ selfPair))
+    for ((name, pairs) <- shapes) {
+      val want = identitySeededClusters(pairs, 20)
+      assert(want.isDefined)
+      assert(clusters(pairs, 20) === want, s"$name labels")
+    }
+    // the maxRounds contract: a path of 8 nodes converges for exactly the
+    // round budgets the identity-seeded loop converges for
+    val path = (1L to 7L).map(i => (i, i + 1))
+    for (maxRounds <- 0 to 9)
+      assert(clusters(path, maxRounds) === identitySeededClusters(path, maxRounds),
+        s"path with maxRounds=$maxRounds")
+    assert(identitySeededClusters(path, 3).isEmpty,
+      "precondition: the path is longer than 3 rounds can collapse")
+    // the edge seed drops the identity-label staging and round 0's join,
+    // and the edge cache dedups after its repartition: 13 jobs per call
+    // on a clique plus a 4-node chain, where the identity seed ran 18
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (11L, 12L),
+      (12L, 13L)).toDF("id_a", "id_b")
+    val (_, count) = jobsDuring(Dedup.dupClusters(pairs).collect())
+    assert(count.jobs < 18, s"dupClusters ran ${count.jobs} jobs")
+  }
+
   test("codegen simhashSketch is bit-identical to the expression-form simhash64") {
     val viaExpr = docs.select(col("doc_id"), Dedup.simhash64(col("text")).as("sk"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -462,6 +462,122 @@ class StreamingSpec extends SparkSpec {
     assert(!keptIds.contains(15L))
   }
 
+  test("streaming curation: a plain micro-batch stays within its Spark job budget") {
+    import spark.implicits._
+    import graft.streaming.StreamingCuration
+    // the fixture of the N-batch fold test above, curated batch by batch
+    val base = (1 to 19).map(i => s"word$i").mkString(" ")
+    val batches = Seq(
+      Seq((1L, "the quick brown fox jumps over the lazy dog and then naps", "web"),
+        (2L, "exact duplicate content that appears in every single batch here", "web"),
+        (3L, s"$base alpha", "web"),
+        (4L, "an entirely unrelated document about spark physical plans today", "books")),
+      Seq((11L, "another unique document discussing columnar storage layouts now", "web"),
+        (12L, "exact duplicate content that appears in every single batch here", "books"),
+        (13L, s"$base beta", "web"),
+        (15L, "the secret benchmark answer is forty two obviously", "web")),
+      Seq((21L, "final unique document covering adaptive query execution things", "books"),
+        (22L, "exact duplicate content that appears in every single batch here", "web"),
+        (23L, s"$base gamma", "web"),
+        (25L, "!!! ??? !!! ??? !!!", "web")))
+      .map(_.toDF("doc_id", "text", "source"))
+    val eval = Seq((100L, "the secret benchmark answer is forty two obviously"))
+      .toDF("doc_id", "text")
+    val store = tmpPath("streamcur_budget_store")
+    val out = tmpPath("streamcur_budget_out")
+    val cfg = StreamingCuration.Config(minQuality = 0.2)
+    def curate(b: Int) = StreamingCuration.curateBatch(batches(b), store,
+      Some(eval), "doc_id", "text", cfg, batchId = b.toLong, outPath = Some(out))
+    curate(0)
+    curate(1)
+    val (kept, count) = jobsDuring(curate(2))
+    assert(kept.select("doc_id").collect().map(_.getLong(0)).toSet === Set(21L))
+    // one feature staging, one candidate-and-verify pass, an edge-seeded
+    // dupClusters and one broadcast loser anti-join: 25 jobs here, where
+    // the separate bands/shingles stagings, the two pair passes, the
+    // identity-seeded clusters and the two anti-joins ran 37
+    assert(count.jobs <= 28, s"the third batch ran ${count.jobs} jobs")
+  }
+
+  test("fused candidate-and-verify pass equals the two-pass in-batch and batch-vs-store formulation") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    import graft.streaming.StreamingCuration
+    // 40-token documents: one swapped token changes 3 of 38 trigram
+    // shingles, so one swap apart is J = 35/41 ≈ 0.854 ≥ 0.8 and two swaps
+    // apart J = 32/44 ≈ 0.727 < 0.8
+    def doc(pre: String, swaps: (Int, String)*): String = {
+      val w = (0 until 40).map(i => s"$pre$i").toArray
+      swaps.foreach { case (i, t) => w(i) = t }
+      w.mkString(" ")
+    }
+    val cap = 3
+    val batch = (
+      // five pairwise near-dups: buckets of up to five ids, over the cap
+      (1L to 5L).map(i => (i, doc("a", 35 -> s"v$i"))) ++
+      // an in-batch chain: 20~21, 21~22, 20≁22
+      Seq((20L, doc("c")), (21L, doc("c", 10 -> "x")),
+        (22L, doc("c", 10 -> "x", 25 -> "y"))) ++
+      // id 30 is also a stored doc (different text, one swap apart); 29
+      // is near the stored 30 but two swaps from the batch 30, so only
+      // the kind tag decides which text verifies against it
+      Seq((29L, doc("s", 9 -> "q")), (30L, doc("s", 5 -> "new")),
+        (31L, doc("s", 7 -> "z")),
+        // a batch doc near only a stored doc
+        (41L, doc("t", 3 -> "w"))) ++
+      Seq((50L, "an unrelated short document"), (51L, "")))
+      .toDF("doc_id", "text")
+    val stored = Seq((30L, doc("s")), (40L, doc("t")),
+      (60L, doc("u"))).toDF("id", "text")
+    val storedBands = Dedup.lshBands(stored, "id", "text")
+    val batchBands = Dedup.lshBands(batch, "doc_id", "text")
+    val maxBucket = batchBands.groupBy("band", "band_sig").count()
+      .agg(max("count")).head().getLong(0)
+    assert(maxBucket > cap, "precondition: an in-batch bucket over the cap")
+
+    val feats = Dedup.withBandSigs(batch, "text", "__bands")
+      .withColumn("__sh", Dedup.shingleHashes64(col("text"), 3))
+    val fused = StreamingCuration.verifiedPairs(feats, "doc_id", storedBands,
+      stored, 0.8, maxBucket = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+
+    // the twin: capped in-batch combos and the uncapped batch ⋈ store join,
+    // each verified on its own
+    val sh = Dedup.shingleHashes64(col("text"), 3)
+    val batchSh = batch.select(col("doc_id").as("id"), sh.as("sh"))
+    val keptSh = stored.select(col("id"), sh.as("sh"))
+    def verify(cands: org.apache.spark.sql.DataFrame,
+        a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      cands
+        .join(a.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+        .join(b.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+        .filter(Dedup.jaccardHashedGE(col("sh_a"), col("sh_b"), 0.8).isNotNull)
+        .select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val internal = verify(batchBands
+      .groupBy(col("band"), col("band_sig"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+      .filter(size(col("ids")) > 1)
+      .select(explode(Dedup.cappedPairCombos(col("ids"), cap)).as("p"))
+      .select(col("p.id_a"), col("p.id_b")).distinct(), batchSh, batchSh)
+    val store = verify(batchBands
+      .join(storedBands.select(col("id").as("id_b"), col("band"),
+        col("band_sig")), Seq("band", "band_sig"))
+      .select(col("doc_id").as("id_a"), col("id_b")).distinct(),
+      batchSh, keptSh)
+
+    assert(fused.filterNot(_._3).map(p => (p._1, p._2)) === internal)
+    assert(fused.filter(_._3).map(p => (p._1, p._2)) === store)
+    // the fixture's shapes all show up
+    assert(internal.contains((20L, 21L)) && internal.contains((21L, 22L)) &&
+      !internal.contains((20L, 22L)), "in-batch chain")
+    assert(store.contains((30L, 30L)) && store.contains((41L, 40L)),
+      "batch ids matched against the store, including one in both")
+    assert(store.contains((29L, 30L)) && !internal.contains((29L, 30L)),
+      "an id in both the batch and the store verifies with each side's text")
+  }
+
   test("streaming curation with span dedup: fold equals the one-shot batch pipeline") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
