@@ -187,8 +187,8 @@ object Dedup {
     * with no shingles return NULL here exactly where explode emitted no
     * row. Band sigs hash the same "m0,m1,.." strings as before. */
   def lshBands(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
+      shingleN: Int = LshShingleN, numHashes: Int = LshHashes,
+      bands: Int = LshBands, seed: Long = LshSeed): DataFrame = {
     val sig = df.select(col(idCol),
         minhashSig(col(textCol), shingleN, numHashes, seed).as("mh"))
       .filter(col("mh").isNotNull)
@@ -219,17 +219,25 @@ object Dedup {
     }: _*)
   }
 
-  /** `df` plus `outCol`: the document's [[lshBands]] band signatures as
-    * one array (element `b` is band `b`'s `band_sig`), NULL for a
-    * document with no shingles — where [[lshBands]] emits no row. Lets a
-    * caller stage the signatures beside the document instead of as
-    * corpus × bands rows. */
-  def withBandSigs(df: DataFrame, textCol: String, outCol: String,
-      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      seed: Long = 42L): DataFrame =
-    df.withColumn("__mh", minhashSig(col(textCol), shingleN, numHashes, seed))
+  /** [[lshBands]]' default geometry: shingle size, signature length,
+    * band count and hash seed. [[withBandSigs]] has no other, so band
+    * rows built from its arrays always match default [[lshBands]] rows. */
+  private[graft] val LshShingleN = 3
+  private[graft] val LshHashes = 64
+  private[graft] val LshBands = 16
+  private[graft] val LshSeed = 42L
+
+  /** `df` plus `outCol`: the document's default-geometry [[lshBands]]
+    * band signatures as one array (element `b` is band `b`'s
+    * `band_sig`), NULL for a document with no shingles — where
+    * [[lshBands]] emits no row. Lets a caller stage the signatures beside
+    * the document instead of as corpus × bands rows. */
+  private[graft] def withBandSigs(df: DataFrame, textCol: String,
+      outCol: String): DataFrame =
+    df.withColumn("__mh", minhashSig(col(textCol), LshShingleN, LshHashes,
+        LshSeed))
       .withColumn(outCol, when(col("__mh").isNotNull,
-        bandSigArray(col("__mh"), numHashes, bands)))
+        bandSigArray(col("__mh"), LshHashes, LshBands)))
       .drop("__mh")
 
   /** All ordered pairs (a<b) from a sorted id array, as an expression. */

@@ -68,8 +68,10 @@ import graft.operators.{Decontam, Dedup, Mixing, TextAnalysis}
   * array and hashed shingles computed in the same stage; one bucket
   * shuffle chain, where the batch's band rows meet the stored `bands/`
   * rows semi-joined on the batch's (band, band_sig) keys, so the stored
-  * side is a growing but bucketable index that is never grouped whole;
-  * one verify over the batch docs and the matched `kept/` docs; and one
+  * side is a growing but bucketable index that is never grouped whole,
+  * and its batch-vs-store pairs stream out of chained explodes, so a hot
+  * stored bucket never becomes one in-memory row of pairs; one verify
+  * over the batch docs and the matched `kept/` docs; and one
   * anti-join of the losers. The state deltas are projections of staged
   * frames, and nothing unbounded reaches the driver. After thousands of
   * batches the one-delta-dir-per-batch layout decays into the classic
@@ -320,10 +322,13 @@ object StreamingCuration {
     // the verified near-dup EDGE set, normalized (least, greatest) — the
     // pair graph [[reconcileKept]] re-collapses over; edges through docs
     // this very batch drops are exactly the chain evidence a kept/-only
-    // re-scan could never recover. `verified` is already distinct, and an
-    // in-batch (new–new) edge and a stored (new–old) edge name different
-    // id pairs unless an id is re-delivered under a new batch id — a
-    // duplicate edge the set-semantics readers absorb.
+    // re-scan could never recover. `verified` is distinct only on
+    // (id_a, id_b, stored): once normalized, an in-batch edge and a stored
+    // edge collapse to one row when an id is both in the batch and in the
+    // store, and a stored id kept twice with different texts repeats its
+    // edges through the payload join. So duppairs/ may hold duplicate
+    // edges, and its readers (dupClusters' edge distinct, compactState's
+    // distinct) must keep set semantics.
     verified.select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .write.mode("overwrite").parquet(s"$storePath/duppairs/batch=$batchId")
@@ -347,12 +352,12 @@ object StreamingCuration {
     * Candidates: the batch's band rows and the stored `bands/` rows
     * semi-joined on the batch's `(band, band_sig)` keys are grouped ONCE
     * per bucket into the sorted batch ids `n` and the stored ids `o`.
-    * In-batch pairs are `cappedPairCombos(n, maxBucket)` — the batch
-    * path's capped enumeration; batch-vs-store pairs are every `n × o`
-    * (uncapped: a match against the stored index drops the batch doc, so
-    * no stored edge may be lost to a star collapse). Bucket contents are
-    * deduplicated before either expansion (round-15; identical `(n, o)`
-    * buckets enumerate identical pairs).
+    * In-batch pairs are `cappedPairCombos(n, maxBucket)` over the
+    * distinct bucket contents — the batch path's capped enumeration;
+    * batch-vs-store pairs are every `n × o`, from two chained explodes so
+    * no row holds an `n × o` array (uncapped: a match against the stored
+    * index drops the batch doc, so no stored edge may be lost to a star
+    * collapse).
     *
     * Verify: one kind-tagged payload — the batch docs' staged shingle
     * hashes and the matched `kept/` docs' — joined on `(id_b, stored)`,
@@ -377,20 +382,25 @@ object StreamingCuration {
     val tag = (df: DataFrame, stored: Boolean) =>
       df.select(col("band"), col("band_sig"), col("id"),
         lit(stored).as("stored"))
-    val cands = tag(batchRows, false).union(tag(storeRows, true))
+    val buckets = tag(batchRows, false).union(tag(storeRows, true))
       .groupBy(col("band"), col("band_sig"))
       .agg(sort_array(collect_list(when(!col("stored"), col("id")))).as("n"),
         sort_array(collect_set(when(col("stored"), col("id")))).as("o"))
-      .filter(size(col("n")) > 1 || size(col("o")) > 0)
+    // identical bucket contents enumerate identical pairs, so dedup them
+    // first (round-15). Deduping on (n, o), not on n alone, keeps `o` in
+    // this side's bucket aggregate, so both sides read ONE bucket shuffle
+    val inBatch = buckets.filter(size(col("n")) > 1)
       .select(col("n"), col("o")).distinct()
-      .select(explode(concat(
-        transform(Dedup.cappedPairCombos(col("n"), maxBucket), p =>
-          struct(p.getField("id_a").as("id_a"), p.getField("id_b").as("id_b"),
-            lit(false).as("stored"))),
-        flatten(transform(col("n"), x => transform(col("o"), y =>
-          struct(x.as("id_a"), y.as("id_b"), lit(true).as("stored")))))))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.stored")).distinct()
+      .select(explode(Dedup.cappedPairCombos(col("n"), maxBucket)).as("p"))
+      .select(col("p.id_a"), col("p.id_b"), lit(false).as("stored"))
+    // n × o through two chained explodes, so no row holds an n × o array:
+    // the stored side of a hot bucket is bounded only by how many kept
+    // docs share it. Its repeats across bands meet the final distinct
+    // (map-side first), so it adds no exchange
+    val vsStore = buckets.select(explode(col("n")).as("id_a"), col("o"))
+      .select(col("id_a"), explode(col("o")).as("id_b"),
+        lit(true).as("stored"))
+    val cands = inBatch.union(vsStore).distinct()
     val payload = feats.select(longId.as("id"), lit(false).as("stored"),
         col("__sh").as("sh"))
       .union(storedKept.join(storeRows.select(col("id")), Seq("id"), "left_semi")

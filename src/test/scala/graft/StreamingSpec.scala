@@ -493,7 +493,7 @@ class StreamingSpec extends SparkSpec {
     val (kept, count) = jobsDuring(curate(2))
     assert(kept.select("doc_id").collect().map(_.getLong(0)).toSet === Set(21L))
     // one feature staging, one candidate-and-verify pass, an edge-seeded
-    // dupClusters and one broadcast loser anti-join: 25 jobs here, where
+    // dupClusters and one broadcast loser anti-join: 26 jobs here, where
     // the separate bands/shingles stagings, the two pair passes, the
     // identity-seeded clusters and the two anti-joins ran 37
     assert(count.jobs <= 28, s"the third batch ran ${count.jobs} jobs")
