@@ -17,10 +17,11 @@ import org.apache.spark.sql.types._
   * evaluate `java.math.BigDecimal.valueOf(x)` per row, which calls
   * `Double.toString` (shortest-decimal rendering — digit loop + char array
   * + String + BigDecimal allocations); the round-14 AggProbe measured the
-  * pair at +388 ms per 600 k rows on q20's aggregate. This expression
-  * computes the same unscaled long with ~10 flops per row and constructs
-  * the result with `Decimal(unscaled, p, s)` — a long-backed Decimal, no
-  * BigDecimal, no string — falling back to the exact BigDecimal form only
+  * pair at +388 ms per 600 k rows on q20's aggregate (verdict recorded in
+  * commit `c2d76fb`). This expression computes the same unscaled long
+  * with ~10 flops per row and constructs the result with
+  * `Decimal(unscaled, p, s)` — a long-backed Decimal, no BigDecimal, no
+  * string — falling back to the exact BigDecimal form only
   * in the provably ambiguous cases.
   *
   * BIT-IDENTITY ARGUMENT (FastDecimalSpec property-locks it, boundary

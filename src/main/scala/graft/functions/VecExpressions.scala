@@ -41,21 +41,9 @@ case class FloatVecDot(left: Expression, right: Expression)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    val fx = isFloat(left); val fy = isFloat(right)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (fx) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (fy) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xv * yv
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatVecDot.dot(a.asInstanceOf[ArrayData], isFloat(left),
+      b.asInstanceOf[ArrayData], isFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -81,6 +69,27 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "vec_dot"
+}
+
+object FloatVecDot {
+
+  /** The per-row math of [[FloatVecDot]]: a left fold in index order over
+    * the common prefix, `xFloat`/`yFloat` saying whether each side holds
+    * floats (widened to double) or doubles. `nullSafeEval` and code that
+    * scores vectors outside Catalyst call this; VecKernelSpec pins it to
+    * the generated loop. */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      acc += xv * yv
+      i += 1
+    }
+    acc
+  }
 }
 
 /** Fused b-bit random-hyperplane signature: bit p = [dot(v, plane_p) >= 0],
@@ -254,30 +263,8 @@ case class Int8Code(child: Expression)
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val fv = isFloat
-    val n = v.numElements()
-    var m = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (fv) v.getFloat(i).toDouble else v.getDouble(i)
-      val ax = math.abs(x)
-      if (ax > m) m = ax
-      i += 1
-    }
-    val out = new Array[Byte](n)
-    if (m > 0.0) {
-      val scale = m / 127.0
-      i = 0
-      while (i < n) {
-        val x = if (fv) v.getFloat(i).toDouble else v.getDouble(i)
-        out(i) = math.floor(x / scale + 0.5).toInt.toByte
-        i += 1
-      }
-    }
-    out
-  }
+  override def nullSafeEval(input: Any): Any =
+    Int8Code.code(input.asInstanceOf[ArrayData], isFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
@@ -309,6 +296,34 @@ case class Int8Code(child: Expression)
   override def prettyName: String = "int8_code"
 }
 
+object Int8Code {
+
+  /** The per-row math of [[Int8Code]]: the int8 code of `v`, whose
+    * elements are floats when `vFloat`, else doubles. */
+  def code(v: ArrayData, vFloat: Boolean): Array[Byte] = {
+    val n = v.numElements()
+    var m = 0.0
+    var i = 0
+    while (i < n) {
+      val x = if (vFloat) v.getFloat(i).toDouble else v.getDouble(i)
+      val ax = math.abs(x)
+      if (ax > m) m = ax
+      i += 1
+    }
+    val out = new Array[Byte](n)
+    if (m > 0.0) {
+      val scale = m / 127.0
+      i = 0
+      while (i < n) {
+        val x = if (vFloat) v.getFloat(i).toDouble else v.getDouble(i)
+        out(i) = math.floor(x / scale + 0.5).toInt.toByte
+        i += 1
+      }
+    }
+    out
+  }
+}
+
 /** Cosine similarity of two [[Int8Code]] byte vectors: integer dot and
   * norms over the signed codes (exact 32/64-bit integer arithmetic — the
   * per-vector quantization scales cancel), one double division at the
@@ -327,24 +342,8 @@ case class Int8Cosine(left: Expression, right: Expression)
         s"int8_cosine expects (binary, binary), got ($l, $r)")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    // a length mismatch is a dimension bug upstream — fail loudly rather
-    // than score a truncated prefix that looks like a plausible cosine
-    if (x.length != y.length) throw new IllegalArgumentException(
-      s"int8_cosine: code length mismatch ${x.length} vs ${y.length}")
-    val n = x.length
-    var dot = 0L; var na = 0L; var nb = 0L
-    var i = 0
-    while (i < n) {
-      val xi = x(i).toLong; val yi = y(i).toLong
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    val denom = math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)
-    if (denom > 0.0) dot.toDouble / denom else 0.0
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Int8Cosine.cosine(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -373,6 +372,27 @@ case class Int8Cosine(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "int8_cosine"
+}
+
+object Int8Cosine {
+
+  /** The per-row math of [[Int8Cosine]]. */
+  def cosine(x: Array[Byte], y: Array[Byte]): Double = {
+    // a length mismatch is a dimension bug upstream — fail loudly rather
+    // than score a truncated prefix that looks like a plausible cosine
+    if (x.length != y.length) throw new IllegalArgumentException(
+      s"int8_cosine: code length mismatch ${x.length} vs ${y.length}")
+    val n = x.length
+    var dot = 0L; var na = 0L; var nb = 0L
+    var i = 0
+    while (i < n) {
+      val xi = x(i).toLong; val yi = y(i).toLong
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    val denom = math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)
+    if (denom > 0.0) dot.toDouble / denom else 0.0
+  }
 }
 
 /** Indices of the `nProbe` centroids with the highest dot product against
@@ -405,41 +425,9 @@ case class TopCentroids(child: Expression, centroids: Array[Double],
 
   private val dim: Int = centroids.length / k
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val fv = isFloat
-    val scores = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      var acc = 0.0
-      val base = c * dim
-      val n = math.min(v.numElements(), dim)
-      var i = 0
-      while (i < n) {
-        val x = if (fv) v.getFloat(i).toDouble else v.getDouble(i)
-        acc += x * centroids(base + i)
-        i += 1
-      }
-      scores(c) = acc
-      c += 1
-    }
-    val out = new Array[Int](nProbe)
-    val taken = new Array[Boolean](k)
-    var p = 0
-    while (p < nProbe) {
-      var best = -1
-      var bestScore = Double.NegativeInfinity
-      var j = 0
-      while (j < k) {
-        if (!taken(j) && scores(j) > bestScore) { best = j; bestScore = scores(j) }
-        j += 1
-      }
-      taken(best) = true
-      out(p) = best
-      p += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(TopCentroids.top(
+      input.asInstanceOf[ArrayData], isFloat, centroids, k, nProbe))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cRef = ctx.addReferenceObj("centroids", centroids, "double[]")
@@ -482,4 +470,46 @@ case class TopCentroids(child: Expression, centroids: Array[Double],
     copy(child = newChild)
 
   override def prettyName: String = "top_centroids"
+}
+
+object TopCentroids {
+
+  /** The per-row math of [[TopCentroids]]: the `nProbe` nearest of the `k`
+    * centroids in the flat row-major `centroids` matrix to `v` (floats
+    * when `vFloat`, else doubles), nearest first. */
+  def top(v: ArrayData, vFloat: Boolean, centroids: Array[Double], k: Int,
+      nProbe: Int): Array[Int] = {
+    val dim = centroids.length / k
+    val scores = new Array[Double](k)
+    var c = 0
+    while (c < k) {
+      var acc = 0.0
+      val base = c * dim
+      val n = math.min(v.numElements(), dim)
+      var i = 0
+      while (i < n) {
+        val x = if (vFloat) v.getFloat(i).toDouble else v.getDouble(i)
+        acc += x * centroids(base + i)
+        i += 1
+      }
+      scores(c) = acc
+      c += 1
+    }
+    val out = new Array[Int](nProbe)
+    val taken = new Array[Boolean](k)
+    var p = 0
+    while (p < nProbe) {
+      var best = -1
+      var bestScore = Double.NegativeInfinity
+      var j = 0
+      while (j < k) {
+        if (!taken(j) && scores(j) > bestScore) { best = j; bestScore = scores(j) }
+        j += 1
+      }
+      taken(best) = true
+      out(p) = best
+      p += 1
+    }
+    out
+  }
 }

@@ -44,6 +44,18 @@ object VectorOps {
     when(denom > 0, dot(a, b) / denom).otherwise(lit(0.0))
   }
 
+  /** [[cosine]] for code that scores outside Catalyst, from the parts
+    * the expression computes: `dot` = a·b and `normA`, `normB` =
+    * `sqrt(x·x)` of each side, every product by [[FloatVecDot.dot]]. The
+    * `denom > 0` guard compares as Spark SQL does, where NaN is above
+    * every number, so a NaN denominator scores NaN, not 0. */
+  def cosineOf(dot: Double, normA: Double, normB: Double): Double = {
+    val denom = normA * normB
+    if (org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(denom, 0.0) > 0) dot / denom
+    else 0.0
+  }
+
   /** Squared L2 distance. */
   def l2Sq(a: Column, b: Column): Column =
     foldSum(zip_with(a, b, (x, y) => {

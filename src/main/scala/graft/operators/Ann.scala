@@ -1408,102 +1408,262 @@ object Ann {
   /** Load the centroid matrix of a persisted index as the flat row-major
     * array [[graft.functions.TopCentroids]] consumes:
     * (flat, numCentroids, dim). Bounded driver state by construction.
-    * Read with the schema [[writeCentroids]] always writes, so the load is
-    * one small collect job and no schema-inference job. */
+    * The generation's parquet file is read on the driver with
+    * parquet-hadoop's record reader (as [[readLists]] reads its footer),
+    * so the load runs no Spark job. Nothing is cached across calls:
+    * [[writeCentroids]] overwrites a `gen=` directory in place. */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String, meta: IndexMeta): (Array[Double], Int, Int) = {
-    val centRows = spark.read.schema("cid INT, vec ARRAY<DOUBLE>")
-      .parquet(s"$path/centroids/gen=${meta.centGen}").collect()
-    val numCentroids = centRows.length
-    val dim = centRows.head.getSeq[Double](1).length
-    val flat = new Array[Double](numCentroids * dim)
-    centRows.foreach { r =>
-      val v = r.getSeq[Double](1)
-      var i = 0
-      while (i < dim) { flat(r.getInt(0) * dim + i) = v(i); i += 1 }
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(s"$path/centroids/gen=${meta.centGen}")
+    // the (cid, vec) rows writeCentroids writes; the list is read by
+    // position (its repeated group, then the element), which covers both
+    // parquet LIST layouts
+    val centRows = listDataFiles(dir.getFileSystem(conf), dir).flatMap { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), f.getPath)
+        .withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        val vec = g.getGroup("vec", 0)
+        g.getInteger("cid", 0) -> Array.tabulate(
+          vec.getFieldRepetitionCount(0))(i => vec.getGroup(0, i).getDouble(0, 0))
+      }.toVector
+      finally reader.close()
     }
+    val numCentroids = centRows.length
+    val dim = centRows.head._2.length
+    val flat = new Array[Double](numCentroids * dim)
+    centRows.foreach { case (c, v) => System.arraycopy(v, 0, flat, c * dim, dim) }
     (flat, numCentroids, dim)
   }
 
-  /** Probe routing, the ONE place probes map to inverted lists: each probe
-    * row (projected to `carry`) is exploded to its `nProbe` nearest
-    * centroids as column `cid` and collected to the driver once — the
-    * probe set is small by contract. Returns those rows as a local frame
-    * (the search's broadcast side, no second [[graft.functions.TopCentroids]]
-    * pass) and the sorted set of probed cids (no distinct job). */
-  private def routeProbes(probes: DataFrame, vecCol: String,
-      flat: Array[Double], numCentroids: Int, nProbe: Int,
-      carry: Column*): (DataFrame, Seq[Int]) = {
-    import org.apache.spark.sql.graftshim.ColumnShim
+  /** One probe row routed to its lists: `id` (null when the row's id is
+    * null), the vector, and its `nProbe` nearest centroid ids. */
+  private final case class RoutedProbe(id: java.lang.Long,
+      vec: org.apache.spark.sql.catalyst.util.ArrayData, cids: Array[Int])
+
+  /** Probe routing, the ONE place probes map to inverted lists: the
+    * projection `(id, vecCol)` is collected to the driver once — the probe
+    * set is small by contract; a local frame collects without a job, a
+    * distributed one in one — and each row is routed there by
+    * [[graft.functions.TopCentroids.top]], the function the expression
+    * evaluates. A row with a null vector routes nowhere, as the
+    * expression's explode drops it. Returns the routed rows and whether
+    * the vectors hold floats (else doubles). */
+  private def routeProbes(probes: DataFrame, id: Column, vecCol: String,
+      flat: Array[Double], numCentroids: Int,
+      nProbe: Int): (Seq[RoutedProbe], Boolean) = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
     import graft.functions.TopCentroids
-    val routed = probes.select(carry :+ explode(ColumnShim.column(TopCentroids(
-      ColumnShim.expression(col(vecCol)), flat, numCentroids, nProbe)))
-      .as("cid"): _*)
-    val rows = routed.collect()
-    val cids = rows.iterator.map(_.getInt(carry.size)).toSeq.distinct.sorted
-    (probes.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      routed.schema), cids)
+    require(nProbe >= 1 && nProbe <= numCentroids,
+      s"k=$numCentroids nProbe=$nProbe")
+    val vFloat = probes.schema(vecCol).dataType match {
+      case ArrayType(FloatType, _) => true
+      case ArrayType(DoubleType, _) => false
+      case other => throw new IllegalArgumentException(
+        s"top_centroids expects array<float|double>, got $other")
+    }
+    val rows = probes.select(id, col(vecCol)).collect()
+    (rows.iterator.filterNot(_.isNullAt(1)).map { r =>
+      val v =
+        if (vFloat) UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)
+        else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray)
+      RoutedProbe(if (r.isNullAt(0)) null else r.getLong(0), v,
+        TopCentroids.top(v, vFloat, flat, numCentroids, nProbe))
+    }.toVector, vFloat)
   }
 
   /** Number of distinct inverted lists a probe set would open — the
     * pruning diagnostic q167 gates (`probed < materialized lists`).
-    * Same routing as [[searchIvfIndex]]: one centroid collect plus one
-    * probe collect. */
+    * Same routing as [[searchIvfIndex]]; on a local probe frame it runs
+    * no Spark job. */
   def probedCidCount(spark: org.apache.spark.sql.SparkSession, path: String,
       probes: DataFrame, idCol: String, vecCol: String, nProbe: Int): Long = {
     val (flat, numCentroids, _) =
       loadCentroids(spark, path, readManifest(spark, path))
-    routeProbes(probes, vecCol, flat, numCentroids, nProbe)._2.size.toLong
+    routeProbes(probes, lit(null).cast("long"), vecCol, flat, numCentroids,
+      nProbe)._1.flatMap(_.cids).distinct.size.toLong
   }
 
-  /** Search a [[buildIvfIndex]] index: probes pick their `nProbe` nearest
-    * centroids, the corpus read opens ONLY those lists' live generation
-    * directories (path-selection pruning through the commit manifest —
-    * unprobed lists are never even listed), candidates score exact
-    * cosine, ranking keeps top k.
-    *
-    * Jobs per search: one collect of the centroids (known schema, no
-    * inference job), one collect of the routed probes ([[routeProbes]]:
-    * it yields both the probed cid set and the broadcast side), then the
-    * returned frame's own action — the broadcast of the local probe rows,
-    * the scan of the probed lists and the ranking. The probed lists'
-    * directories are listed by the driver ([[readLists]]), so no listing
-    * or schema-inference job runs however many lists are probed. */
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      probes: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 8): DataFrame = {
-    requireIntegralId(probes, idCol, "searchIvfIndex")
+  /** A probe as the in-scan scorer reads it, in the stored codec: the
+    * vector with its norm `sqrt(vec·vec)` (float codec), or its int8 code. */
+  private[graft] final case class ScoringProbe(queryId: Long,
+      vec: org.apache.spark.sql.catalyst.util.ArrayData, norm: Double,
+      code: Array[Byte])
+
+  /** `vec` (floats when `vFloat`, else doubles) as a probe of an index
+    * in the int8 or float codec, scored like [[ivfTopKInt8]]'s
+    * `int8Code(vec)` or [[ivfTopK]]'s `vec`. */
+  private[graft] def scoringProbe(queryId: Long,
+      vec: org.apache.spark.sql.catalyst.util.ArrayData, vFloat: Boolean,
+      int8: Boolean): ScoringProbe = {
+    import graft.functions.{FloatVecDot, Int8Code}
+    if (int8) ScoringProbe(queryId, null, 0.0, Int8Code.code(vec, vFloat))
+    else ScoringProbe(queryId, vec,
+      math.sqrt(FloatVecDot.dot(vec, vFloat, vec, vFloat)), null)
+  }
+
+  /** What one search scores with: the probes grouped by the live list
+    * each was routed to, and the scan of exactly those lists (`None` when
+    * no probe reaches a live list). [[searchIvfIndex]] scans `lists`
+    * itself, so the specs read its files to pin path-level pruning. */
+  private[graft] final case class SearchScan(
+      probes: Map[Int, Array[ScoringProbe]], lists: Option[DataFrame],
+      int8: Boolean, probeFloat: Boolean)
+
+  private[graft] def searchScan(spark: org.apache.spark.sql.SparkSession,
+      path: String, probes: DataFrame, idCol: String, vecCol: String,
+      nProbe: Int): SearchScan = {
     val meta = readManifest(spark, path)
     val gens = meta.gens
     require(gens.nonEmpty, s"IVF index at $path has no live lists " +
       "(everything was deleted) — rebuild it")
     val (flat, numCentroids, _) = loadCentroids(spark, path, meta)
-    val int8 = meta.int8
-    // probe payload mirrors the stored codec: float probes against float
-    // lists (bit-identical to ivfTopK), coded probes against coded lists
-    // (bit-identical to ivfTopKInt8 — the scales cancel per pair)
-    val pPayload =
-      if (int8) VectorOps.int8Code(col(vecCol)).as("pvec")
-      else col(vecCol).as("pvec")
     // ids normalized to long (as bruteForceTopKFast does) so callers with
     // int id columns — and autoTuneNProbe's getLong decode — never hit a
     // runtime cast error; a no-op for the bigint fixture ids
-    val (p, probedCids) = routeProbes(probes, vecCol, flat, numCentroids,
-      nProbe, col(idCol).cast("long").as("query_id"), pPayload)
-    val c = readLists(spark, path, gens, Some(probedCids))
-      .select(col("id").cast("long").as("neighbor_id"),
-        (if (int8) col("code") else col("vec")).as("cvec"), col("cid"))
-    val score =
-      if (int8) VectorOps.int8Cosine(col("pvec"), col("cvec"))
-      else VectorOps.cosine(col("pvec"), col("cvec"))
-    val scored = c.join(broadcast(p), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("cosine"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k).drop("rank")
+    val (routed, vFloat) = routeProbes(probes, col(idCol).cast("long"),
+      vecCol, flat, numCentroids, nProbe)
+    // the probe payload mirrors the stored codec: float probes against
+    // float lists (bit-identical to ivfTopK), coded probes against coded
+    // lists (bit-identical to ivfTopKInt8 — the scales cancel per pair).
+    // A null query id never passes the self-match filter: dropped here.
+    val byCid = routed.filter(_.id != null).flatMap { p =>
+      val sp = scoringProbe(p.id, p.vec, vFloat, meta.int8)
+      p.cids.iterator.filter(gens.contains).map(_ -> sp)
+    }.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).toArray }
+    val lists =
+      if (byCid.isEmpty) None
+      else Some(readLists(spark, path, gens, Some(byCid.keys.toSeq.sorted)))
+    SearchScan(byCid, lists, meta.int8, vFloat)
+  }
+
+  /** One scored (query, neighbor) pair; `cosine` is meaningless when
+    * `cosineNull` (an int8 pair whose stored code is null). */
+  private[graft] final case class Scored(queryId: Long, neighborId: Long,
+      cosine: Double, cosineNull: Boolean)
+
+  /** The ranking order of [[ivfTopK]]'s window, best first: cosine
+    * descending under Spark SQL's double comparison (NaN above every
+    * number, nulls last), then neighbor_id ascending. */
+  private[graft] val RankOrder: Ordering[Scored] = new Ordering[Scored] {
+    def compare(a: Scored, b: Scored): Int =
+      if (a.cosineNull != b.cosineNull) { if (a.cosineNull) 1 else -1 }
+      else {
+        val c = if (a.cosineNull) 0 else
+          org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(b.cosine, a.cosine)
+        if (c != 0) c else java.lang.Long.compare(a.neighborId, b.neighborId)
+      }
+  }
+
+  /** One partition of the probed-list scan scored in its task: each row
+    * `(neighbor_id, vec|code, cid)` against the probes routed to its list,
+    * with the same math as the Catalyst expressions ([[VectorOps.cosine]]
+    * over [[graft.functions.FloatVecDot.dot]], or
+    * [[graft.functions.Int8Cosine.cosine]]); self-matches dropped. Keeps
+    * the k best per query id in [[RankOrder]] — the leaf half of a
+    * partial top-k whose root is the driver merge in [[searchIvfIndex]]. */
+  private[graft] def partitionTopK(
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      byCid: Map[Int, Array[ScoringProbe]], int8: Boolean,
+      storedFloat: Boolean, probeFloat: Boolean, k: Int): Iterator[Scored] = {
+    import graft.functions.{FloatVecDot, Int8Cosine}
+    val worstFirst = RankOrder.reverse
+    val heaps = scala.collection.mutable.HashMap.empty[Long,
+      java.util.PriorityQueue[Scored]]
+    def offer(s: Scored): Unit = {
+      val h = heaps.getOrElseUpdate(s.queryId,
+        new java.util.PriorityQueue[Scored](worstFirst))
+      if (h.size < k) h.add(s)
+      else if (RankOrder.lt(s, h.peek())) { h.poll(); h.add(s) }
+    }
+    rows.foreach { r =>
+      val ps = byCid.getOrElse(r.getInt(2), Array.empty[ScoringProbe])
+      if (!r.isNullAt(0) && ps.nonEmpty) {
+        val nid = r.getLong(0)
+        // a null stored payload scores 0.0 on the float path (the cosine
+        // CASE's else branch) and null on the int8 path
+        val score: ScoringProbe => Scored =
+          if (r.isNullAt(1)) p => Scored(p.queryId, nid, 0.0, cosineNull = int8)
+          else if (int8) {
+            val code = r.getBinary(1)
+            p => Scored(p.queryId, nid, Int8Cosine.cosine(p.code, code), false)
+          } else {
+            val cv = r.getArray(1)
+            val cn = math.sqrt(FloatVecDot.dot(cv, storedFloat, cv, storedFloat))
+            p => Scored(p.queryId, nid, VectorOps.cosineOf(
+              FloatVecDot.dot(p.vec, probeFloat, cv, storedFloat), p.norm, cn),
+              false)
+          }
+        ps.foreach(p => if (p.queryId != nid) offer(score(p)))
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    heaps.valuesIterator.flatMap(_.asScala)
+  }
+
+  /** The root of the partial top-k: per query id, the k best of the
+    * partitions' survivors in [[RankOrder]], by query id then rank. */
+  private[graft] def mergeTopK(partial: Seq[Scored], k: Int): Seq[Scored] =
+    partial.groupBy(_.queryId).toSeq.sortBy(_._1)
+      .flatMap { case (_, cands) => cands.sorted(RankOrder).take(k) }
+
+  /** Search a [[buildIvfIndex]] index: probes pick their `nProbe` nearest
+    * centroids, the corpus read opens ONLY those lists' live generation
+    * directories (path-selection pruning through the commit manifest —
+    * unprobed lists are never even listed), candidates score exact
+    * cosine, ranking keeps top k per query id. Returns a local frame
+    * `(query_id, neighbor_id, cosine)`, computed by the time it returns.
+    *
+    * Jobs per search: one, the scan of the probed lists. The centroids
+    * are read and the probes routed on the driver ([[loadCentroids]],
+    * [[routeProbes]]; a distributed probe frame adds its collect job),
+    * and the probed lists are listed there too ([[readLists]]). The
+    * routed probes ship as a broadcast variable; each scan task scores
+    * its rows against them and keeps a per-query top k
+    * ([[partitionTopK]]), and the driver merges those ≤ partitions ×
+    * probes × k rows — the serving-tree shape of leaf partial top-k and
+    * root merge. No broadcast exchange, shuffle or window runs, and no
+    * job at all when no probe reaches a live list. The result equals
+    * [[ivfTopK]]'s given the same centroids: same routing, same cosine
+    * kernels, same ranking order (ties at rank k broken by ascending
+    * neighbor_id). */
+  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      probes: DataFrame, idCol: String, vecCol: String, k: Int,
+      nProbe: Int = 8): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    requireIntegralId(probes, idCol, "searchIvfIndex")
+    val s = searchScan(spark, path, probes, idCol, vecCol, nProbe)
+    val partial = s.lists match {
+      case Some(lists) if k >= 1 =>
+        val storedFloat = !s.int8 && (lists.schema("vec").dataType match {
+          case ArrayType(FloatType, _) => true
+          case _ => false
+        })
+        val scan = lists.select(col("id").cast("long"),
+          col(if (s.int8) "code" else "vec"), col("cid"))
+        // the task closure takes these values, not `s`, which holds a frame
+        val (byCid, int8, probeFloat) = (
+          spark.sparkContext.broadcast(s.probes), s.int8, s.probeFloat)
+        val qe = scan.queryExecution
+        try SQLExecution.withNewExecutionId(qe, Some("searchIvfIndex")) {
+          qe.toRdd.mapPartitions(rows => partitionTopK(rows, byCid.value,
+            int8, storedFloat, probeFloat, k)).collect()
+        } finally byCid.destroy()
+      case _ => Array.empty[Scored]
+    }
+    val rows = mergeTopK(partial.toSeq, k).map(c =>
+      Row(c.queryId, c.neighborId, if (c.cosineNull) null else c.cosine))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("query_id", LongType, probes.schema(idCol).nullable),
+      StructField("neighbor_id", LongType),
+      StructField("cosine", DoubleType))))
   }
 
   /** Auto-tune `nProbe` for a persisted [[buildIvfIndex]] index: walk the

@@ -41,19 +41,21 @@ class AnnIndexSpec extends SparkSpec {
       val p = tmpPath(s"ivf_wide_$codec")
       Ann.buildIvfIndex(embs, "vec_id", "embedding", p, numCentroids = 64,
         codec = codec)
-      val res = Ann.searchIvfIndex(spark, p, probes, "vec_id", "embedding",
-        k = 5, nProbe = nProbe)
-      val opened = res.inputFiles.filter(_.contains("/corpus/"))
+      // the lists the search scans: the frame searchIvfIndex itself scores
+      val scanned = Ann.searchScan(spark, p, probes, "vec_id", "embedding",
+        nProbe).lists.get
+      val opened = scanned.inputFiles.filter(_.contains("/corpus/"))
         .map(_.split("/cid=")(1).split("/")(0)).toSet
       assert(opened.size > 32,
         s"$codec search opened only ${opened.size} live lists")
-      val got = triples(res)
+      val got = triples(Ann.searchIvfIndex(spark, p, probes, "vec_id",
+        "embedding", k = 5, nProbe = nProbe))
       assert(got.nonEmpty)
       assert(got === triples(inMemory), s"$codec search diverged")
     }
   }
 
-  test("one search runs at most 5 jobs and fewer tasks than the lists it probes") {
+  test("one search runs one job and fewer tasks than the lists it probes") {
     val jPath = tmpPath("ivf_jobs")
     Ann.buildIvfIndex(embs, "vec_id", "embedding", jPath, numCentroids = 64)
     // a local probe batch, as a serving client sends one
@@ -61,13 +63,150 @@ class AnnIndexSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(local.collect(): _*), local.schema)
-    val lists = Ann.probedCidCount(spark, jPath, probes, "vec_id",
-      "embedding", nProbe = 8)
+    // centroids are read and probes routed on the driver
+    val (lists, routing) = jobsDuring(Ann.probedCidCount(spark, jPath, probes,
+      "vec_id", "embedding", nProbe = 8))
+    assert(routing.jobs === 0, s"probedCidCount ran $routing")
     val (rows, spent) = jobsDuring(Ann.searchIvfIndex(spark, jPath, probes,
       "vec_id", "embedding", k = 5, nProbe = 8).collect().length)
     assert(rows === 50 * 5)
-    assert(spent.jobs <= 5, s"search ran $spent")
+    assert(spent.jobs === 1, s"search ran $spent")
     assert(spent.tasks < lists, s"search ran $spent over $lists probed lists")
+  }
+
+  /** A local `(vec_id, embedding array<float>)` frame of hand-made rows. */
+  private def vecFrame(rows: Seq[(Long, Seq[Float])]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (i, v) => Row(i, v) }: _*),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+  }
+
+  test("search ranks like ivfTopK: ties at rank k by ascending id, no self-match, k past the candidates") {
+    val rPath = tmpPath("ivf_rank")
+    val corpus = vecFrame(Seq(
+      9L -> Seq(1f, 0f, 0f), 5L -> Seq(1f, 0f, 0f), 7L -> Seq(1f, 0f, 0f),
+      3L -> Seq(1f, 0f, 0f), 2L -> Seq(1f, 0.5f, 0f), 4L -> Seq(0f, 1f, 0f),
+      6L -> Seq(0f, 0f, 1f), 8L -> Seq(0f, 0f, 0f), 10L -> Seq(-1f, 0f, 0f),
+      11L -> Seq(1f, 1f, 0f)))
+    // probe 3 is also a corpus row: its self-match must not rank
+    val probes = vecFrame(Seq(3L -> Seq(1f, 0f, 0f), 100L -> Seq(1f, 0f, 0f),
+      4L -> Seq(0f, 1f, 0f)))
+    Ann.buildIvfIndex(corpus, "vec_id", "embedding", rPath, numCentroids = 2)
+    def search(k: Int) = triples(Ann.searchIvfIndex(spark, rPath, probes,
+      "vec_id", "embedding", k = k, nProbe = 2))
+    def window(k: Int) = triples(Ann.ivfTopK(corpus, probes, "vec_id",
+      "embedding", k = k, numCentroids = 2, nProbe = 2))
+    def neighbors(res: Set[(Long, Long, Double)], q: Long) =
+      res.filter(_._1 == q).map(_._2)
+    val top2 = search(2)
+    assert(top2 === window(2))
+    // four rows tie at cosine 1.0; rank 2 cuts the tie by ascending id
+    assert(neighbors(top2, 3L) === Set(5L, 7L))
+    assert(neighbors(top2, 100L) === Set(3L, 5L))
+    // k above the candidate count returns every candidate but the probe
+    val all = search(100)
+    assert(all === window(100))
+    assert(neighbors(all, 3L) === (corpus.collect().map(_.getLong(0)).toSet - 3L))
+    assert(neighbors(all, 100L).size === 10)
+    assert(all.contains((3L, 8L, 0.0)), "a zero vector scores 0.0")
+  }
+
+  test("probes that reach no live list, and an empty probe frame, return empty results with no job") {
+    val ePath = tmpPath("ivf_empty_lists")
+    // seeds (the two lowest ids) fall one per cluster
+    val corpus = vecFrame(Seq(
+      1L -> Seq(1f, 0f, 0f), 2L -> Seq(0f, 1f, 0f), 3L -> Seq(1f, 0.1f, 0f),
+      4L -> Seq(0.1f, 1f, 0f), 5L -> Seq(1f, 0f, 0.1f), 6L -> Seq(0f, 1f, 0.1f)))
+    Ann.buildIvfIndex(corpus, "vec_id", "embedding", ePath, numCentroids = 2)
+    val full = Ann.searchIvfIndex(spark, ePath, corpus, "vec_id", "embedding",
+      k = 2, nProbe = 1)
+    assert(full.count() === 12)
+    // empty the list that holds id 1: it leaves the manifest
+    val listed = Ann.readIndexCorpus(spark, ePath)
+    val cid1 = listed.filter(col("id") === 1L).select(col("cid"))
+      .collect().head.getInt(0)
+    val emptied = listed.filter(col("cid") === cid1).select(col("id").as("vec_id"))
+    assert(Ann.deleteFromIvfIndex(spark, ePath, emptied, "vec_id") === 3L)
+    assert(!Ann.readManifest(spark, ePath).gens.contains(cid1))
+    val probe = vecFrame(Seq(100L -> Seq(1f, 0f, 0f)))
+    assert(Ann.probedCidCount(spark, ePath, probe, "vec_id", "embedding",
+      nProbe = 1) === 1L)
+    val (dead, deadSpent) = jobsDuring {
+      val res = Ann.searchIvfIndex(spark, ePath, probe, "vec_id", "embedding",
+        k = 2, nProbe = 1)
+      (res.schema, res.collect().length)
+    }
+    assert(dead === (full.schema -> 0) && deadSpent.jobs === 0,
+      s"search over a dead list ran $deadSpent")
+    val (none, noneSpent) = jobsDuring {
+      val res = Ann.searchIvfIndex(spark, ePath, vecFrame(Nil), "vec_id",
+        "embedding", k = 2, nProbe = 1)
+      (res.schema, res.collect().length)
+    }
+    assert(none === (full.schema -> 0) && noneSpent.jobs === 0,
+      s"an empty probe frame ran $noneSpent")
+  }
+
+  test("in-scan scorer equals the window over the same pairs: zero, null and NaN stored vectors, float and int8") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    import graft.functions.{Int8Code, VectorOps}
+    val stored: Seq[(Long, Array[Float])] = Seq(
+      1L -> Array(1f, 0f, 0f), 2L -> Array(1f, 0f, 0f), 3L -> null,
+      4L -> Array(0f, 0f, 0f), 5L -> Array(Float.NaN, 0f, 0f),
+      6L -> Array(0.5f, 0.5f, 0f), 7L -> Array(-1f, 0f, 0f),
+      8L -> Array(0.2f, -0.7f, 0.4f), 9L -> Array(1f, 0f, 0f))
+    // double probes against float lists: the mixed widening of vec_dot
+    val probes: Seq[(Long, Array[Double])] = Seq(
+      1L -> Array(1.0, 0.0, 0.0), 20L -> Array(0.3, 0.2, -0.1),
+      21L -> Array(0.0, 0.0, 0.0), 22L -> Array(-0.5, 0.25, 0.125))
+    val pairs = spark.createDataFrame(
+        java.util.Arrays.asList(probes.map { case (q, v) => Row(q, v.toSeq) }: _*),
+        StructType(Seq(StructField("query_id", LongType),
+          StructField("pvec", ArrayType(DoubleType)))))
+      .crossJoin(spark.createDataFrame(java.util.Arrays.asList(stored.map {
+          case (n, v) => Row(n, Option(v).map(_.toSeq).orNull) }: _*),
+        StructType(Seq(StructField("neighbor_id", LongType),
+          StructField("cvec", ArrayType(FloatType))))))
+      .filter(col("query_id") =!= col("neighbor_id"))
+    def key(q: Long, n: Long, c: java.lang.Double) =
+      (q, n, Option(c).map(d => java.lang.Double.doubleToLongBits(d)))
+    for (int8 <- Seq(false, true); k <- Seq(1, 2, 3, 100)) {
+      val score =
+        if (int8) VectorOps.int8Cosine(VectorOps.int8Code(col("pvec")),
+          VectorOps.int8Code(col("cvec")))
+        else VectorOps.cosine(col("pvec"), col("cvec"))
+      val expected = pairs.select(col("query_id"), col("neighbor_id"),
+          score.as("cosine"))
+        .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+          .orderBy(col("cosine").desc, col("neighbor_id"))))
+        .filter(col("rank") <= k).collect()
+        .map(r => key(r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) null else r.getDouble(2))).toSet
+      val byCid = Map(0 -> probes.map { case (q, v) =>
+        Ann.scoringProbe(q, UnsafeArrayData.fromPrimitiveArray(v),
+          vFloat = false, int8) }.toArray)
+      val rows = stored.map { case (n, v) =>
+        val data = Option(v).map(a => UnsafeArrayData.fromPrimitiveArray(a))
+        InternalRow(n, data.map(d =>
+          if (int8) Int8Code.code(d, vFloat = true) else d).orNull, 0)
+      }
+      // two partitions, merged as the driver merges them
+      val partial = stored.indices.partition(_ % 2 == 0) match {
+        case (a, b) => Seq(a, b).flatMap(ix => Ann.partitionTopK(
+          ix.iterator.map(rows), byCid, int8, storedFloat = true,
+          probeFloat = false, k))
+      }
+      val got = Ann.mergeTopK(partial, k).map(c => key(c.queryId,
+        c.neighborId, if (c.cosineNull) null else c.cosine)).toSet
+      assert(got === expected, s"int8=$int8 k=$k")
+    }
   }
 
   test("search sees rows appendToIvfIndex wrote into live lists in place (no manifest bump)") {
@@ -559,10 +698,10 @@ class AnnIndexSpec extends SparkSpec {
     assert(probed < total, s"probed $probed of $total lists — nothing pruned")
     // pruning happens at PATH-SELECTION time (the manifest resolves the
     // probed lists' live dirs; unprobed lists are never listed): the
-    // search plan's corpus scan must reference ONLY probed cid dirs
-    val res = Ann.searchIvfIndex(spark, path, probes, "vec_id", "embedding",
-      k = 5, nProbe = 4)
-    val corpusFiles = res.inputFiles.filter(_.contains("/corpus/"))
+    // corpus scan the search scores must reference ONLY probed cid dirs
+    val scanned = Ann.searchScan(spark, path, probes, "vec_id", "embedding",
+      nProbe = 4).lists.get
+    val corpusFiles = scanned.inputFiles.filter(_.contains("/corpus/"))
     val scannedCids = corpusFiles
       .map(_.split("/cid=")(1).split("/")(0)).toSet
     assert(corpusFiles.nonEmpty && scannedCids.size.toLong <= probed,
