@@ -138,7 +138,7 @@ object Bench {
     import org.apache.spark.sql.functions._
     val li = Tables.lineitem(spark, sfDir)
     val li10 = Seq.fill(10)(li).reduce(_ union _)
-    val key = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
+    val key = Tables.lineitemKey.column
     def timeMedian(name: String)(f: => Unit): Double = {
       f // warmup
       stableMedian(name, { () =>
@@ -1323,15 +1323,14 @@ object Bench {
     // price of a bootstrap CI in the one-pass formulation (should be a
     // small multiple, nowhere near 50×; the alternative B-resample design
     // would be)
-    val liKeyB = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
     canaryPre("x_bootstrap_plain_sec", "x_bootstrap_sec")
     val tPlainSum = timeMedian("x_bootstrap_plain_sec") {
-      li.filter(pmod(liKeyB, lit(10L)) === 0)
+      li.filter(pmod(Tables.lineitemKey.column, lit(10L)) === 0)
         .agg(sum(col("l_extendedprice").cast("decimal(18,2)"))).collect(): Unit
     }
     val tBootstrap = timeMedian("x_bootstrap_sec") {
       graft.exec.Bootstrap.bootstrapSumCi(li,
-        col("l_extendedprice").cast("decimal(18,2)"), liKeyB, step = 10L,
+        col("l_extendedprice").cast("decimal(18,2)"), Tables.lineitemKey.column, step = 10L,
         replicas = 50).collect(): Unit
     }
     canaryPost()

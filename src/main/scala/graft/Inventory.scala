@@ -66,19 +66,19 @@ object OracleSnippets {
     * arithmetic, one correctly-rounded double op per engine. */
   val blockedJaccardExpr: String =
     "CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE)"
+
+  /** Replay of [[graft.operators.Skew.priorityPerKey]] over lineitem's row
+    * key, grouped by `l_returnflag` and weighted by `l_extendedprice`:
+    * per group the top `k` + 1 priorities (ties by ascending key), the
+    * threshold τ, and `Σ max(w, τ)` over the top `k` through DECIMAL,
+    * named `sumAlias`, with the sample size named `nAlias`. */
+  def priorityByReturnFlag(k: Int, sumAlias: String = "sum_est",
+      nAlias: String = "n_used"): String =
+    s"""WITH p AS (SELECT l_returnflag, ${Tables.lineitemKey.sql} AS key, CAST(l_extendedprice AS DOUBLE) AS w FROM lineitem), q AS (SELECT l_returnflag, key, w, w * 1000003.0 / (((key % 1000003) * 1299709 + 104729) % 1000003 + 1) AS prio FROM p), r AS (SELECT l_returnflag, key, w, prio, ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY prio DESC, key ASC) AS rn FROM q QUALIFY rn <= ${k + 1}), t AS (SELECT l_returnflag, CASE WHEN COUNT(*) = ${k + 1} THEN MIN(prio) ELSE 0.0 END AS tau FROM r GROUP BY 1) SELECT r.l_returnflag, CAST(SUM(CAST(ROUND(GREATEST(w, tau), 4) AS DECIMAL(28,4))) AS DOUBLE) AS $sumAlias, COUNT(*) AS $nAlias FROM r JOIN t ON r.l_returnflag = t.l_returnflag WHERE rn <= $k GROUP BY 1 ORDER BY 1"""
 }
 
 object Inventory {
   import graft.Tables._
-
-  /** Deterministic sampling key for lineitem. Multipliers are odd primes
-    * coprime to every step we use, so for dense orderkeys the key is uniform
-    * mod any step (a multiplier sharing a factor with the step would wipe out
-    * residue classes — e.g. ×8 makes `key % 8 == 0` impossible when
-    * l_linenumber ∈ 1..7). Max value ~1.2e16 at 100 TB scale: no ANSI
-    * overflow. */
-  private def liKey: Column = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
-  private val liKeySql = "(l_orderkey * 8191 + l_linenumber * 131)"
 
   /** Exact decimal view of a monetary column (order-independent sums).
     * Round-15: the money_dec kernel — same DECIMAL(18,2) value for every
@@ -162,43 +162,43 @@ object Inventory {
   private val approxQueries: Seq[QueryDef] = Seq(
     QueryDef("q10_approx_sum_sys10",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 10L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 10L)
         sf.df.agg((sum(dec("l_extendedprice")).cast("double") * lit(sf.scaleFactor)).as("sum_price_est"))
       },
-      Some(s"SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 10.0 AS sum_price_est FROM lineitem WHERE $liKeySql % 10 = 0"),
+      Some(s"SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 10.0 AS sum_price_est FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0"),
       headline = true),
 
     QueryDef("q11_approx_count_sys10",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 10L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 10L)
         sf.df.agg((count(lit(1)) * lit(10L)).as("cnt_est"))
       },
-      Some(s"SELECT COUNT(*) * 10 AS cnt_est FROM lineitem WHERE $liKeySql % 10 = 0")),
+      Some(s"SELECT COUNT(*) * 10 AS cnt_est FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0")),
 
     QueryDef("q12_approx_avg_sys10",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 10L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 10L)
         sf.df.agg((sum(dec("l_quantity")).cast("double") / count(col("l_quantity"))).as("avg_qty_est"))
       },
-      Some(s"SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty_est FROM lineitem WHERE $liKeySql % 10 = 0")),
+      Some(s"SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty_est FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0")),
 
     QueryDef("q13_approx_groupby_sum_sys10",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 10L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 10L)
         QueryOps.orderedSmall(sf.df.groupBy(col("l_returnflag"))
           .agg((sum(dec("l_extendedprice")).cast("double") * lit(10.0)).as("sum_price_est")),
           col("l_returnflag"))
       },
-      Some(s"SELECT l_returnflag, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 10.0 AS sum_price_est FROM lineitem WHERE $liKeySql % 10 = 0 GROUP BY l_returnflag ORDER BY l_returnflag"),
+      Some(s"SELECT l_returnflag, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 10.0 AS sum_price_est FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0 GROUP BY l_returnflag ORDER BY l_returnflag"),
       headline = true),
 
     QueryDef("q14_approx_sum_where_sys20",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 20L, offset = 3L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 20L, offset = 3L)
         sf.df.filter(col("l_returnflag") === "R")
           .agg((sum(dec("l_extendedprice")).cast("double") * lit(20.0)).as("sum_price_est"))
       },
-      Some(s"SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 20.0 AS sum_price_est FROM lineitem WHERE $liKeySql % 20 = 3 AND l_returnflag = 'R'")),
+      Some(s"SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 20.0 AS sum_price_est FROM lineitem WHERE ${lineitemKey.sql} % 20 = 3 AND l_returnflag = 'R'")),
 
     QueryDef("q15_block_sample_sum",
       // cluster sampling over *consecutive orders* (the physical layout unit),
@@ -216,13 +216,13 @@ object Inventory {
         // each stratum contributes ∝ its size (n_h ≈ N_h/step). The
         // reference's actual R18 equal-SIZE allocation over value ntiles is
         // q43_stratified_equal_alloc.
-        val sf = Sampling.stratifiedSystematic(lineitem(s, d), "l_returnflag", liKey, step = 5L)
+        val sf = Sampling.stratifiedSystematic(lineitem(s, d), "l_returnflag", lineitemKey.column, step = 5L)
         sf.df.groupBy(col("l_returnflag"))
           .agg((sum(dec("l_quantity")).cast("double") / count(col("l_quantity"))).as("avg_qty_est"),
             count(lit(1)).as("n_samples"))
           .orderBy(col("l_returnflag"))
       },
-      Some(s"SELECT l_returnflag, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty_est, COUNT(*) AS n_samples FROM lineitem WHERE $liKeySql % 5 = 0 GROUP BY l_returnflag ORDER BY l_returnflag"))
+      Some(s"SELECT l_returnflag, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty_est, COUNT(*) AS n_samples FROM lineitem WHERE ${lineitemKey.sql} % 5 = 0 GROUP BY l_returnflag ORDER BY l_returnflag"))
   )
 
   // ---------------------------------------------------------------------
@@ -251,25 +251,25 @@ object Inventory {
   private def ciQueries: Seq[QueryDef] = Seq(
     QueryDef("q17_ci_sum_sys10",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 10L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 10L)
         Estimators.ciAgg(sf, AggKind.Sum, dec("l_extendedprice"), "sum_est")
       },
-      Some(ciSumOracle(10, "l_extendedprice", s"$liKeySql % 10 = 0", None))),
+      Some(ciSumOracle(10, "l_extendedprice", s"${lineitemKey.sql} % 10 = 0", None))),
 
     QueryDef("q18_ci_avg_sys10",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 10L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 10L)
         Estimators.ciAgg(sf, AggKind.Avg, dec("l_quantity"), "avg_est")
       },
-      Some(s"""WITH m AS (SELECT CAST(COUNT(l_quantity) AS DOUBLE) AS n, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s2 FROM lineitem WHERE $liKeySql % 10 = 0) SELECT s / GREATEST(n, 1.0) AS avg_est, s / GREATEST(n, 1.0) - 1.96 * SQRT((CASE WHEN n > 1.0 THEN (s2 - (s * s) / GREATEST(n, 1.0)) / GREATEST(n - 1.0, 1.0) ELSE 0.0 END) / GREATEST(n, 1.0)) AS avg_est_ci_lower, s / GREATEST(n, 1.0) + 1.96 * SQRT((CASE WHEN n > 1.0 THEN (s2 - (s * s) / GREATEST(n, 1.0)) / GREATEST(n - 1.0, 1.0) ELSE 0.0 END) / GREATEST(n, 1.0)) AS avg_est_ci_upper, CAST(n AS BIGINT) AS avg_est_n FROM m""")),
+      Some(s"""WITH m AS (SELECT CAST(COUNT(l_quantity) AS DOUBLE) AS n, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s2 FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0) SELECT s / GREATEST(n, 1.0) AS avg_est, s / GREATEST(n, 1.0) - 1.96 * SQRT((CASE WHEN n > 1.0 THEN (s2 - (s * s) / GREATEST(n, 1.0)) / GREATEST(n - 1.0, 1.0) ELSE 0.0 END) / GREATEST(n, 1.0)) AS avg_est_ci_lower, s / GREATEST(n, 1.0) + 1.96 * SQRT((CASE WHEN n > 1.0 THEN (s2 - (s * s) / GREATEST(n, 1.0)) / GREATEST(n - 1.0, 1.0) ELSE 0.0 END) / GREATEST(n, 1.0)) AS avg_est_ci_upper, CAST(n AS BIGINT) AS avg_est_n FROM m""")),
 
     QueryDef("q19_ci_groupby_sum_sys10",
       (s, d) => {
-        val sf = Sampling.systematic(lineitem(s, d), liKey, step = 10L)
+        val sf = Sampling.systematic(lineitem(s, d), lineitemKey.column, step = 10L)
         Estimators.ciAggBy(sf, AggKind.Sum, dec("l_extendedprice"),
           Seq(col("l_returnflag")), "sum_est").orderBy(col("l_returnflag"))
       },
-      Some(ciSumOracle(10, "l_extendedprice", s"$liKeySql % 10 = 0", Some("l_returnflag"))))
+      Some(ciSumOracle(10, "l_extendedprice", s"${lineitemKey.sql} % 10 = 0", Some("l_returnflag"))))
   )
 
   // ---------------------------------------------------------------------
@@ -329,11 +329,11 @@ object Inventory {
       // DuckDB replays every multiplier and quantile_cont ≡ percentile
       // (q52 identity). Decimal replica sums keep order independence.
       (s, d) => graft.exec.Bootstrap.bootstrapSumCi(lineitem(s, d),
-        dec("l_extendedprice"), liKey, step = 10L, replicas = 50),
+        dec("l_extendedprice"), lineitemKey.column, step = 10L, replicas = 50),
       Some {
         val hb = graft.exec.Bootstrap.replicaHashSql("h0", "b")
         val mult = graft.exec.Bootstrap.multiplierSql("hb")
-        s"""WITH s AS (SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS x, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc, ($liKeySql % ${graft.exec.Bootstrap.P}) AS h0 FROM lineitem WHERE $liKeySql % 10 = 0), e AS (SELECT xc, b, $hb AS hb FROM s CROSS JOIN (SELECT unnest(range(50)) AS b) bs), r AS (SELECT b, (CAST(SUM(xc * $mult) AS DOUBLE) / 100.0) * 10 AS rep FROM e GROUP BY b), m AS (SELECT CAST(SUM(x) AS DOUBLE) * 10 AS sum_est, COUNT(*) AS n_samples FROM s) SELECT sum_est, quantile_cont(rep, 0.025) AS ci_lower, quantile_cont(rep, 0.975) AS ci_upper, n_samples, 50 AS n_replicas FROM m, r GROUP BY sum_est, n_samples"""
+        s"""WITH s AS (SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS x, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc, (${lineitemKey.sql} % ${graft.exec.Bootstrap.P}) AS h0 FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0), e AS (SELECT xc, b, $hb AS hb FROM s CROSS JOIN (SELECT unnest(range(50)) AS b) bs), r AS (SELECT b, (CAST(SUM(xc * $mult) AS DOUBLE) / 100.0) * 10 AS rep FROM e GROUP BY b), m AS (SELECT CAST(SUM(x) AS DOUBLE) * 10 AS sum_est, COUNT(*) AS n_samples FROM s) SELECT sum_est, quantile_cont(rep, 0.025) AS ci_lower, quantile_cont(rep, 0.975) AS ci_upper, n_samples, 50 AS n_replicas FROM m, r GROUP BY sum_est, n_samples"""
       }),
 
     QueryDef("q42_neyman_stratified",
@@ -342,7 +342,7 @@ object Inventory {
       // driver-gated variant of Sampling.neymanStratified
       (s, d) => {
         val (sampled, steps) = Sampling.neymanSystematic(lineitem(s, d),
-          "l_returnflag", col("l_extendedprice"), liKey, totalFraction = 0.1)
+          "l_returnflag", col("l_extendedprice"), lineitemKey.column, totalFraction = 0.1)
         val stepCol = steps.tail.foldLeft(
           when(col("l_returnflag") === steps.head._1, lit(steps.head._2))) {
           case (acc, (k, st)) => acc.when(col("l_returnflag") === k, lit(st))
@@ -354,14 +354,14 @@ object Inventory {
             (col("s") * stepCol.cast("double")).as("sum_price_est"))
           .orderBy(col("l_returnflag"))
       },
-      Some(s"""WITH st AS (SELECT l_returnflag AS flag, CAST(COUNT(l_extendedprice) AS DOUBLE) AS n, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s2 FROM lineitem GROUP BY 1), w AS (SELECT flag, n, n * GREATEST(CASE WHEN n > 1.0 THEN SQRT((s2 - s * s / n) / (n - 1.0)) ELSE 0.0 END, 1e-9) AS wgt FROM st), tot AS (SELECT ((0.0 + MAX(CASE WHEN flag = 'A' THEN n END)) + MAX(CASE WHEN flag = 'N' THEN n END)) + MAX(CASE WHEN flag = 'R' THEN n END) AS totn, ((0.0 + MAX(CASE WHEN flag = 'A' THEN wgt END)) + MAX(CASE WHEN flag = 'N' THEN wgt END)) + MAX(CASE WHEN flag = 'R' THEN wgt END) AS totw FROM w), steps AS (SELECT flag, GREATEST(1, CAST(FLOOR(1.0 / LEAST(1.0, GREATEST(0.01, 0.1 * totn * wgt / (totw * n))) + 0.5) AS BIGINT)) AS step_h FROM w, tot) SELECT l_returnflag, step_h, COUNT(*) AS n_samples, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * CAST(step_h AS DOUBLE) AS sum_price_est FROM lineitem JOIN steps ON l_returnflag = steps.flag WHERE $liKeySql % step_h = 0 GROUP BY 1, 2 ORDER BY 1""")),
+      Some(s"""WITH st AS (SELECT l_returnflag AS flag, CAST(COUNT(l_extendedprice) AS DOUBLE) AS n, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s2 FROM lineitem GROUP BY 1), w AS (SELECT flag, n, n * GREATEST(CASE WHEN n > 1.0 THEN SQRT((s2 - s * s / n) / (n - 1.0)) ELSE 0.0 END, 1e-9) AS wgt FROM st), tot AS (SELECT ((0.0 + MAX(CASE WHEN flag = 'A' THEN n END)) + MAX(CASE WHEN flag = 'N' THEN n END)) + MAX(CASE WHEN flag = 'R' THEN n END) AS totn, ((0.0 + MAX(CASE WHEN flag = 'A' THEN wgt END)) + MAX(CASE WHEN flag = 'N' THEN wgt END)) + MAX(CASE WHEN flag = 'R' THEN wgt END) AS totw FROM w), steps AS (SELECT flag, GREATEST(1, CAST(FLOOR(1.0 / LEAST(1.0, GREATEST(0.01, 0.1 * totn * wgt / (totw * n))) + 0.5) AS BIGINT)) AS step_h FROM w, tot) SELECT l_returnflag, step_h, COUNT(*) AS n_samples, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * CAST(step_h AS DOUBLE) AS sum_price_est FROM lineitem JOIN steps ON l_returnflag = steps.flag WHERE ${lineitemKey.sql} % step_h = 0 GROUP BY 1, 2 ORDER BY 1""")),
 
     QueryDef("q43_stratified_equal_alloc",
       // reference R18's actual design (custom_bplus_db.cpp:1331-1379): sort
       // by amount, cut 4 equal ntile strata, 500 evenly-spaced samples EACH
       (s, d) => {
         val sampled = Sampling.equalAllocationStratified(lineitem(s, d),
-          col("l_extendedprice"), liKey, strataCount = 4, samplesPerStratum = 500)
+          col("l_extendedprice"), lineitemKey.column, strataCount = 4, samplesPerStratum = 500)
         sampled.groupBy(col("stratum"), col("n_h"))
           .agg(count(lit(1)).as("n_sampled"),
             (sum(dec("l_extendedprice")).cast("double") / count(lit(1))).as("avg_price_est"))
@@ -369,7 +369,7 @@ object Inventory {
             (col("avg_price_est") * col("n_h").cast("double")).as("sum_price_est"))
           .orderBy(col("stratum"))
       },
-      Some(s"""WITH ranked AS (SELECT l_extendedprice, $liKeySql AS k, NTILE(4) OVER (ORDER BY l_extendedprice, $liKeySql) AS stratum FROM lineitem), rr AS (SELECT l_extendedprice, stratum, ROW_NUMBER() OVER (PARTITION BY stratum ORDER BY l_extendedprice, k) AS rn, COUNT(*) OVER (PARTITION BY stratum) AS n_h FROM ranked), samp AS (SELECT * FROM rr WHERE (rn - 1) % GREATEST(1, CAST(FLOOR(CAST(n_h AS DOUBLE) / 500) AS BIGINT)) = 0 AND rn <= GREATEST(1, CAST(FLOOR(CAST(n_h AS DOUBLE) / 500) AS BIGINT)) * 500) SELECT stratum, n_h, COUNT(*) AS n_sampled, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price_est, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) * CAST(n_h AS DOUBLE) AS sum_price_est FROM samp GROUP BY 1, 2 ORDER BY 1"""))
+      Some(s"""WITH ranked AS (SELECT l_extendedprice, ${lineitemKey.sql} AS k, NTILE(4) OVER (ORDER BY l_extendedprice, ${lineitemKey.sql}) AS stratum FROM lineitem), rr AS (SELECT l_extendedprice, stratum, ROW_NUMBER() OVER (PARTITION BY stratum ORDER BY l_extendedprice, k) AS rn, COUNT(*) OVER (PARTITION BY stratum) AS n_h FROM ranked), samp AS (SELECT * FROM rr WHERE (rn - 1) % GREATEST(1, CAST(FLOOR(CAST(n_h AS DOUBLE) / 500) AS BIGINT)) = 0 AND rn <= GREATEST(1, CAST(FLOOR(CAST(n_h AS DOUBLE) / 500) AS BIGINT)) * 500) SELECT stratum, n_h, COUNT(*) AS n_sampled, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price_est, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) * CAST(n_h AS DOUBLE) AS sum_price_est FROM samp GROUP BY 1, 2 ORDER BY 1"""))
   )
 
   // ---------------------------------------------------------------------

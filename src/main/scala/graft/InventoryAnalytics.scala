@@ -15,9 +15,6 @@ import graft.operators.{Cdc, EventAnalytics, Packing, TextAnalysis}
 object InventoryAnalytics {
   import graft.Tables._
 
-  private val liKeySql = "(l_orderkey * 8191 + l_linenumber * 131)"
-  private def liKey = expr(liKeySql)
-
   val all: Seq[QueryDef] = Seq(
 
     QueryDef("q127_argmax_join_best_event",
@@ -45,10 +42,10 @@ object InventoryAnalytics {
       // the algebra) — the replication CI that stays valid for estimators
       // with awkward analytic variance.
       (s, d) => Estimators.jackknifeSum(
-        lineitem(s, d).filter(pmod(liKey, lit(10L)) === 0),
-        pmod(expr(s"$liKeySql div 10"), lit(8L)),
+        lineitem(s, d).filter(pmod(lineitemKey.column, lit(10L)) === 0),
+        pmod(expr(s"${lineitemKey.sql} div 10"), lit(8L)),
         col("l_extendedprice"), scale = 10.0, k = 8, alias = "sum_est"),
-      Some(s"""WITH s AS (SELECT l_extendedprice, $liKeySql AS k FROM lineitem WHERE $liKeySql % 10 = 0), g AS (SELECT (k // 10) % 8 AS jk, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS s2 FROM s GROUP BY 1), m AS (SELECT CAST(SUM(s2) AS DOUBLE) AS st, CAST(SUM(CAST(s2 AS DECIMAL(28,2)) * s2) AS DOUBLE) AS st2 FROM g) SELECT st * 10.0 AS sum_est, sqrt(greatest((100.0 * (8.0 / 7.0)) * (st2 - st * st / 8.0), 0.0)) AS sum_est_jk_se, st * 10.0 - 1.96 * sqrt(greatest((100.0 * (8.0 / 7.0)) * (st2 - st * st / 8.0), 0.0)) AS sum_est_ci_lower, st * 10.0 + 1.96 * sqrt(greatest((100.0 * (8.0 / 7.0)) * (st2 - st * st / 8.0), 0.0)) AS sum_est_ci_upper, CAST(8 AS BIGINT) AS sum_est_k FROM m""")),
+      Some(s"""WITH s AS (SELECT l_extendedprice, ${lineitemKey.sql} AS k FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0), g AS (SELECT (k // 10) % 8 AS jk, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS s2 FROM s GROUP BY 1), m AS (SELECT CAST(SUM(s2) AS DOUBLE) AS st, CAST(SUM(CAST(s2 AS DECIMAL(28,2)) * s2) AS DOUBLE) AS st2 FROM g) SELECT st * 10.0 AS sum_est, sqrt(greatest((100.0 * (8.0 / 7.0)) * (st2 - st * st / 8.0), 0.0)) AS sum_est_jk_se, st * 10.0 - 1.96 * sqrt(greatest((100.0 * (8.0 / 7.0)) * (st2 - st * st / 8.0), 0.0)) AS sum_est_ci_lower, st * 10.0 + 1.96 * sqrt(greatest((100.0 * (8.0 / 7.0)) * (st2 - st * st / 8.0), 0.0)) AS sum_est_ci_upper, CAST(8 AS BIGINT) AS sum_est_k FROM m""")),
 
     QueryDef("q129_ratio_sum",
       // ratio estimator: adjust the sampled price total by the known
@@ -57,11 +54,11 @@ object InventoryAnalytics {
       // expansion; emits both so the adjustment is visible.
       (s, d) => {
         val li = lineitem(s, d)
-        Estimators.ratioSum(li.filter(pmod(liKey, lit(10L)) === 0), li,
+        Estimators.ratioSum(li.filter(pmod(lineitemKey.column, lit(10L)) === 0), li,
           col("l_extendedprice"), col("l_quantity"), scale = 10.0,
           alias = "sum_ratio")
       },
-      Some(s"""WITH s AS (SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx FROM lineitem WHERE $liKeySql % 10 = 0), x AS (SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS xt FROM lineitem) SELECT (sy / sx) * xt AS sum_ratio, sy * 10.0 AS sum_ratio_ht, sy / sx AS sum_ratio_r, xt AS sum_ratio_x_total FROM s CROSS JOIN x""")),
+      Some(s"""WITH s AS (SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0), x AS (SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS xt FROM lineitem) SELECT (sy / sx) * xt AS sum_ratio, sy * 10.0 AS sum_ratio_ht, sy / sx AS sum_ratio_r, xt AS sum_ratio_x_total FROM s CROSS JOIN x""")),
 
     QueryDef("q130_unigram_rarity",
       // corpus-trained unigram LM scoring (integer-rarity form — the
@@ -101,11 +98,11 @@ object InventoryAnalytics {
       // completed; all moments exact decimals
       (s, d) => {
         val li = lineitem(s, d)
-        Estimators.regressionSum(li.filter(pmod(liKey, lit(10L)) === 0), li,
+        Estimators.regressionSum(li.filter(pmod(lineitemKey.column, lit(10L)) === 0), li,
           col("l_extendedprice"), col("l_quantity"), scale = 10.0,
           alias = "sum_greg")
       },
-      Some(s"""WITH s AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx, CAST(SUM(CAST(l_quantity AS DECIMAL(28,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sxx, CAST(SUM(CAST(l_quantity AS DECIMAL(28,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sxy FROM lineitem WHERE $liKeySql % 10 = 0), p AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nn, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS xt FROM lineitem) SELECT nn * ((sy / n) + (CASE WHEN (n * sxx - sx * sx) <> 0.0 THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) ELSE 0.0 END) * ((xt / nn) - (sx / n))) AS sum_greg, sy * 10.0 AS sum_greg_ht, CASE WHEN (n * sxx - sx * sx) <> 0.0 THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) ELSE 0.0 END AS sum_greg_b FROM s CROSS JOIN p""")),
+      Some(s"""WITH s AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx, CAST(SUM(CAST(l_quantity AS DECIMAL(28,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sxx, CAST(SUM(CAST(l_quantity AS DECIMAL(28,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sxy FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0), p AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nn, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS xt FROM lineitem) SELECT nn * ((sy / n) + (CASE WHEN (n * sxx - sx * sx) <> 0.0 THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) ELSE 0.0 END) * ((xt / nn) - (sx / n))) AS sum_greg, sy * 10.0 AS sum_greg_ht, CASE WHEN (n * sxx - sx * sx) <> 0.0 THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) ELSE 0.0 END AS sum_greg_b FROM s CROSS JOIN p""")),
 
     QueryDef("q136_poststratified_sum",
       // post-stratification: per-stratum expansion anchored on KNOWN
@@ -114,7 +111,7 @@ object InventoryAnalytics {
       // would be summation-order-dependent across engines
       (s, d) => {
         val li = lineitem(s, d)
-        val sAgg = li.filter(pmod(liKey, lit(10L)) === 0)
+        val sAgg = li.filter(pmod(lineitemKey.column, lit(10L)) === 0)
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("n_samp"),
             sum(graft.functions.MoneyDec.dec(col("l_extendedprice"), 18, 2)).cast("double")
@@ -127,7 +124,7 @@ object InventoryAnalytics {
             (col("sy") * lit(10.0)).as("t_ht"))
           .orderBy(col("l_returnflag"))
       },
-      Some(s"""WITH sa AS (SELECT l_returnflag, COUNT(*) AS n_samp, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy FROM lineitem WHERE $liKeySql % 10 = 0 GROUP BY 1), pa AS (SELECT l_returnflag, COUNT(*) AS n_g FROM lineitem GROUP BY 1) SELECT l_returnflag, n_g, n_samp, CAST(n_g AS DOUBLE) * (sy / n_samp) AS t_post, sy * 10.0 AS t_ht FROM pa JOIN sa USING (l_returnflag) ORDER BY 1""")),
+      Some(s"""WITH sa AS (SELECT l_returnflag, COUNT(*) AS n_samp, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0 GROUP BY 1), pa AS (SELECT l_returnflag, COUNT(*) AS n_g FROM lineitem GROUP BY 1) SELECT l_returnflag, n_g, n_samp, CAST(n_g AS DOUBLE) * (sy / n_samp) AS t_post, sy * 10.0 AS t_ht FROM pa JOIN sa USING (l_returnflag) ORDER BY 1""")),
 
     QueryDef("q137_sampled_median",
       // order statistics under sampling: the 10% systematic sample's
@@ -137,7 +134,7 @@ object InventoryAnalytics {
       // interpolation bit-for-bit (q52 precedent)
       (s, d) => {
         val li = lineitem(s, d)
-        val sMed = li.filter(pmod(liKey, lit(10L)) === 0)
+        val sMed = li.filter(pmod(lineitemKey.column, lit(10L)) === 0)
           .agg(percentile(col("l_extendedprice"), lit(0.5)).as("median_samp"))
         val pMed = li
           .agg(percentile(col("l_extendedprice"), lit(0.5)).as("median_exact"))
@@ -146,7 +143,7 @@ object InventoryAnalytics {
             (abs(col("median_samp") - col("median_exact")) /
               col("median_exact") * lit(100.0)).as("rel_err_pct"))
       },
-      Some(s"""WITH s AS (SELECT quantile_cont(l_extendedprice, 0.5) AS median_samp FROM lineitem WHERE $liKeySql % 10 = 0), p AS (SELECT quantile_cont(l_extendedprice, 0.5) AS median_exact FROM lineitem) SELECT median_samp, median_exact, abs(median_samp - median_exact) / median_exact * 100.0 AS rel_err_pct FROM s CROSS JOIN p""")),
+      Some(s"""WITH s AS (SELECT quantile_cont(l_extendedprice, 0.5) AS median_samp FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0), p AS (SELECT quantile_cont(l_extendedprice, 0.5) AS median_exact FROM lineitem) SELECT median_samp, median_exact, abs(median_samp - median_exact) / median_exact * 100.0 AS rel_err_pct FROM s CROSS JOIN p""")),
 
     QueryDef("q138_hybrid_groupby",
       // the reference's size-based method router
@@ -154,8 +151,8 @@ object InventoryAnalytics {
       // from the in-scan sample, small groups topped up exactly via a
       // semi-join-scoped second pass (Estimators.hybridGroupSum)
       (s, d) => Estimators.hybridGroupSum(lineitem(s, d), "l_suppkey",
-        col("l_extendedprice"), liKey, step = 5L, minGroupSize = 600L),
-      Some(s"""WITH b AS (SELECT l_suppkey, COUNT(*) AS n_rows, SUM(CASE WHEN $liKeySql % 5 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS s_samp FROM lineitem GROUP BY 1), e AS (SELECT l_suppkey, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s_exact FROM lineitem WHERE l_suppkey IN (SELECT l_suppkey FROM b WHERE n_rows < 600) GROUP BY 1) SELECT b.l_suppkey, n_rows, CASE WHEN n_rows < 600 THEN 'exact' ELSE 'sampled' END AS method, CASE WHEN n_rows < 600 THEN s_exact ELSE COALESCE(CAST(s_samp AS DOUBLE), 0.0) * 5.0 END AS sum_est FROM b LEFT JOIN e ON b.l_suppkey = e.l_suppkey ORDER BY b.l_suppkey""")),
+        col("l_extendedprice"), lineitemKey.column, step = 5L, minGroupSize = 600L),
+      Some(s"""WITH b AS (SELECT l_suppkey, COUNT(*) AS n_rows, SUM(CASE WHEN ${lineitemKey.sql} % 5 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS s_samp FROM lineitem GROUP BY 1), e AS (SELECT l_suppkey, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s_exact FROM lineitem WHERE l_suppkey IN (SELECT l_suppkey FROM b WHERE n_rows < 600) GROUP BY 1) SELECT b.l_suppkey, n_rows, CASE WHEN n_rows < 600 THEN 'exact' ELSE 'sampled' END AS method, CASE WHEN n_rows < 600 THEN s_exact ELSE COALESCE(CAST(s_samp AS DOUBLE), 0.0) * 5.0 END AS sum_est FROM b LEFT JOIN e ON b.l_suppkey = e.l_suppkey ORDER BY b.l_suppkey""")),
 
     QueryDef("q139_fraction_sweep",
       // the error→fraction policy table, measured instead of assumed: one
@@ -166,11 +163,11 @@ object InventoryAnalytics {
         val dec = graft.functions.MoneyDec.dec(col("l_extendedprice"), 18, 2)
         lineitem(s, d).agg(
             sum(dec).cast("double").as("exact_sum"),
-            sum(when(pmod(liKey, lit(20L)) === 0, dec)).cast("double")
+            sum(when(pmod(lineitemKey.column, lit(20L)) === 0, dec)).cast("double")
               .as("__s20"),
-            sum(when(pmod(liKey, lit(10L)) === 0, dec)).cast("double")
+            sum(when(pmod(lineitemKey.column, lit(10L)) === 0, dec)).cast("double")
               .as("__s10"),
-            sum(when(pmod(liKey, lit(5L)) === 0, dec)).cast("double")
+            sum(when(pmod(lineitemKey.column, lit(5L)) === 0, dec)).cast("double")
               .as("__s5"))
           .select(col("exact_sum"),
             (col("__s20") * lit(20.0)).as("est_f05"),
@@ -183,7 +180,7 @@ object InventoryAnalytics {
             ((col("__s5") * lit(5.0) - col("exact_sum")) /
               col("exact_sum") * lit(100.0)).as("err_f20_pct"))
       },
-      Some(s"""WITH m AS (SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS exact_sum, CAST(SUM(CASE WHEN $liKeySql % 20 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS DOUBLE) AS s20, CAST(SUM(CASE WHEN $liKeySql % 10 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS DOUBLE) AS s10, CAST(SUM(CASE WHEN $liKeySql % 5 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS DOUBLE) AS s5 FROM lineitem) SELECT exact_sum, s20 * 20.0 AS est_f05, s10 * 10.0 AS est_f10, s5 * 5.0 AS est_f20, (s20 * 20.0 - exact_sum) / exact_sum * 100.0 AS err_f05_pct, (s10 * 10.0 - exact_sum) / exact_sum * 100.0 AS err_f10_pct, (s5 * 5.0 - exact_sum) / exact_sum * 100.0 AS err_f20_pct FROM m""")),
+      Some(s"""WITH m AS (SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS exact_sum, CAST(SUM(CASE WHEN ${lineitemKey.sql} % 20 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS DOUBLE) AS s20, CAST(SUM(CASE WHEN ${lineitemKey.sql} % 10 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS DOUBLE) AS s10, CAST(SUM(CASE WHEN ${lineitemKey.sql} % 5 = 0 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS DOUBLE) AS s5 FROM lineitem) SELECT exact_sum, s20 * 20.0 AS est_f05, s10 * 10.0 AS est_f10, s5 * 5.0 AS est_f20, (s20 * 20.0 - exact_sum) / exact_sum * 100.0 AS err_f05_pct, (s10 * 10.0 - exact_sum) / exact_sum * 100.0 AS err_f10_pct, (s5 * 5.0 - exact_sum) / exact_sum * 100.0 AS err_f20_pct FROM m""")),
 
     QueryDef("q140_chao_distinct",
       // distinct-count estimation FROM A SAMPLE (famously harder than
@@ -194,7 +191,7 @@ object InventoryAnalytics {
       // exact audit column. Integer f-statistics → deterministic.
       (s, d) => {
         val li = lineitem(s, d)
-        val freq = li.filter(pmod(liKey, lit(10L)) === 0)
+        val freq = li.filter(pmod(lineitemKey.column, lit(10L)) === 0)
           .groupBy(col("l_partkey")).agg(count(lit(1)).as("n"))
         val fstats = freq.agg(
           count(lit(1)).as("d_samp"),
@@ -210,7 +207,7 @@ object InventoryAnalytics {
               .otherwise((col("f1") * (col("f1") - lit(1L))).cast("double") /
                 lit(2.0))).as("d_chao1"))
       },
-      Some(s"""WITH s AS (SELECT l_partkey FROM lineitem WHERE $liKeySql % 10 = 0), c AS (SELECT l_partkey, COUNT(*) AS n FROM s GROUP BY 1), f AS (SELECT COUNT(*) AS d_samp, CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1, CAST(SUM(CASE WHEN n = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2 FROM c), e AS (SELECT COUNT(DISTINCT l_partkey) AS d_exact FROM lineitem) SELECT d_samp, f1, f2, d_exact, d_samp + CASE WHEN f2 > 0 THEN CAST(f1 * f1 AS DOUBLE) / (2 * f2) ELSE CAST(f1 * (f1 - 1) AS DOUBLE) / 2.0 END AS d_chao1 FROM f CROSS JOIN e""")),
+      Some(s"""WITH s AS (SELECT l_partkey FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0), c AS (SELECT l_partkey, COUNT(*) AS n FROM s GROUP BY 1), f AS (SELECT COUNT(*) AS d_samp, CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1, CAST(SUM(CASE WHEN n = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2 FROM c), e AS (SELECT COUNT(DISTINCT l_partkey) AS d_exact FROM lineitem) SELECT d_samp, f1, f2, d_exact, d_samp + CASE WHEN f2 > 0 THEN CAST(f1 * f1 AS DOUBLE) / (2 * f2) ELSE CAST(f1 * (f1 - 1) AS DOUBLE) / 2.0 END AS d_chao1 FROM f CROSS JOIN e""")),
 
     QueryDef("q141_median_ci",
       // distribution-free CI for the sampled median (Woodruff / binomial
@@ -220,8 +217,8 @@ object InventoryAnalytics {
       // the mergeable histogram CI, q100 — this is its exact-gated anchor)
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val samp = lineitem(s, d).filter(pmod(liKey, lit(10L)) === 0)
-          .select(col("l_extendedprice").as("v"), liKey.as("k"))
+        val samp = lineitem(s, d).filter(pmod(lineitemKey.column, lit(10L)) === 0)
+          .select(col("l_extendedprice").as("v"), lineitemKey.column.as("k"))
         val nDf = samp.agg(count(lit(1)).as("n_samp"))
         val mDf = samp.agg(percentile(col("v"), lit(0.5)).as("median_samp"))
         val ranked = samp.withColumn("rn",
@@ -238,7 +235,7 @@ object InventoryAnalytics {
           .agg(max(when(col("rn") === rlo, col("v"))).as("median_ci_lower"),
             max(when(col("rn") === rhi, col("v"))).as("median_ci_upper"))
       },
-      Some(s"""WITH s AS (SELECT l_extendedprice AS v, $liKeySql AS k FROM lineitem WHERE $liKeySql % 10 = 0), nn AS (SELECT COUNT(*) AS n_samp FROM s), m AS (SELECT quantile_cont(v, 0.5) AS median_samp FROM s), r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v, k) AS rn FROM s) SELECT n_samp, GREATEST(1, CAST(FLOOR(0.5 * n_samp - 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) AS r_lo, LEAST(n_samp, CAST(CEIL(0.5 * n_samp + 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) AS r_hi, median_samp, MAX(CASE WHEN rn = GREATEST(1, CAST(FLOOR(0.5 * n_samp - 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) THEN v END) AS median_ci_lower, MAX(CASE WHEN rn = LEAST(n_samp, CAST(CEIL(0.5 * n_samp + 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) THEN v END) AS median_ci_upper FROM r CROSS JOIN nn CROSS JOIN m GROUP BY 1, 2, 3, 4""")),
+      Some(s"""WITH s AS (SELECT l_extendedprice AS v, ${lineitemKey.sql} AS k FROM lineitem WHERE ${lineitemKey.sql} % 10 = 0), nn AS (SELECT COUNT(*) AS n_samp FROM s), m AS (SELECT quantile_cont(v, 0.5) AS median_samp FROM s), r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v, k) AS rn FROM s) SELECT n_samp, GREATEST(1, CAST(FLOOR(0.5 * n_samp - 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) AS r_lo, LEAST(n_samp, CAST(CEIL(0.5 * n_samp + 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) AS r_hi, median_samp, MAX(CASE WHEN rn = GREATEST(1, CAST(FLOOR(0.5 * n_samp - 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) THEN v END) AS median_ci_lower, MAX(CASE WHEN rn = LEAST(n_samp, CAST(CEIL(0.5 * n_samp + 1.96 * SQRT(n_samp * 0.25)) AS BIGINT)) THEN v END) AS median_ci_upper FROM r CROSS JOIN nn CROSS JOIN m GROUP BY 1, 2, 3, 4""")),
 
     QueryDef("q142_wav_decode",
       // REAL multimodal decode, oracle-proven: every doc becomes a

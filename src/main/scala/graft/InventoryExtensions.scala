@@ -83,7 +83,7 @@ object InventoryExtensions {
       // dual-pointer design (reference R9): coarse stride ∪ fine stride,
       // honest inclusion-probability scale via inclusion–exclusion
       (s, d) => {
-        val key = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
+        val key = lineitemKey.column
         val sf = graft.exec.Sampling.dualRate(lineitem(s, d), key,
           coarseStep = 10L, fineStep = 7L)
         sf.df.agg((sum(graft.functions.MoneyDec.dec(col("l_extendedprice"), 18, 2)).cast("double") *
@@ -91,7 +91,7 @@ object InventoryExtensions {
           count(lit(1)).as("n_samples"))
       },
       Some {
-        val k = "(l_orderkey * 8191 + l_linenumber * 131)"
+        val k = lineitemKey.sql
         val p = 1.0 / 10 + 1.0 / 7 - 1.0 / 70
         s"SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * ${1.0 / p} AS sum_price_est, COUNT(*) AS n_samples FROM lineitem WHERE $k % 10 = 0 OR $k % 7 = 1"
       }),
@@ -144,7 +144,7 @@ object InventoryExtensions {
       // proportional to l_quantity, unbiased SUM estimate via y/p summed
       // through decimal (raw double HT sums are partition-order dependent)
       (s, d) => {
-        val key = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
+        val key = lineitemKey.column
         val (sampled, _, _) = graft.exec.Sampling.pps(
           lineitem(s, d), col("l_quantity"), key, targetFraction = 0.1)
         sampled.agg(
@@ -186,7 +186,7 @@ object InventoryExtensions {
       // selection and the drift verdict. The rand()-Bernoulli loop stays
       // covered by AdaptiveSpec as the R12/R13/R24 semantics anchor.
       (s, d) => {
-        val key = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
+        val key = lineitemKey.column
         val out = graft.exec.AdaptiveExecutor.runDeterministic(
           lineitem(s, d), col("l_extendedprice"), key,
           steps = Seq(20L, 10L, 5L), errorThresholdPct = 2.0)
@@ -198,7 +198,7 @@ object InventoryExtensions {
             "rounds_used", "status")
       },
       Some {
-        val k = "(l_orderkey * 8191 + l_linenumber * 131)"
+        val k = lineitemKey.sql
         val xc = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
         s"""WITH base AS (SELECT $k AS k, $xc AS xc FROM lineitem),
 m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nn,

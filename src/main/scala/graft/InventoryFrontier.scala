@@ -16,9 +16,6 @@ import graft.operators.{CorpusOverlap, JoinSampling, Mixing, QualityModel, Rolli
 object InventoryFrontier {
   import graft.Tables._
 
-  private val liKeySql = "(l_orderkey * 8191 + l_linenumber * 131)"
-  private def liKey = expr(liKeySql)
-
   val all: Seq[QueryDef] = Seq(
 
     QueryDef("q151_universe_join_sum",
@@ -55,10 +52,10 @@ object InventoryFrontier {
       // hash → the DuckDB window replay selects the identical sample.
       (s, d) => {
         val top = Sampling.prioritySample(
-          lineitem(s, d), liKey, col("l_extendedprice"), k = 500)
+          lineitem(s, d), lineitemKey.column, col("l_extendedprice"), k = 500)
         Sampling.prioritySumEstimate(top, k = 500)
       },
-      Some(s"""WITH p AS (SELECT $liKeySql AS key, CAST(l_extendedprice AS DOUBLE) AS w FROM lineitem), q AS (SELECT key, w, w * 1000003.0 / (((key % 1000003) * 1299709 + 104729) % 1000003 + 1) AS prio FROM p), r AS (SELECT key, w, prio, ROW_NUMBER() OVER (ORDER BY prio DESC, key ASC) AS rn FROM q QUALIFY rn <= 501), tau AS (SELECT CASE WHEN COUNT(*) = 501 THEN MIN(prio) ELSE 0.0 END AS tau FROM r) SELECT CAST(SUM(CAST(ROUND(GREATEST(w, tau), 4) AS DECIMAL(28,4))) AS DOUBLE) AS sum_est, COUNT(*) AS n_used FROM r CROSS JOIN tau WHERE rn <= 500""")),
+      Some(s"""WITH p AS (SELECT ${lineitemKey.sql} AS key, CAST(l_extendedprice AS DOUBLE) AS w FROM lineitem), q AS (SELECT key, w, w * 1000003.0 / (((key % 1000003) * 1299709 + 104729) % 1000003 + 1) AS prio FROM p), r AS (SELECT key, w, prio, ROW_NUMBER() OVER (ORDER BY prio DESC, key ASC) AS rn FROM q QUALIFY rn <= 501), tau AS (SELECT CASE WHEN COUNT(*) = 501 THEN MIN(prio) ELSE 0.0 END AS tau FROM r) SELECT CAST(SUM(CAST(ROUND(GREATEST(w, tau), 4) AS DECIMAL(28,4))) AS DOUBLE) AS sum_est, COUNT(*) AS n_used FROM r CROSS JOIN tau WHERE rn <= 500""")),
 
     QueryDef("q153_quality_model_filter",
       // model-based quality filtering (hashing-trick linear scorer —
@@ -228,9 +225,9 @@ object InventoryFrontier {
       // top-(k+1) via the shard-salted two-phase topNPerKey, estimator
       // one group-keyed aggregate over ≤ 201·groups rows.
       (s, d) => Skew.priorityPerKey(lineitem(s, d), Seq("l_returnflag"),
-          liKey, col("l_extendedprice"), k = 200)
+          lineitemKey.column, col("l_extendedprice"), k = 200)
         .orderBy(col("l_returnflag")),
-      Some(s"""WITH p AS (SELECT l_returnflag, $liKeySql AS key, CAST(l_extendedprice AS DOUBLE) AS w FROM lineitem), q AS (SELECT l_returnflag, key, w, w * 1000003.0 / (((key % 1000003) * 1299709 + 104729) % 1000003 + 1) AS prio FROM p), r AS (SELECT l_returnflag, key, w, prio, ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY prio DESC, key ASC) AS rn FROM q QUALIFY rn <= 201), t AS (SELECT l_returnflag, CASE WHEN COUNT(*) = 201 THEN MIN(prio) ELSE 0.0 END AS tau FROM r GROUP BY 1) SELECT r.l_returnflag, CAST(SUM(CAST(ROUND(GREATEST(w, tau), 4) AS DECIMAL(28,4))) AS DOUBLE) AS sum_est, COUNT(*) AS n_used FROM r JOIN t ON r.l_returnflag = t.l_returnflag WHERE rn <= 200 GROUP BY 1 ORDER BY 1""")),
+      Some(OracleSnippets.priorityByReturnFlag(200))),
 
     QueryDef("q157_universe_join_ci",
       // design-honest error bar for universe join sampling: the 10%

@@ -151,7 +151,7 @@ object InventoryPipeline {
       // 10x smaller stream), broadcast by size
       (s, d) => {
         val li = lineitem(s, d)
-          .filter(pmod(col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L),
+          .filter(pmod(lineitemKey.column,
             lit(10L)) === lit(0L))
         li.join(broadcast(supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))),
             col("l_suppkey") === col("s_suppkey"))
@@ -162,7 +162,7 @@ object InventoryPipeline {
             .as("sum_price_est"))
           .orderBy(col("n_name"))
       },
-      Some("""SELECT n_name, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 10.0 AS sum_price_est FROM lineitem JOIN supplier ON l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE (l_orderkey * 8191 + l_linenumber * 131) % 10 = 0 GROUP BY n_name ORDER BY n_name""")),
+      Some(s"""SELECT n_name, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * 10.0 AS sum_price_est FROM lineitem JOIN supplier ON l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE ${lineitemKey.sql} % 10 = 0 GROUP BY n_name ORDER BY n_name""")),
 
     // -- events: time-window aggregation (batch twin of the streaming path) -
     QueryDef("q22_events_hourly",

@@ -17,9 +17,6 @@ object InventoryScale {
   import graft.OracleSnippets._
   import graft.Tables._
 
-  private val liKeySql = "(l_orderkey * 8191 + l_linenumber * 131)"
-  private def liKey = expr(liKeySql)
-
   /** The planted near-dup bit mask shared by every media fixture
     * (q197–q206): flips exactly 1 + (id % 5) KNOWN bits at positions
     * (7·id + 13·j) mod 64, pairwise distinct for j < 5 — so each
@@ -31,6 +28,57 @@ object InventoryScale {
     (0 until (1 + (id % 5)).toInt)
       .foreach(j => mask |= 1L << ((id * 7 + j * 13) % 64).toInt)
     mask
+  }
+
+  /** DuckDB replay of [[graft.exec.AdaptiveExecutor.runGroupedDeterministic]]
+    * in "sum" mode over lineitem's row key: steps 20 ⊃ 10 ⊃ 5, threshold
+    * 2%, 95% confidence, exact route below 250 rows, grouped by the SQL
+    * expression `gx`. Per group it replays the moments, the first
+    * converged round, CI bounds, cumulative n_used and the verdict
+    * bit-for-bit; columns as the operator names them. */
+  private def sumLadderOracle(gx: String): String = {
+    val k = lineitemKey.sql
+    val xc = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+    s"""WITH base AS (SELECT $gx AS g, $k AS k, $xc AS xc FROM lineitem),
+m AS (SELECT g, CAST(COUNT(*) AS DOUBLE) AS nn,
+ CAST(SUM(CAST(xc AS DECIMAL(28,0))) AS DOUBLE) / 100.0 AS exact_s,
+ CAST(COUNT(CASE WHEN k % 20 = 0 THEN xc END) AS DOUBLE) AS n1,
+ CAST(SUM(CASE WHEN k % 20 = 0 THEN CAST(xc AS DECIMAL(28,0)) END) AS DOUBLE) AS sc1,
+ CAST(SUM(CASE WHEN k % 20 = 0 THEN CAST(xc * xc AS DECIMAL(38,0)) END) AS DOUBLE) AS s2c1,
+ CAST(COUNT(CASE WHEN k % 10 = 0 THEN xc END) AS DOUBLE) AS n2,
+ CAST(SUM(CASE WHEN k % 10 = 0 THEN CAST(xc AS DECIMAL(28,0)) END) AS DOUBLE) AS sc2,
+ CAST(SUM(CASE WHEN k % 10 = 0 THEN CAST(xc * xc AS DECIMAL(38,0)) END) AS DOUBLE) AS s2c2,
+ CAST(COUNT(CASE WHEN k % 5 = 0 THEN xc END) AS DOUBLE) AS n3,
+ CAST(SUM(CASE WHEN k % 5 = 0 THEN CAST(xc AS DECIMAL(28,0)) END) AS DOUBLE) AS sc3,
+ CAST(SUM(CASE WHEN k % 5 = 0 THEN CAST(xc * xc AS DECIMAL(38,0)) END) AS DOUBLE) AS s2c3
+ FROM base GROUP BY g),
+r AS (SELECT g, nn, exact_s, n1, n2, n3,
+ CASE WHEN n1 > 0 THEN sc1 * (nn / n1) / 100.0 ELSE 0.0 END AS est1,
+ CASE WHEN n1 > 1 THEN 1.96 * sqrt(((s2c1 - sc1 * sc1 / n1) / (n1 - 1)) / n1) * nn / 100.0 ELSE 1e18 END AS mar1,
+ CASE WHEN n2 > 0 THEN sc2 * (nn / n2) / 100.0 ELSE 0.0 END AS est2,
+ CASE WHEN n2 > 1 THEN 1.96 * sqrt(((s2c2 - sc2 * sc2 / n2) / (n2 - 1)) / n2) * nn / 100.0 ELSE 1e18 END AS mar2,
+ CASE WHEN n3 > 0 THEN sc3 * (nn / n3) / 100.0 ELSE 0.0 END AS est3,
+ CASE WHEN n3 > 1 THEN 1.96 * sqrt(((s2c3 - sc3 * sc3 / n3) / (n3 - 1)) / n3) * nn / 100.0 ELSE 1e18 END AS mar3
+ FROM m),
+rr AS (SELECT *,
+ CASE WHEN est1 <> 0.0 AND mar1 < 1e18 THEN 100.0 * (((est1 + mar1) - (est1 - mar1)) / 2.0) / abs(est1) ELSE 1e18 END AS rel1,
+ CASE WHEN est2 <> 0.0 AND mar2 < 1e18 THEN 100.0 * (((est2 + mar2) - (est2 - mar2)) / 2.0) / abs(est2) ELSE 1e18 END AS rel2,
+ CASE WHEN est3 <> 0.0 AND mar3 < 1e18 THEN 100.0 * (((est3 + mar3) - (est3 - mar3)) / 2.0) / abs(est3) ELSE 1e18 END AS rel3
+ FROM r),
+sel AS (SELECT *, CASE WHEN rel1 <= 2.0 AND n1 >= 50 THEN 1 WHEN rel2 <= 2.0 AND n2 >= 50 THEN 2 ELSE 3 END AS ru FROM rr)
+SELECT g AS "group", CAST(nn AS BIGINT) AS n_rows,
+ CASE WHEN nn < 250 THEN exact_s ELSE CASE ru WHEN 1 THEN est1 WHEN 2 THEN est2 ELSE est3 END END AS sum_est,
+ CASE WHEN nn < 250 THEN exact_s ELSE CASE ru WHEN 1 THEN est1 - mar1 WHEN 2 THEN est2 - mar2 ELSE est3 - mar3 END END AS ci_lower,
+ CASE WHEN nn < 250 THEN exact_s ELSE CASE ru WHEN 1 THEN est1 + mar1 WHEN 2 THEN est2 + mar2 ELSE est3 + mar3 END END AS ci_upper,
+ CAST(CASE WHEN nn < 250 THEN nn ELSE CASE ru WHEN 1 THEN n1 WHEN 2 THEN n1 + n2 ELSE n1 + n2 + n3 END END AS BIGINT) AS n_used,
+ CAST(CASE WHEN nn < 250 THEN 0 ELSE ru END AS INTEGER) AS rounds_used,
+ CASE WHEN nn < 250 THEN 'Exact'
+  WHEN (CASE ru WHEN 1 THEN n1 WHEN 2 THEN n2 ELSE n3 END) < 50 THEN 'InsufficientData'
+  WHEN ru = 2 AND ((est1 + mar1 < est2 - mar2) OR (est2 + mar2 < est1 - mar1)) AND est1 <> 0.0 AND abs(est2 - est1) / abs(est1) * 100.0 > 5.0 THEN 'Drifting'
+  WHEN ru = 3 AND ((est2 + mar2 < est3 - mar3) OR (est3 + mar3 < est2 - mar2)) AND est2 <> 0.0 AND abs(est3 - est2) / abs(est2) * 100.0 > 5.0 THEN 'Drifting'
+  WHEN (CASE ru WHEN 1 THEN rel1 WHEN 2 THEN rel2 ELSE rel3 END) <= 2.0 THEN 'Stable'
+  ELSE 'Drifting' END AS status
+FROM sel ORDER BY g"""
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -521,10 +569,10 @@ object InventoryScale {
       // z·sqrt expression bit-for-bit.
       (s, d) => {
         val top = graft.exec.Sampling.prioritySample(
-          lineitem(s, d), liKey, col("l_extendedprice"), k = 500)
+          lineitem(s, d), lineitemKey.column, col("l_extendedprice"), k = 500)
         graft.exec.Sampling.prioritySumEstimateCi(top, k = 500)
       },
-      Some(s"""WITH p AS (SELECT $liKeySql AS key, CAST(l_extendedprice AS DOUBLE) AS w FROM lineitem), q AS (SELECT key, w, w * 1000003.0 / (((key % 1000003) * 1299709 + 104729) % 1000003 + 1) AS prio FROM p), r AS (SELECT key, w, prio, ROW_NUMBER() OVER (ORDER BY prio DESC, key ASC) AS rn FROM q QUALIFY rn <= 501), tau AS (SELECT CASE WHEN COUNT(*) = 501 THEN MIN(prio) ELSE 0.0 END AS tau FROM r), est AS (SELECT CAST(SUM(CAST(ROUND(GREATEST(w, tau), 4) AS DECIMAL(28,4))) AS DOUBLE) AS sum_est, CAST(SUM(CAST(ROUND(GREATEST(w, tau) * GREATEST(tau - w, 0.0), 4) AS DECIMAL(38,4))) AS DOUBLE) AS var_est, COUNT(*) AS n_used FROM r CROSS JOIN tau WHERE rn <= 500) SELECT sum_est, sum_est - 1.96 * SQRT(var_est) AS ci_lower, sum_est + 1.96 * SQRT(var_est) AS ci_upper, n_used FROM est""")),
+      Some(s"""WITH p AS (SELECT ${lineitemKey.sql} AS key, CAST(l_extendedprice AS DOUBLE) AS w FROM lineitem), q AS (SELECT key, w, w * 1000003.0 / (((key % 1000003) * 1299709 + 104729) % 1000003 + 1) AS prio FROM p), r AS (SELECT key, w, prio, ROW_NUMBER() OVER (ORDER BY prio DESC, key ASC) AS rn FROM q QUALIFY rn <= 501), tau AS (SELECT CASE WHEN COUNT(*) = 501 THEN MIN(prio) ELSE 0.0 END AS tau FROM r), est AS (SELECT CAST(SUM(CAST(ROUND(GREATEST(w, tau), 4) AS DECIMAL(28,4))) AS DOUBLE) AS sum_est, CAST(SUM(CAST(ROUND(GREATEST(w, tau) * GREATEST(tau - w, 0.0), 4) AS DECIMAL(38,4))) AS DOUBLE) AS var_est, COUNT(*) AS n_used FROM r CROSS JOIN tau WHERE rn <= 500) SELECT sum_est, sum_est - 1.96 * SQRT(var_est) AS ci_lower, sum_est + 1.96 * SQRT(var_est) AS ci_upper, n_used FROM est""")),
 
     QueryDef("q163_quality_model_trained",
       // TRAINED-WEIGHT quality filtering, production shape: the weight
@@ -549,31 +597,19 @@ object InventoryScale {
     QueryDef("q164_grouped_priority_cli",
       // --method priority WITH GROUP BY through the real CLI executor
       // path (SpecExecutor → Skew.priorityPerKey): the fixed k becomes a
-      // per-group budget, every group gets its own threshold τ_g.
-      // BOUND-GATED (the CLI's content-hash priorities are xxhash64 —
-      // engine-internal, not DuckDB-replayable like q159's affine key):
-      // each group's estimate must sit within 20% of its exact sum and
-      // the per-group sample size must be min(k, |group|) — statements
-      // the oracle can make exactly.
+      // per-group budget, every group gets its own threshold τ_g. The CLI
+      // strides over lineitem's declared row key, so the DuckDB oracle
+      // replays q159's per-group priority text at k = 500 and hash-gates
+      // every group's estimate and sample size.
       (s, d) => {
         Tables.registerAll(s, d)
         val spec = graft.parser.QueryParser.parse(
           "SELECT SUM(l_extendedprice) FROM lineitem GROUP BY l_returnflag")
           .copy(sampling = graft.model.SamplingStrategy.Priority(500))
-        val est = graft.exec.SpecExecutor.run(s, spec)
-        val exact = lineitem(s, d).groupBy(col("l_returnflag"))
-          .agg(sum(graft.functions.MoneyDec.dec(col("l_extendedprice"), 18, 2)).cast("double")
-              .as("sum_exact"),
-            count(lit(1)).as("n_rows"))
-        est.join(exact, "l_returnflag")
-          .select(col("l_returnflag"), col("n_rows"),
-            (col("sum_l_extendedprice_n") === least(lit(500L), col("n_rows")))
-              .as("budget_respected"),
-            (abs(col("sum_l_extendedprice") / col("sum_exact") - lit(1.0))
-              <= lit(0.2)).as("within_20pct"))
-          .orderBy(col("l_returnflag"))
+        graft.exec.SpecExecutor.run(s, spec)
       },
-      Some("SELECT l_returnflag, COUNT(*) AS n_rows, TRUE AS budget_respected, TRUE AS within_20pct FROM lineitem GROUP BY 1 ORDER BY 1")),
+      Some(priorityByReturnFlag(500, "sum_l_extendedprice",
+        "sum_l_extendedprice_n"))),
 
     QueryDef("q167_ann_ivf_index_search",
       // PERSISTED IVF index, searched with directory-level partition
@@ -1026,34 +1062,18 @@ object InventoryScale {
       // --error N WITH GROUP BY through the real CLI executor path
       // (SpecExecutor → AdaptiveExecutor.runGroupedDeterministic): the
       // scalar adaptive ladder becomes per-group, each group stopping at
-      // its own converged round over the content-hash systematic key.
-      // BOUND-GATED like q164 (the content-hash key is engine-internal,
-      // not DuckDB-replayable — q172 hash-gates the ladder itself over
-      // the affine key): per-group estimate within 20% of exact, the
-      // ladder actually sampled (n_used < group rows), verdict in the
-      // legal set.
+      // its own converged round over lineitem's declared row key. FULLY
+      // hash-gated: the oracle is q172's ladder replay with l_returnflag
+      // as the group, under the CLI's column names.
       (s, d) => {
         Tables.registerAll(s, d)
         val spec = graft.parser.QueryParser.parse(
           "SELECT SUM(l_extendedprice) FROM lineitem GROUP BY l_returnflag")
           .copy(sampling = graft.model.SamplingStrategy.Adaptive(
             errorThresholdPct = 2.0))
-        val est = graft.exec.SpecExecutor.run(s, spec)
-        val exact = lineitem(s, d).groupBy(col("l_returnflag"))
-          .agg(sum(graft.functions.MoneyDec.dec(col("l_extendedprice"), 18, 2)).cast("double")
-              .as("sum_exact"),
-            count(lit(1)).as("n_rows"))
-        est.join(exact, "l_returnflag")
-          .select(col("l_returnflag"), col("n_rows"),
-            (abs(col("sum_l_extendedprice") / col("sum_exact") - lit(1.0))
-              <= lit(0.2)).as("within_20pct"),
-            (col("sum_l_extendedprice_n") < col("n_rows"))
-              .as("sampled_not_exact"),
-            col("status").isin("Stable", "Drifting", "InsufficientData",
-              "Exact").as("status_valid"))
-          .orderBy(col("l_returnflag"))
+        graft.exec.SpecExecutor.run(s, spec)
       },
-      Some("SELECT l_returnflag, COUNT(*) AS n_rows, TRUE AS within_20pct, TRUE AS sampled_not_exact, TRUE AS status_valid FROM lineitem GROUP BY 1 ORDER BY 1")),
+      Some(s"""SELECT "group" AS l_returnflag, sum_est AS sum_l_extendedprice, ci_lower AS sum_l_extendedprice_ci_lower, ci_upper AS sum_l_extendedprice_ci_upper, n_used AS sum_l_extendedprice_n, status FROM (${sumLadderOracle("l_returnflag")}) ORDER BY 1""")),
 
     QueryDef("q172_adaptive_group_clt",
       // PER-GROUP adaptive CLT ladder (AdaptiveExecutor
@@ -1071,55 +1091,12 @@ object InventoryScale {
         val grp = when(pmod(col("l_orderkey"), lit(997L)) === 0, lit("RARE"))
           .otherwise(col("l_returnflag"))
         graft.exec.AdaptiveExecutor.runGroupedDeterministic(
-          lineitem(s, d), col("l_extendedprice"), liKey, grp,
+          lineitem(s, d), col("l_extendedprice"), lineitemKey.column, grp,
           steps = Seq(20L, 10L, 5L), errorThresholdPct = 2.0)
           .orderBy(col("group"))
       },
-      Some {
-        val k = "(l_orderkey * 8191 + l_linenumber * 131)"
-        val xc = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-        val gx = "CASE WHEN l_orderkey % 997 = 0 THEN 'RARE' ELSE l_returnflag END"
-        s"""WITH base AS (SELECT $gx AS g, $k AS k, $xc AS xc FROM lineitem),
-m AS (SELECT g, CAST(COUNT(*) AS DOUBLE) AS nn,
- CAST(SUM(CAST(xc AS DECIMAL(28,0))) AS DOUBLE) / 100.0 AS exact_s,
- CAST(COUNT(CASE WHEN k % 20 = 0 THEN xc END) AS DOUBLE) AS n1,
- CAST(SUM(CASE WHEN k % 20 = 0 THEN CAST(xc AS DECIMAL(28,0)) END) AS DOUBLE) AS sc1,
- CAST(SUM(CASE WHEN k % 20 = 0 THEN CAST(xc * xc AS DECIMAL(38,0)) END) AS DOUBLE) AS s2c1,
- CAST(COUNT(CASE WHEN k % 10 = 0 THEN xc END) AS DOUBLE) AS n2,
- CAST(SUM(CASE WHEN k % 10 = 0 THEN CAST(xc AS DECIMAL(28,0)) END) AS DOUBLE) AS sc2,
- CAST(SUM(CASE WHEN k % 10 = 0 THEN CAST(xc * xc AS DECIMAL(38,0)) END) AS DOUBLE) AS s2c2,
- CAST(COUNT(CASE WHEN k % 5 = 0 THEN xc END) AS DOUBLE) AS n3,
- CAST(SUM(CASE WHEN k % 5 = 0 THEN CAST(xc AS DECIMAL(28,0)) END) AS DOUBLE) AS sc3,
- CAST(SUM(CASE WHEN k % 5 = 0 THEN CAST(xc * xc AS DECIMAL(38,0)) END) AS DOUBLE) AS s2c3
- FROM base GROUP BY g),
-r AS (SELECT g, nn, exact_s, n1, n2, n3,
- CASE WHEN n1 > 0 THEN sc1 * (nn / n1) / 100.0 ELSE 0.0 END AS est1,
- CASE WHEN n1 > 1 THEN 1.96 * sqrt(((s2c1 - sc1 * sc1 / n1) / (n1 - 1)) / n1) * nn / 100.0 ELSE 1e18 END AS mar1,
- CASE WHEN n2 > 0 THEN sc2 * (nn / n2) / 100.0 ELSE 0.0 END AS est2,
- CASE WHEN n2 > 1 THEN 1.96 * sqrt(((s2c2 - sc2 * sc2 / n2) / (n2 - 1)) / n2) * nn / 100.0 ELSE 1e18 END AS mar2,
- CASE WHEN n3 > 0 THEN sc3 * (nn / n3) / 100.0 ELSE 0.0 END AS est3,
- CASE WHEN n3 > 1 THEN 1.96 * sqrt(((s2c3 - sc3 * sc3 / n3) / (n3 - 1)) / n3) * nn / 100.0 ELSE 1e18 END AS mar3
- FROM m),
-rr AS (SELECT *,
- CASE WHEN est1 <> 0.0 AND mar1 < 1e18 THEN 100.0 * (((est1 + mar1) - (est1 - mar1)) / 2.0) / abs(est1) ELSE 1e18 END AS rel1,
- CASE WHEN est2 <> 0.0 AND mar2 < 1e18 THEN 100.0 * (((est2 + mar2) - (est2 - mar2)) / 2.0) / abs(est2) ELSE 1e18 END AS rel2,
- CASE WHEN est3 <> 0.0 AND mar3 < 1e18 THEN 100.0 * (((est3 + mar3) - (est3 - mar3)) / 2.0) / abs(est3) ELSE 1e18 END AS rel3
- FROM r),
-sel AS (SELECT *, CASE WHEN rel1 <= 2.0 AND n1 >= 50 THEN 1 WHEN rel2 <= 2.0 AND n2 >= 50 THEN 2 ELSE 3 END AS ru FROM rr)
-SELECT g AS "group", CAST(nn AS BIGINT) AS n_rows,
- CASE WHEN nn < 250 THEN exact_s ELSE CASE ru WHEN 1 THEN est1 WHEN 2 THEN est2 ELSE est3 END END AS sum_est,
- CASE WHEN nn < 250 THEN exact_s ELSE CASE ru WHEN 1 THEN est1 - mar1 WHEN 2 THEN est2 - mar2 ELSE est3 - mar3 END END AS ci_lower,
- CASE WHEN nn < 250 THEN exact_s ELSE CASE ru WHEN 1 THEN est1 + mar1 WHEN 2 THEN est2 + mar2 ELSE est3 + mar3 END END AS ci_upper,
- CAST(CASE WHEN nn < 250 THEN nn ELSE CASE ru WHEN 1 THEN n1 WHEN 2 THEN n1 + n2 ELSE n1 + n2 + n3 END END AS BIGINT) AS n_used,
- CAST(CASE WHEN nn < 250 THEN 0 ELSE ru END AS INTEGER) AS rounds_used,
- CASE WHEN nn < 250 THEN 'Exact'
-  WHEN (CASE ru WHEN 1 THEN n1 WHEN 2 THEN n2 ELSE n3 END) < 50 THEN 'InsufficientData'
-  WHEN ru = 2 AND ((est1 + mar1 < est2 - mar2) OR (est2 + mar2 < est1 - mar1)) AND est1 <> 0.0 AND abs(est2 - est1) / abs(est1) * 100.0 > 5.0 THEN 'Drifting'
-  WHEN ru = 3 AND ((est2 + mar2 < est3 - mar3) OR (est3 + mar3 < est2 - mar2)) AND est2 <> 0.0 AND abs(est3 - est2) / abs(est2) * 100.0 > 5.0 THEN 'Drifting'
-  WHEN (CASE ru WHEN 1 THEN rel1 WHEN 2 THEN rel2 ELSE rel3 END) <= 2.0 THEN 'Stable'
-  ELSE 'Drifting' END AS status
-FROM sel ORDER BY g"""
-      }),
+      Some(sumLadderOracle(
+        "CASE WHEN l_orderkey % 997 = 0 THEN 'RARE' ELSE l_returnflag END"))),
 
     QueryDef("q190_adaptive_group_avg",
       // AVG mode of the per-group adaptive CLT ladder (round-7 verdict
@@ -1133,12 +1110,12 @@ FROM sel ORDER BY g"""
         val grp = when(pmod(col("l_orderkey"), lit(997L)) === 0, lit("RARE"))
           .otherwise(col("l_returnflag"))
         graft.exec.AdaptiveExecutor.runGroupedDeterministic(
-          lineitem(s, d), col("l_extendedprice"), liKey, grp,
+          lineitem(s, d), col("l_extendedprice"), lineitemKey.column, grp,
           steps = Seq(20L, 10L, 5L), errorThresholdPct = 2.0, agg = "avg")
           .orderBy(col("group"))
       },
       Some {
-        val k = "(l_orderkey * 8191 + l_linenumber * 131)"
+        val k = lineitemKey.sql
         val xc = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
         val gx = "CASE WHEN l_orderkey % 997 = 0 THEN 'RARE' ELSE l_returnflag END"
         s"""WITH base AS (SELECT $gx AS g, $k AS k, $xc AS xc FROM lineitem),
@@ -1194,12 +1171,12 @@ FROM sel ORDER BY g"""
         val grp = when(pmod(col("l_orderkey"), lit(997L)) === 0, lit("RARE"))
           .otherwise(col("l_returnflag"))
         graft.exec.AdaptiveExecutor.runGroupedDeterministic(
-          lineitem(s, d), col("l_extendedprice"), liKey, grp,
+          lineitem(s, d), col("l_extendedprice"), lineitemKey.column, grp,
           steps = Seq(20L, 10L, 5L), errorThresholdPct = 5.0, agg = "count")
           .orderBy(col("group"))
       },
       Some {
-        val k = "(l_orderkey * 8191 + l_linenumber * 131)"
+        val k = lineitemKey.sql
         val xc = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
         val gx = "CASE WHEN l_orderkey % 997 = 0 THEN 'RARE' ELSE l_returnflag END"
         s"""WITH base AS (SELECT $gx AS g, $k AS k, $xc AS xc FROM lineitem),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Loaders for the driver-provided parquet fixtures (TESTDATA.md).
   * One parquet file per table under `/root/testdata/sf*`/.
@@ -11,6 +11,65 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** A table's declared row key: an integer expression over a few of its
+    * own columns that the key-mod designs (systematic `key % step`, block
+    * `(key / size) % skip`, priority hashes, the grouped adaptive ladder)
+    * stride over. `sql` is the one text both Spark and the DuckDB oracles
+    * evaluate; `columns` are the columns it reads. */
+  final case class RowKey(sql: String, columns: Seq[String]) {
+    def column: Column = org.apache.spark.sql.functions.expr(sql)
+  }
+
+  /** lineitem's row key. The multipliers are odd primes coprime to every
+    * step in use, so for dense orderkeys the key is uniform mod any step
+    * (a multiplier sharing a factor with the step would wipe out residue
+    * classes — ×8 makes `key % 8 == 0` impossible when l_linenumber ∈
+    * 1..7). Max value ~1.2e16 at 100 TB scale: no ANSI overflow. Reading
+    * two integer columns, a sample decodes only what the query needs.
+    *
+    * NOT UNIQUE ON EVERY FIXTURE: `(l_orderkey, l_linenumber)` is unique
+    * on a TPC-H-shaped lineitem, but the oracle fixtures repeat pairs —
+    * sf0.1 has 600,000 rows over 456,861 distinct pairs and sf0.01 60,000
+    * over 45,832, up to 6 rows per pair. Rows that share a pair share a
+    * key and are sampled together: each row is still kept with
+    * probability 1/step, so estimators stay unbiased, but the clustering
+    * widens their variance (a cluster design effect of ~1.56 on these
+    * fixtures). Residue balance on sf0.1 is as good as a random hash at
+    * that size (min/max bucket ratio 0.99 at step 10, 0.94 at step 100). */
+  val lineitemKey: RowKey = RowKey("(l_orderkey * 8191 + l_linenumber * 131)",
+    Seq("l_orderkey", "l_linenumber"))
+
+  /** Declared row keys by table name (lower case). */
+  val rowKeys: Map[String, RowKey] = Map("lineitem" -> lineitemKey)
+
+  /** The fallback key for a table with no declared row key: a content
+    * hash of the full row. Unlike `monotonically_increasing_id()` (whose
+    * values depend on the physical partitioning, so a "systematic" sample
+    * through it is neither reproducible across runs nor a fixed row set),
+    * `xxhash64(struct(cols))` is a pure function of row content — the
+    * same rows are selected on any cluster layout. It reads and hashes
+    * every column of every row. Folded to 63 bits so `pmod` arithmetic
+    * never sees Long.MinValue. */
+  def contentKey(df: DataFrame): Column = {
+    import org.apache.spark.sql.functions.{abs, col, struct, xxhash64}
+    abs(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)))
+  }
+
+  /** The sampling key of `df`, a frame over the table registered as
+    * `table`: the table's declared row key when it has one, `df` has its
+    * columns and the key evaluates to BIGINT, else [[contentKey]]. (An
+    * INT `l_orderkey` would make the key INT, and ANSI mode throws on its
+    * overflow past orderkey 262,143.) */
+  def samplingKey(table: String, df: DataFrame): Column = {
+    val have = df.columns.map(_.toLowerCase).toSet
+    rowKeys.get(table.toLowerCase)
+      .filter(_.columns.forall(c => have(c.toLowerCase)))
+      .map(_.column)
+      .filter(k => df.select(k).schema.head.dataType ==
+        org.apache.spark.sql.types.LongType)
+      .getOrElse(contentKey(df))
+  }
 
   /** Per-session relation cache (round-14 optimization): resolving a
     * parquet relation costs ~60 ms per call on this host (file listing +

@@ -1,8 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare and failures.json, a JSON object
+  * mapping each query that threw to its error message (`{}` when none
+  * did). A failed query is also reported on stderr; the exit status does
+  * not depend on failures — the compare reports a missing result. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name prefixes (local
@@ -20,13 +23,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failures = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -45,6 +51,8 @@ object Verify {
       .filter { case (k, _) => only.forall(_.exists(k.startsWith)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.exec.{AdaptiveExecutor, Estimators, Sampling, SampledFrame}
 import graft.model._
@@ -13,7 +12,7 @@ import graft.model._
   *
   * {{{
   * val aqe = AqeSession(spark)
-  * val t = aqe.table(lineitemDf, samplingKey = $"l_orderkey" * 8191 + $"l_linenumber" * 131)
+  * val t = aqe.table(lineitemDf, samplingKey = graft.Tables.lineitemKey.column)
   * t.approxSum($"l_extendedprice", SamplingStrategy.Systematic(10))      // DataFrame, 1 row
   * t.approxSumCi($"l_extendedprice", SamplingStrategy.Uniform(0.1))      // + CI columns
   * t.adaptiveSum($"l_extendedprice", errorThresholdPct = 2.0)            // ApproxResult
@@ -26,15 +25,15 @@ final case class BenchmarkRow(agg: String, exact: Double, approx: Double,
 final case class AqeSession(spark: SparkSession) {
   def table(df: DataFrame, samplingKey: Column): ApproxTable =
     ApproxTable(df, samplingKey)
-  /** No-key overload: derive the sampling key as a content hash of the full
-    * row. Unlike `monotonically_increasing_id()` (whose values depend on the
-    * physical partitioning, so a "systematic" sample through it is neither
-    * reproducible across runs nor a fixed row set), `xxhash64(struct(cols))`
-    * is a pure function of row content — the same rows are selected on any
-    * cluster layout. Folded to 63 bits so `pmod` arithmetic never sees
-    * Long.MinValue. */
-  def table(df: DataFrame): ApproxTable =
-    ApproxTable(df, abs(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))))
+  /** No-key overload: the sampling key is [[graft.Tables.contentKey]], a
+    * content hash of the full row — the fallback for a frame whose table
+    * declares no row key. A bare frame carries no table name, so this
+    * overload always hashes; it decodes every column of every row a
+    * key-mod design reads. For a registered table with a declared key
+    * ([[graft.Tables.rowKeys]], lineitem's `l_orderkey`/`l_linenumber`
+    * fold), pass `graft.Tables.samplingKey(name, df)` — the key the CLI
+    * path (`SpecExecutor`) strides over. */
+  def table(df: DataFrame): ApproxTable = ApproxTable(df, graft.Tables.contentKey(df))
 }
 
 /** Fluent approximate-query surface over one DataFrame. `samplingKey` is the

@@ -30,7 +30,7 @@ object SweepBench {
     spark.sparkContext.setLogLevel("WARN")
 
     val li = Tables.lineitem(spark, sfDir)
-    val key = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
+    val key = graft.Tables.lineitemKey.column
     val t = AqeSession(spark).table(li, key)
     val exact = li.agg(sum("l_extendedprice")).head().getDouble(0)
 

@@ -15,23 +15,27 @@ import graft.model.{AggKind, ApproxResult, ApproximationStatus, SamplingStrategy
   * STABLE / DRIFTING / INSUFFICIENT_DATA verdict.
   *
   * Mechanics are Spark-first (SURVEY §3.4, §7 M5): where the reference
-  * coordinates fast/slow thread pools through atomics, we run a *driver-side
-  * staged-fraction loop* — each round is one distributed job computing the
-  * moment sketch (n, Σx, Σx²) over a seeded Bernoulli sample; rounds grow the
-  * fraction geometrically until the relative CI half-width meets the
-  * threshold or a fraction cap is hit. Early termination = not launching the
-  * next round, which is the only way to "stop" useful work on a cluster
-  * without cross-executor signalling.
+  * coordinates fast/slow thread pools through atomics, we compute the
+  * whole ladder in ONE distributed aggregate and walk it on the driver.
+  * Rung `r` of the ladder is a seeded Bernoulli sample at fraction `f_r`
+  * (f_0 = the initial fraction, growing geometrically up to the cap);
+  * the one scan computes the population count and, for every rung, the
+  * moment sketch (n, Σx, Σx²) of the rows that rung keeps. The driver
+  * then takes the rungs in order and stops at the first whose relative
+  * CI half-width meets the threshold, or at the fraction / round cap.
+  * Every row is read once, however many rungs the estimate needs: an
+  * early stop saves driver work, not I/O — a row-level Bernoulli design
+  * has to decode every row to flip its coin.
   *
   * Drift detection mirrors scheduler.cpp:369-397: consecutive round estimates
   * are cross-validated; if the newest estimate moves more than
   * `driftTolerancePct` relative to the previous round's (its "slow pointer"),
   * the verdict is DRIFTING even when the margin converged.
   *
-  * 100 TB posture: each round reads only the sampled fraction (Bernoulli
-  * sampling is a scan-stage filter — no shuffle, no materialization), rounds
-  * are few (geometric growth), and nothing but the 3-number sketch reaches
-  * the driver.
+  * 100 TB posture: one scan stage with no shuffle of rows (the per-rung
+  * flags and conditional sums run inside it), a single-row partial
+  * aggregate per task, and nothing but the row count and at most three
+  * moments per rung reaching the driver.
   */
 object AdaptiveExecutor {
 
@@ -53,35 +57,66 @@ object AdaptiveExecutor {
     def samplesUsed: Long = result.samplesUsed
   }
 
+  /** The Bernoulli ladder's fractions: f_0 = `initialFraction`, then
+    * f_{r+1} = min(f_r · growth, maxFraction), ending at the first rung
+    * that reaches the fraction cap or the round cap. */
+  private def rungFractions(spec: SamplingStrategy.Adaptive): Vector[Double] = {
+    def capped(f: Double, rungs: Int) = f >= spec.maxFraction || rungs >= spec.maxRounds
+    var fs = Vector(spec.initialFraction)
+    while (!capped(fs.last, fs.size))
+      fs :+= math.min(fs.last * spec.growthFactor, spec.maxFraction)
+    fs
+  }
+
   def run(df: DataFrame, value: Column, agg: AggKind,
       spec: SamplingStrategy.Adaptive,
       driftTolerancePct: Double = 5.0): AdaptiveOutcome = {
+    agg match {
+      case AggKind.Sum | AggKind.Avg | AggKind.Count =>
+      case other => throw new IllegalArgumentException(s"adaptive CI undefined for $other")
+    }
     val t0 = System.nanoTime()
     val z = Estimators.zScore(spec.confidence)
+    val fractions = rungFractions(spec)
+    // Rung r keeps the rows with rand(seed + r) < f_r — an explicit rand()
+    // flag, NOT df.sample: the GraftExtensions auto-scaling rule rewrites
+    // bare aggregates over a Sample node (estimator semantics), which
+    // would corrupt this moment sketch — these aggregates must stay RAW
+    // sample moments. Spark refuses rand() inside an aggregate, so the
+    // flags are drawn in a projection first; each rand(seed + r) is drawn
+    // once per row, in scan order, as its own per-round filter would.
+    val flagged = df.select((value.as("__x") +: fractions.indices.map(r =>
+      (rand(spec.seed + r) < fractions(r)).as(s"__f$r"))): _*)
     // Known population size for the ratio estimator Σx·(N/n): under Bernoulli
     // sampling, scaling by 1/f leaves the binomial noise of n itself in a SUM
     // estimate (~±1/√n relative — dominates at small fractions); N/n cancels
     // it (the reference does the same: enhanced_aqe_cli.py:189-200, and
-    // SURVEY §2.6 B2). count(*) on parquet is footer-metadata cheap.
-    val totalN = df.count().toDouble
-    var fraction = spec.initialFraction
+    // SURVEY §2.6 B2). It rides the same aggregate as the rung moments.
+    // COUNT's estimate and margin read only n: its sums are not computed.
+    val moments = fractions.indices.flatMap { r =>
+      val x = when(col(s"__f$r"), col("__x"))
+      count(x).cast("double").as(s"n$r") +: (
+        if (agg == AggKind.Count) Nil
+        else Seq(sum(x).cast("double").as(s"s$r"),
+          sum(x * x).cast("double").as(s"s2_$r")))
+    }
+    val m = flagged.agg(count(lit(1)).cast("double").as("total"), moments: _*)
+      .head()
+    // a missing (COUNT) or NULL (empty rung) sum reads as 0
+    def moment(name: String): Double =
+      Some(m.schema.fieldNames.indexOf(name)).filter(i => i >= 0 && !m.isNullAt(i))
+        .fold(0.0)(m.getDouble(_))
+    val totalN = moment("total")
+
     var rounds = Vector.empty[Round]
     var done = false
-
     while (!done) {
-      // Bernoulli sample as an explicit rand() filter, NOT df.sample: the
-      // GraftExtensions auto-scaling rule rewrites bare aggregates over a
-      // Sample node (estimator semantics), which would corrupt this moment
-      // sketch — these aggregates must stay RAW sample moments.
-      val sampled = df.filter(rand(spec.seed + rounds.size) < fraction)
+      val r = rounds.size
+      val fraction = fractions(r)
       val scaleFactor = 1.0 / fraction
-      val m = sampled.agg(
-        count(value).cast("double").as("n"),
-        sum(value).cast("double").as("s"),
-        sum(value * value).cast("double").as("s2")).head()
-      val n = m.getDouble(0)
-      val s = if (m.isNullAt(1)) 0.0 else m.getDouble(1)
-      val s2 = if (m.isNullAt(2)) 0.0 else m.getDouble(2)
+      val n = moment(s"n$r")
+      val s = moment(s"s$r")
+      val s2 = moment(s"s2_$r")
       val mean = if (n > 0) s / n else 0.0
       val variance = if (n > 1) (s2 - s * s / n) / (n - 1) else 0.0
       val se = if (n > 0) math.sqrt(variance / n) else Double.PositiveInfinity
@@ -91,16 +126,13 @@ object AdaptiveExecutor {
         case AggKind.Sum   =>
           if (n > 0) (s * (totalN / n), z * se * totalN)
           else (0.0, Double.PositiveInfinity)
-        case AggKind.Count => (n * scaleFactor,
+        case _ => (n * scaleFactor,
           z * scaleFactor * math.sqrt(n * (1.0 - fraction)))
-        case other => throw new IllegalArgumentException(s"adaptive CI undefined for $other")
       }
       val relPct = Estimators.relativeMarginPct(estimate, estimate - margin, estimate + margin)
       rounds :+= Round(fraction, n.toLong, estimate, estimate - margin, estimate + margin, relPct)
       val converged = relPct <= spec.errorThresholdPct && n >= 50
-      val capped = fraction >= spec.maxFraction || rounds.size >= spec.maxRounds
-      done = converged || capped
-      if (!done) fraction = math.min(fraction * spec.growthFactor, spec.maxFraction)
+      done = converged || rounds.size == fractions.size
     }
 
     // Drift = the rounds statistically disagree: the previous round's CI and
@@ -149,9 +181,10 @@ object AdaptiveExecutor {
     * Mechanics per round: ONE distributed job computes the cents moment
     * sketch (n, Σxc, Σxc²) for every still-active group over the round's
     * systematic sample (`key % step == 0`); converged groups leave the
-    * active set, so later (denser, costlier) rounds scan only for the
-    * groups that still need them — at 100 TB a round-k stop is a skipped
-    * scan of a larger sample, exactly like the scalar ladder.
+    * active set, so later (denser) rounds aggregate only the groups that
+    * still need them. The `key % step` filter runs after decode, so every
+    * round still reads the whole table: a round-k stop saves the later
+    * rounds' compute and jobs, not their I/O.
     *
     * Small groups (fewer than `exactBelow` rows, default 50·min(steps) —
     * below which even the densest round cannot reach the n ≥ 50 CLT
@@ -486,8 +519,9 @@ object AdaptiveExecutor {
     * (|x| < ~3e7), which every TPC-H monetary column satisfies.
     *
     * Early termination is preserved: convergence at round k means rounds
-    * k+1… are never launched — at 100 TB each skipped round is a skipped
-    * scan of a larger sample. */
+    * k+1… are never launched. Each round's `key % step` filter runs after
+    * decode, so a launched round reads the whole table; a stop saves the
+    * later rounds' compute, not I/O. */
   def runDeterministic(df: DataFrame, value: Column, key: Column,
       steps: Seq[Long] = Seq(20L, 10L, 5L),
       errorThresholdPct: Double = 2.0,

@@ -14,13 +14,20 @@ import graft.model.{AggKind, ApproxSpec, SamplingStrategy}
   * `spec.countExactCompat` the stored exact total is returned for COUNT under
   * sampling, as the enhanced CLI does; default is the documented scaling
   * contract.
+  *
+  * Every key-based design (systematic, block, priority, grouped adaptive)
+  * strides over [[graft.Tables.samplingKey]]: the queried table's declared
+  * row key when it has one (lineitem's `l_orderkey`/`l_linenumber` fold —
+  * two integer columns, so the sample scan keeps Catalyst's column
+  * pruning), else the full-row content hash.
   */
 object SpecExecutor {
 
   def run(spark: SparkSession, spec: ApproxSpec): DataFrame = {
     val base0 = spark.table(spec.table)
     val base = spec.where.map(w => base0.filter(expr(w))).getOrElse(base0)
-    val t = AqeSession(spark).table(base)
+    val key = graft.Tables.samplingKey(spec.table, base)
+    val t = AqeSession(spark).table(base, key)
     val valueCol = if (spec.column == "*") lit(1L) else col(spec.column)
     val alias = s"${spec.agg.sqlName}_${if (spec.column == "*") "all" else spec.column}"
 
@@ -65,12 +72,11 @@ object SpecExecutor {
           "file-level sampling does not support GROUP BY (group coverage per " +
             "file is not controlled); use a row-level design (--method systematic)")
       case (grp, p: SamplingStrategy.Priority) =>
-        // fixed-size weighted design: content-hash key (same rationale as
-        // AqeSession's no-key table — reproducible on any partitioning),
-        // weight = the aggregated value (COUNT weights every row 1, where
-        // the design degenerates to uniform-without-replacement — still
-        // unbiased via the same threshold estimator)
-        val pkey = abs(xxhash64(struct(base.columns.map(col).toIndexedSeq: _*)))
+        // fixed-size weighted design over the sampling key (reproducible
+        // on any partitioning), weight = the aggregated value (COUNT
+        // weights every row 1, where the design degenerates to
+        // uniform-without-replacement — still unbiased via the same
+        // threshold estimator)
         val weight = spec.agg match {
           // the design's domain is non-negative weights (a negative weight
           // gets a negative priority, is never sampled, and silently biases
@@ -87,7 +93,7 @@ object SpecExecutor {
         }
         grp match {
           case None =>
-            val top = Sampling.prioritySample(base, pkey, weight, p.k)
+            val top = Sampling.prioritySample(base, key, weight, p.k)
             Sampling.prioritySumEstimate(top, p.k)
               .select(col("sum_est").as(alias), col("n_used").as(s"${alias}_n"))
           case Some(g) =>
@@ -95,7 +101,7 @@ object SpecExecutor {
             // group gets its own size-k sample and threshold τ_g
             // (Skew.priorityPerKey, shard-salted two-phase top-(k+1); a
             // hot group never pins one reducer)
-            graft.operators.Skew.priorityPerKey(base, Seq(g), pkey, weight, p.k)
+            graft.operators.Skew.priorityPerKey(base, Seq(g), key, weight, p.k)
               .select(col(g), col("sum_est").as(alias),
                 col("n_used").as(s"${alias}_n"))
               .orderBy(col(g))
@@ -110,8 +116,8 @@ object SpecExecutor {
       case (Some(g), a: SamplingStrategy.Adaptive) =>
         // GROUP BY adaptive: the per-group deterministic CLT ladder
         // (AdaptiveExecutor.runGroupedDeterministic) — each group stops at
-        // ITS first converged round, sub-floor groups route exact. Key =
-        // content hash (the no-key rationale above). SUM is the expansion
+        // ITS first converged round, sub-floor groups route exact, over
+        // the sampling key. SUM is the expansion
         // estimator, AVG the same moment ladder with a mean (ratio) CI and
         // no scale factor, COUNT the n-moment alone with a
         // finite-population Bernoulli margin.
@@ -123,10 +129,9 @@ object SpecExecutor {
             s"grouped adaptive undefined for $other (SUM/AVG/COUNT only — " +
               "use a row-level design for other aggregates)")
         }
-        val akey = abs(xxhash64(struct(base.columns.map(col).toIndexedSeq: _*)))
         // valueCol is already lit(1L) for COUNT(*); for COUNT(col) the
         // ladder's count(xc) moment is non-null-aware, matching SQL
-        AdaptiveExecutor.runGroupedDeterministic(base, valueCol, akey,
+        AdaptiveExecutor.runGroupedDeterministic(base, valueCol, key,
             col(g), errorThresholdPct = a.errorThresholdPct,
             confidence = a.confidence, agg = ladderAgg)
           .select(col("group").as(g), col("sum_est").as(alias),

@@ -339,8 +339,14 @@ object Ann {
     import graft.functions.TopCentroids
     require(codec == "float" || codec == "int8", s"unknown codec $codec")
     requireIntegralId(corpus, idCol, "buildIvfIndex")
+    val vectors = requireIndexableVectors(corpus, idCol, vecCol,
+      "buildIvfIndex")
     val spark = corpus.sparkSession
     val fs = hadoopFs(spark, path)
+    // trained before the reset: training reads every vector, so a
+    // refused one fails the build while an existing index stays intact
+    val centroids = lloydCentroids(vectors, idCol, vecCol, numCentroids,
+      lloydIters)
     // full reset, manifests FIRST: with no manifest the path reads as
     // "not built", so a crash anywhere inside a rebuild is retried as a
     // rebuild (idempotent overwrite) instead of upserting over rubble
@@ -348,8 +354,6 @@ object Ann {
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/$m"), false))
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/corpus"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/blooms"), true)
-    val centroids = lloydCentroids(corpus, idCol, vecCol, numCentroids,
-      lloydIters)
     val flat = centroids.flatten.toArray
     import spark.implicits._
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/centroids"), true)
@@ -380,7 +384,7 @@ object Ann {
     // maintenance ops never stack staging generations in cluster
     // storage (stacked frames also shifted suite-wide GC in the r11
     // bench — see PLANS.md round-12 notes).
-    val content = corpus.select(col(idCol).as("id"), payload,
+    val content = vectors.select(col(idCol).as("id"), payload,
         assign.as("cid"))
       .staged
     try {
@@ -1036,6 +1040,8 @@ object Ann {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
     requireIntegralId(newVecs, idCol, "appendToIvfIndex")
+    val vectors = requireIndexableVectors(newVecs, idCol, vecCol,
+      "appendToIvfIndex")
     val spark = newVecs.sparkSession
     val meta = readManifest(spark, path)
     val (metaGen, gens) = (meta.gen, meta.gens)
@@ -1065,7 +1071,7 @@ object Ann {
         Seq(lit(c), lit(g)) }: _*), col("cid")), lit(newGen))
     // assigned once (eager checkpoint): the touched-cid collect below and
     // the content write both consume this frame
-    val assigned = newVecs.select(col(idCol).as("id"), payload,
+    val assigned = vectors.select(col(idCol).as("id"), payload,
       assign.as("cid")).staged
     try {
     val batchCids = assigned.select(col("cid")).distinct()
@@ -1100,6 +1106,23 @@ object Ann {
         meta.copy(gen = newGen, gens = gens ++ appeared.map(_ -> newGen)))
     }
     } finally graft.Checkpoints.release(assigned)
+  }
+
+  /** `df` with `vecCol` refused, naming `op` and the row's id, wherever a
+    * vector is null or has a NaN component. A NaN scores NaN against every
+    * centroid, so [[graft.functions.TopCentroids]] finds no nearest list;
+    * a null vector has no list at all. The check is a projection: it runs
+    * in the first pass that reads the vectors and adds no job. Spark
+    * orders NaN above every number, so `array_max` is NaN exactly when a
+    * component is. */
+  private def requireIndexableVectors(df: DataFrame, idCol: String,
+      vecCol: String, op: String): DataFrame = {
+    val v = col(vecCol)
+    df.withColumn(vecCol, when(v.isNull || isnan(array_max(v)),
+      raise_error(concat(lit(s"$op: the vector of id "),
+        coalesce(col(idCol).cast("string"), lit("null")),
+        lit(s" in column '$vecCol' is null or has a NaN component; an IVF " +
+          "index cannot place it in any list")))).otherwise(v))
   }
 
   /** Fail loudly when `idCol` is not integral: index ids are normalized
@@ -1218,6 +1241,8 @@ object Ann {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
     requireIntegralId(newVecs, idCol, "upsertIntoIvfIndex")
+    val vectors = requireIndexableVectors(newVecs, idCol, vecCol,
+      "upsertIntoIvfIndex")
     val spark = newVecs.sparkSession
     val meta = readManifest(spark, path)
     val (metaGen, gens) = (meta.gen, meta.gens)
@@ -1234,7 +1259,7 @@ object Ann {
     // frame — without it each branch re-runs the assignment scan of the
     // batch (batch-sized blocks; a lost executor just retries the batch,
     // the same acceptance as StreamingCuration.curateBatch)
-    val incoming = newVecs.select(col(idCol).as("id"), payload,
+    val incoming = vectors.select(col(idCol).as("id"), payload,
       assign.as("cid")).staged
     // unhinted joins: the incoming batch is unbounded at the 100 TB
     // posture (mass recrawls) — AQE picks the strategy (round-8 ADVICE)
@@ -1445,15 +1470,16 @@ object Ann {
       vec: org.apache.spark.sql.catalyst.util.ArrayData, cids: Array[Int])
 
   /** Probe routing, the ONE place probes map to inverted lists: the
-    * projection `(id, vecCol)` is collected to the driver once — the probe
-    * set is small by contract; a local frame collects without a job, a
-    * distributed one in one — and each row is routed there by
+    * projection `(idCol, vecCol)` is collected to the driver once — the
+    * probe set is small by contract; a local frame collects without a job,
+    * a distributed one in one — and each row is routed there by
     * [[graft.functions.TopCentroids.top]], the function the expression
-    * evaluates. A row with a null vector routes nowhere, as the
-    * expression's explode drops it. Returns the routed rows and whether
-    * the vectors hold floats (else doubles). */
-  private def routeProbes(probes: DataFrame, id: Column, vecCol: String,
-      flat: Array[Double], numCentroids: Int,
+    * evaluates. A probe whose vector is null or has a NaN component has no
+    * nearest list and is refused, naming its id. Ids are kept as longs
+    * when `keepIds` (else null). Returns the routed rows and whether the
+    * vectors hold floats (else doubles). */
+  private def routeProbes(probes: DataFrame, idCol: String, keepIds: Boolean,
+      vecCol: String, flat: Array[Double], numCentroids: Int,
       nProbe: Int): (Seq[RoutedProbe], Boolean) = {
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
@@ -1466,13 +1492,22 @@ object Ann {
       case other => throw new IllegalArgumentException(
         s"top_centroids expects array<float|double>, got $other")
     }
-    val rows = probes.select(id, col(vecCol)).collect()
-    (rows.iterator.filterNot(_.isNullAt(1)).map { r =>
+    val rows = probes.select(col(idCol), col(vecCol)).collect()
+    (rows.iterator.map { r =>
+      def refuse(why: String): Nothing = throw new IllegalArgumentException(
+        s"IVF probe routing: the vector of probe id ${r.get(0)} in column " +
+          s"'$vecCol' $why; it has no nearest list")
+      if (r.isNullAt(1)) refuse("is null")
       val v =
         if (vFloat) UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)
         else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray)
-      RoutedProbe(if (r.isNullAt(0)) null else r.getLong(0), v,
-        TopCentroids.top(v, vFloat, flat, numCentroids, nProbe))
+      if ((0 until v.numElements()).exists(i =>
+          if (vFloat) v.getFloat(i).isNaN else v.getDouble(i).isNaN))
+        refuse("has a NaN component")
+      RoutedProbe(
+        if (!keepIds || r.isNullAt(0)) null
+        else r.get(0).asInstanceOf[Number].longValue,
+        v, TopCentroids.top(v, vFloat, flat, numCentroids, nProbe))
     }.toVector, vFloat)
   }
 
@@ -1484,7 +1519,7 @@ object Ann {
       probes: DataFrame, idCol: String, vecCol: String, nProbe: Int): Long = {
     val (flat, numCentroids, _) =
       loadCentroids(spark, path, readManifest(spark, path))
-    routeProbes(probes, lit(null).cast("long"), vecCol, flat, numCentroids,
+    routeProbes(probes, idCol, keepIds = false, vecCol, flat, numCentroids,
       nProbe)._1.flatMap(_.cids).distinct.size.toLong
   }
 
@@ -1525,7 +1560,7 @@ object Ann {
     // ids normalized to long (as bruteForceTopKFast does) so callers with
     // int id columns — and autoTuneNProbe's getLong decode — never hit a
     // runtime cast error; a no-op for the bigint fixture ids
-    val (routed, vFloat) = routeProbes(probes, col(idCol).cast("long"),
+    val (routed, vFloat) = routeProbes(probes, idCol, keepIds = true,
       vecCol, flat, numCentroids, nProbe)
     // the probe payload mirrors the stored codec: float probes against
     // float lists (bit-identical to ivfTopK), coded probes against coded

@@ -35,7 +35,88 @@ class AdaptiveSpec extends SparkSpec {
     assert(math.abs(out.result.value - exact) / exact < 0.10)
   }
 
-  private def liKey = col("l_orderkey") * lit(8191L) + col("l_linenumber") * lit(131L)
+  /** The per-round Bernoulli ladder as one scan per round: `df.count()`,
+    * then round r filters `rand(seed + r) < f_r` and aggregates its
+    * moments, stopping at the first converged round or the cap. The
+    * reference semantics [[AdaptiveExecutor.run]]'s one-scan ladder must
+    * reproduce round for round. */
+  private def perRoundLadder(df: org.apache.spark.sql.DataFrame,
+      value: org.apache.spark.sql.Column, agg: AggKind,
+      spec: SamplingStrategy.Adaptive): AdaptiveExecutor.AdaptiveOutcome = {
+    val z = graft.exec.Estimators.zScore(spec.confidence)
+    val totalN = df.count().toDouble
+    var fraction = spec.initialFraction
+    var rounds = Vector.empty[AdaptiveExecutor.Round]
+    var done = false
+    while (!done) {
+      val m = df.filter(rand(spec.seed + rounds.size) < fraction).agg(
+        count(value).cast("double"), sum(value).cast("double"),
+        sum(value * value).cast("double")).head()
+      val n = m.getDouble(0)
+      val s = if (m.isNullAt(1)) 0.0 else m.getDouble(1)
+      val s2 = if (m.isNullAt(2)) 0.0 else m.getDouble(2)
+      val variance = if (n > 1) (s2 - s * s / n) / (n - 1) else 0.0
+      val se = if (n > 0) math.sqrt(variance / n) else Double.PositiveInfinity
+      val (est, margin) = agg match {
+        case AggKind.Avg => (if (n > 0) s / n else 0.0, z * se)
+        case AggKind.Sum =>
+          if (n > 0) (s * (totalN / n), z * se * totalN)
+          else (0.0, Double.PositiveInfinity)
+        case _ => (n * (1.0 / fraction),
+          z * (1.0 / fraction) * math.sqrt(n * (1.0 - fraction)))
+      }
+      val rel = graft.exec.Estimators.relativeMarginPct(est, est - margin,
+        est + margin)
+      rounds :+= AdaptiveExecutor.Round(fraction, n.toLong, est, est - margin,
+        est + margin, rel)
+      done = (rel <= spec.errorThresholdPct && n >= 50) ||
+        fraction >= spec.maxFraction || rounds.size >= spec.maxRounds
+      if (!done) fraction = math.min(fraction * spec.growthFactor, spec.maxFraction)
+    }
+    val last = rounds.last
+    val drifted = rounds.size >= 2 && {
+      val prev = rounds(rounds.size - 2)
+      (prev.ciUpper < last.ciLower || last.ciUpper < prev.ciLower) &&
+        prev.estimate != 0.0 &&
+        math.abs(last.estimate - prev.estimate) / math.abs(prev.estimate) * 100.0 > 5.0
+    }
+    val status =
+      if (last.n < 50) ApproximationStatus.InsufficientData
+      else if (drifted) ApproximationStatus.Drifting
+      else if (last.relMarginPct <= spec.errorThresholdPct) ApproximationStatus.Stable
+      else ApproximationStatus.Drifting
+    AdaptiveExecutor.AdaptiveOutcome(graft.model.ApproxResult(last.estimate,
+      last.ciLower, last.ciUpper, spec.confidence, rounds.map(_.n).sum,
+      status, 0L), rounds)
+  }
+
+  test("one-scan Bernoulli ladder equals the per-round ladder round for round, in at most 2 jobs") {
+    val li01 = Tables.lineitem(spark, sf001)
+    val aggs = Seq((AggKind.Sum, col("l_extendedprice")),
+      (AggKind.Avg, col("l_quantity")), (AggKind.Count, lit(1L)))
+    val wheres = Seq(None, Some("l_quantity BETWEEN 10 AND 30"),
+      Some("l_discount BETWEEN 0.02 AND 0.06"))
+    val seeds = Seq(42L, 7L, 1234L)
+    val thresholds = Seq(0.5, 2.0, 5.0)
+    var roundCounts = Set.empty[Int]
+    for ((agg, value) <- aggs; (where, w) <- wheres.zipWithIndex;
+         (seed, i) <- seeds.zipWithIndex) {
+      val df = where.fold(li01)(c => li01.filter(expr(c)))
+      val spec = SamplingStrategy.Adaptive(
+        errorThresholdPct = thresholds((i + w) % thresholds.size), seed = seed)
+      val want = perRoundLadder(df, value, agg, spec)
+      val (got, jobs) = jobsDuring(AdaptiveExecutor.run(df, value, agg, spec))
+      val label = s"$agg where=$where seed=$seed"
+      assert(got.rounds === want.rounds, label)
+      assert(got.result.copy(millis = 0L) === want.result, label)
+      assert(jobs.jobs <= 2, s"$label ran ${jobs.jobs} jobs")
+      roundCounts += got.rounds.size
+    }
+    // the mix stops early and climbs the ladder
+    assert(roundCounts.contains(1) && roundCounts.exists(_ >= 3), roundCounts)
+  }
+
+  private def liKey = Tables.lineitemKey.column
 
   test("deterministic ladder: bit-identical across runs, CI covers exact, early stop") {
     val exact = li.agg(sum(col("l_extendedprice").cast("decimal(18,2)"))
@@ -234,8 +315,7 @@ class AdaptiveSpec extends SparkSpec {
 
   test("AqeSession.adaptiveAggBy routes the grouped ladder (API parity with the CLI)") {
     import org.apache.spark.sql.functions._
-    val t = graft.api.AqeSession(spark).table(li,
-      col("l_orderkey") * 8191 + col("l_linenumber") * 131)
+    val t = graft.api.AqeSession(spark).table(li, Tables.lineitemKey.column)
     val out = t.adaptiveAggBy(graft.model.AggKind.Avg,
         col("l_extendedprice"), col("l_returnflag"), errorThresholdPct = 5.0)
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap

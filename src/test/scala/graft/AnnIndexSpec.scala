@@ -688,6 +688,63 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
+  test("null and NaN vectors are refused by id in build, append, upsert and probe routing; the index stays intact") {
+    val vPath = tmpPath("ivf_bad_vectors")
+    val slice = embs.filter(col("vec_id") < 300)
+    val dim = slice.select(size(col("embedding"))).head().getInt(0)
+    val nan = array((lit(Float.NaN) +: Seq.fill(dim - 1)(lit(0f))): _*)
+    val nul = lit(null).cast(slice.schema("embedding").dataType)
+    def spoil(df: org.apache.spark.sql.DataFrame, id: Long,
+        v: org.apache.spark.sql.Column) = df.withColumn("embedding",
+      when(col("vec_id") === id, v).otherwise(col("embedding")))
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    def refused(op: String, id: Long)(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      assert(messages(e).exists(m => m.contains(op) && m.contains(s"id $id ") &&
+        (m.contains("null") || m.contains("NaN"))), messages(e))
+    }
+    Ann.buildIvfIndex(slice, "vec_id", "embedding", vPath, numCentroids = 8)
+    val before = Ann.readIndexCorpus(spark, vPath).count()
+    Seq(nan, nul).foreach { bad =>
+      // a refused rebuild leaves the existing index readable
+      refused("buildIvfIndex", 7L) {
+        Ann.buildIvfIndex(spoil(slice, 7L, bad), "vec_id", "embedding", vPath,
+          numCentroids = 8)
+      }
+      refused("buildIvfIndex", 250L) {
+        Ann.buildIvfIndex(spoil(slice, 250L, bad), "vec_id", "embedding",
+          vPath, numCentroids = 8, lloydIters = 0)
+      }
+      val fresh = embs.filter(col("vec_id").between(300, 310))
+        .withColumn("vec_id", col("vec_id") + 1000)
+      refused("appendToIvfIndex", 1305L) {
+        Ann.appendToIvfIndex(spoil(fresh, 1305L, bad), "vec_id", "embedding",
+          vPath)
+      }
+      refused("upsertIntoIvfIndex", 5L) {
+        Ann.upsertIntoIvfIndex(spoil(slice.filter(col("vec_id") < 10), 5L,
+          bad), "vec_id", "embedding", vPath)
+      }
+      val probes = spoil(slice.filter(col("vec_id") < 3), 1L, bad)
+      refused("probe routing", 1L) {
+        Ann.searchIvfIndex(spark, vPath, probes, "vec_id", "embedding", k = 3)
+      }
+      refused("probe routing", 1L) {
+        Ann.probedCidCount(spark, vPath, probes, "vec_id", "embedding",
+          nProbe = 2)
+      }
+      assert(Ann.readIndexCorpus(spark, vPath).count() === before)
+    }
+    // clean inputs still pass every entry point
+    val probes = slice.filter(col("vec_id") < 3)
+    assert(Ann.searchIvfIndex(spark, vPath, probes, "vec_id", "embedding",
+      k = 3).count() > 0)
+    Ann.upsertIntoIvfIndex(slice.filter(col("vec_id") < 10), "vec_id",
+      "embedding", vPath)
+    assert(Ann.readIndexCorpus(spark, vPath).count() === before)
+  }
+
   test("index search prunes at the path level: only probed lists are opened") {
     val probes = embs.filter(col("vec_id") < 3)
     Ann.buildIvfIndex(embs, "vec_id", "embedding", path, numCentroids = 32)

@@ -117,6 +117,73 @@ class SpecExecutorSpec extends SparkSpec {
     assert(sampledSum(df) === sampledSum(df.coalesce(1)))
   }
 
+  test("CLI samples over registered lineitem stride its declared row key; undeclared tables keep the content hash") {
+    import org.apache.spark.sql.functions._
+    import graft.model.SamplingStrategy
+    // a session of its own, so its lineitem view (sf0.01) leaves the
+    // suite's sf0.001 views alone
+    val s = spark.newSession()
+    val li = Tables.lineitem(s, sf001)
+    li.createOrReplaceTempView("lineitem")
+    li.createOrReplaceTempView("lineitem_multi")
+    val key = Tables.lineitemKey.column
+    val steps = 2 to 100
+    val counts = li.agg(count(lit(1)), steps.map(st =>
+        count(when(pmod(key, lit(st.toLong)) === 0, lit(1)))): _*)
+      .head().toSeq.map(_.asInstanceOf[Long])
+    val (n, kept) = (counts.head.toDouble, counts.tail)
+    // rows sharing (l_orderkey, l_linenumber) share a key and are sampled
+    // together: the kept count's variance grows by the design effect
+    // Σc²/Σc over the key's clusters (~1.56 on this fixture)
+    val deff = li.groupBy(key).count().agg(
+        sum(col("count") * col("count")).cast("double") / sum(col("count")))
+      .head().getDouble(0)
+    def cli(sql: String, sampling: SamplingStrategy) =
+      SpecExecutor.run(s, QueryParser.parse(sql).copy(sampling = sampling))
+    steps.zip(kept).foreach { case (st, k) =>
+      val sys = SamplingStrategy.Systematic(st.toLong)
+      // exactly the pmod(key, step) = 0 rows: their count, and their
+      // orderkey sum (an exact integer in double), scaled by the step
+      assert(cli("SELECT COUNT(*) FROM lineitem", sys).head().getDouble(0) ===
+        k.toDouble * st, s"step $st")
+      val keySum = li.filter(pmod(key, lit(st.toLong)) === 0)
+        .agg(sum(col("l_orderkey"))).head().getLong(0)
+      assert(cli("SELECT SUM(l_orderkey) FROM lineitem", sys).head()
+        .getDouble(0) === keySum.toDouble * st, s"step $st")
+      // kept fraction near 1/step: within 3%, or within 4 binomial
+      // standard errors widened by the design effect where 3% is below
+      // the sampling noise (at step 100 one standard error is ~5%)
+      val rel = math.abs(k / n * st - 1.0)
+      val tol = math.max(0.03, 4.0 * math.sqrt(deff * (st - 1) / n))
+      assert(rel <= tol, s"step $st kept $k of $n: off 1/step by $rel > $tol")
+    }
+    // the sample scans read the key's columns, never hash the full row
+    Seq(SamplingStrategy.Systematic(10L), SamplingStrategy.Block(64L, 10L))
+      .foreach { design =>
+        val plan = cli("SELECT SUM(l_extendedprice) FROM lineitem", design)
+          .queryExecution.executedPlan.toString
+        assert(!plan.contains("xxhash64") && !plan.contains("l_comment"), plan)
+      }
+    // an undeclared table (same columns, another name) keeps the
+    // content hash: exactly the rows pmod(contentKey, step) = 0 selects
+    val contentKept = li.filter(pmod(Tables.contentKey(li), lit(10L)) === 0)
+      .count()
+    assert(contentKept != kept(10 - 2), "the two keys must pick different rows")
+    assert(cli("SELECT COUNT(*) FROM lineitem_multi",
+      SamplingStrategy.Systematic(10L)).head().getDouble(0) === contentKept * 10.0)
+    val multiPlan = cli("SELECT SUM(l_extendedprice) FROM lineitem_multi",
+      SamplingStrategy.Systematic(10L)).queryExecution.executedPlan.toString
+    assert(multiPlan.contains("xxhash64"), multiPlan)
+    // a lineitem whose key would be INT (overflowing under ANSI) keeps the
+    // content hash too
+    val liInt = li.withColumn("l_orderkey", col("l_orderkey").cast("int"))
+    liInt.createOrReplaceTempView("lineitem")
+    val intKept = liInt.filter(pmod(Tables.contentKey(liInt), lit(10L)) === 0)
+      .count()
+    assert(cli("SELECT COUNT(*) FROM lineitem",
+      SamplingStrategy.Systematic(10L)).head().getDouble(0) === intKept * 10.0)
+  }
+
   test("--error routes through the adaptive executor with status column") {
     ensureTables()
     val spec = QueryParser.parse("SELECT SUM(l_extendedprice) FROM lineitem",
@@ -249,7 +316,7 @@ class SpecExecutorSpec extends SparkSpec {
     assert(math.abs(r1.getDouble(0) / exact - 1.0) < 0.15,
       s"est ${r1.getDouble(0)} vs exact $exact")
     assert(r1.getLong(1) === 500L)
-    // deterministic: content-hash priorities, same answer every run
+    // deterministic: key-hash priorities, same answer every run
     val r2 = SpecExecutor.run(spark, spec).head()
     assert(r1.getDouble(0) === r2.getDouble(0))
     // COUNT degenerates to uniform-without-replacement, still unbiased-ish
