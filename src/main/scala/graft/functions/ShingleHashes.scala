@@ -267,6 +267,54 @@ case class SortedLongJaccardGE(left: Expression, right: Expression,
   override def prettyName: String = "jaccard_sorted_hashes_ge"
 }
 
+/** How many elements of a long array occur in a fixed SORTED DISTINCT
+  * long set — the per-doc probe of a doc's [[WordNgramHashes]] against
+  * an eval set's n-gram hashes ([[graft.operators.Decontam
+  * .keepUncontaminated]]). One binary search per element, so a doc costs
+  * O(|doc| log |set|) with no explode and no join. Over distinct input
+  * elements (the [[WordNgramHashes]] contract) the count is the doc's
+  * overlap count. The set is a reference object of the generated class,
+  * so the class text does not depend on the set's contents. */
+case class SortedLongHits(child: Expression, set: Array[Long])
+    extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"sorted_long_hits expects array<bigint>, got $other")
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    SortedLongHits.count(input.asInstanceOf[ArrayData], set)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val setRef = ctx.addReferenceObj("hitSet", set, "long[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.SortedLongHits.count($a, $setRef);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SortedLongHits =
+    copy(child = newChild)
+
+  override def prettyName: String = "sorted_long_hits"
+}
+
+object SortedLongHits {
+  /** Static kernel shared by eval and generated code. */
+  def count(a: ArrayData, set: Array[Long]): Int = {
+    var hits = 0
+    var i = 0
+    while (i < a.numElements()) {
+      if (!a.isNullAt(i) &&
+        java.util.Arrays.binarySearch(set, a.getLong(i)) >= 0) hits += 1
+      i += 1
+    }
+    hits
+  }
+}
+
 /** POSITIONAL k-gram fold hashes of a string — the scan-stage kernel
   * behind [[graft.operators.Dedup.removeDuplicatedSpans]]: element i is
   * [[StringFoldHash]] of the space-joined k-gram starting at word i

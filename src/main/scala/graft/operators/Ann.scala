@@ -204,11 +204,13 @@ object Ann {
       ColumnShim.column(TopCentroids(
         ColumnShim.expression(col(vecCol)), flat, numCentroids, nP))
 
-    val flat = lloydCentroids(corpus, idCol, vecCol, numCentroids,
+    val vectors = requireIndexableVectors(corpus, idCol, vecCol, "ivfTopK")
+    val flat = lloydCentroids(vectors, idCol, vecCol, numCentroids,
       lloydIters).flatten.toArray
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"),
+    val c = vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"),
       topCentroidsCol(flat, 1).getItem(0).as("cid"))
-    val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("pvec"),
+    val p = requireIndexableVectors(probes, idCol, vecCol, "ivfTopK")
+      .select(col(idCol).as("query_id"), col(vecCol).as("pvec"),
       explode(topCentroidsCol(flat, nProbe)).as("cid"))
     val scored = c.join(broadcast(p), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -243,12 +245,15 @@ object Ann {
       ColumnShim.column(TopCentroids(
         ColumnShim.expression(col(vecCol)), flat, numCentroids, nP))
 
-    val flat = lloydCentroids(corpus, idCol, vecCol, numCentroids,
+    val vectors = requireIndexableVectors(corpus, idCol, vecCol,
+      "ivfTopKInt8")
+    val flat = lloydCentroids(vectors, idCol, vecCol, numCentroids,
       lloydIters).flatten.toArray
-    val c = corpus.select(col(idCol).as("neighbor_id"),
+    val c = vectors.select(col(idCol).as("neighbor_id"),
       VectorOps.int8Code(col(vecCol)).as("ccode"),
       topCentroidsCol(flat, 1).getItem(0).as("cid"))
-    val p = probes.select(col(idCol).as("query_id"),
+    val p = requireIndexableVectors(probes, idCol, vecCol, "ivfTopKInt8")
+      .select(col(idCol).as("query_id"),
       VectorOps.int8Code(col(vecCol)).as("pcode"),
       explode(topCentroidsCol(flat, nProbe)).as("cid"))
     val scored = c.join(broadcast(p), Seq("cid"))
@@ -1810,11 +1815,12 @@ object Ann {
       maxBucket: Int = Dedup.MaxBucket): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
-    val flat = lloydCentroids(df, idCol, vecCol, numCentroids,
+    val vectors = requireIndexableVectors(df, idCol, vecCol, "semDedupPairs")
+    val flat = lloydCentroids(vectors, idCol, vecCol, numCentroids,
       lloydIters).flatten.toArray
     val cid = ColumnShim.column(TopCentroids(
       ColumnShim.expression(col(vecCol)), flat, numCentroids, 1)).getItem(0)
-    val pairs = df
+    val pairs = vectors
       .select(col(idCol), cid.as("bucket"))
       .groupBy(col("bucket"))
       .agg(sort_array(collect_list(col(idCol))).as("ids"))

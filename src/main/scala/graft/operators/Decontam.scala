@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints.StageOps
@@ -153,6 +153,32 @@ object Decontam {
       .filter(col("n_overlap") * 100 > lit(maxOverlapPct.toLong) * col("n_grams"))
       .select(col(idCol))
     train.join(broadcast(flagged), Seq(idCol), "left_anti")
+  }
+
+  /** The eval side of [[decontaminate]] as one driver array: the sorted
+    * distinct n-gram hashes ([[Dedup.shingleHashes64]]) of every eval doc.
+    * The eval set is bounded by the same contract that lets
+    * [[contamination]] broadcast it; a local eval frame collects with no
+    * Spark job. */
+  private[graft] def evalGramHashes(eval: DataFrame, textCol: String,
+      n: Int): Array[Long] =
+    eval.select(Dedup.shingleHashes64(col(textCol), n)).collect()
+      .iterator.filterNot(_.isNullAt(0))
+      .flatMap(_.getSeq[Long](0)).toArray.sorted.distinct
+
+  /** [[decontaminate]]'s keep rule at its default `maxOverlapPct = 0` as
+    * a per-row predicate: true unless the doc's n-gram hashes `grams` (a
+    * [[Dedup.shingleHashes64]] array of its text) meet `evalGrams`
+    * ([[evalGramHashes]]). A NULL text and a doc shorter than n tokens
+    * have no grams and stay kept, as in [[decontaminate]]. No explode, no
+    * shuffle, no join: the probe is a scalar in the caller's projection.
+    * Pinned to [[decontaminate]] by a StreamingSpec twin. */
+  private[graft] def keepUncontaminated(grams: Column,
+      evalGrams: Array[Long]): Column = {
+    import org.apache.spark.sql.graftshim.ColumnShim
+    val hits = ColumnShim.column(graft.functions.SortedLongHits(
+      ColumnShim.expression(grams), evalGrams))
+    coalesce(hits === 0, lit(true))
   }
 
   /** FUZZY decontamination: drop every train doc that is a NEAR-duplicate

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -22,9 +22,17 @@ import graft.operators.{Decontam, Dedup, Mixing, TextAnalysis}
   *                      never re-hashed — each batch computes signatures
   *                      only for itself); one pass enumerates in-batch
   *                      and batch-vs-store candidates and exact Jaccard
-  *                      verifies both ([[verifiedPairs]])
-  *   3. decontaminate — broadcast eval n-gram probe (stateless per doc)
-  *   4. quality gate + deterministic split (stateless per doc)
+  *                      verifies both ([[verifiedPairs]]); the losers —
+  *                      every batch doc matching a kept doc, and every
+  *                      in-batch component member but its min id — are
+  *                      read off the staged pairs in one job and
+  *                      collapsed by union-find on the driver
+  *                      ([[nearDupLosers]])
+  *   3. decontaminate — the doc's staged 3-gram hashes (or, for another
+  *                      n, its n-gram hashes) probed against the eval
+  *                      set's sorted hash array (stateless per doc)
+  *   4. quality gate + deterministic split (stateless per doc); 3 and 4
+  *                      ride the one projection that stages the kept rows
   *
   * State store layout under `storePath` (all plain parquet; one
   * `batch=<id>/` delta subdirectory per micro-batch):
@@ -71,13 +79,19 @@ import graft.operators.{Decontam, Dedup, Mixing, TextAnalysis}
   * side is a growing but bucketable index that is never grouped whole,
   * and its batch-vs-store pairs stream out of chained explodes, so a hot
   * stored bucket never becomes one in-memory row of pairs; one verify
-  * over the batch docs and the matched `kept/` docs; and one
-  * anti-join of the losers. The state deltas are projections of staged
-  * frames, and nothing unbounded reaches the driver. After thousands of
-  * batches the one-delta-dir-per-batch layout decays into the classic
-  * small-files problem (listing + parquet footer reads dominate every
-  * batch) — fold old deltas into a single snapshot with [[compactState]]
-  * on the caller's cadence.
+  * over the batch docs and the matched `kept/` docs; one read of the
+  * verified pairs for the losers; one anti-join of the losers; and the
+  * eval probe inside the kept rows' staging projection, with no explode,
+  * shuffle or join. The state deltas are projections of staged frames.
+  * Two hops cross the driver, both bounded: the losers read is
+  * batch-bounded (the verified in-batch edges of the capped pair
+  * enumeration, and each partition's distinct batch ids with a stored
+  * match), and the eval n-gram hash array is eval-bounded, by the same
+  * contract that lets [[graft.operators.Decontam]] broadcast it. After
+  * thousands of batches the one-delta-dir-per-batch layout decays into
+  * the classic small-files problem (listing + parquet footer reads
+  * dominate every batch) — fold old deltas into a single snapshot with
+  * [[compactState]] on the caller's cadence.
   */
 object StreamingCuration {
 
@@ -262,37 +276,37 @@ object StreamingCuration {
 
     // 2. near dedup: one candidate-and-verify pass over the batch's
     //    buckets and the stored index rows sharing them, then the
-    //    in-batch representatives (component-min over verified in-batch
-    //    pairs) and every batch doc matching a kept doc drop in ONE
-    //    anti-join. dupClusters returns a PROJECTION over its final
-    //    staged frame, already eagerly checkpointed (so no re-stage), and
-    //    single-leaf, so release's owned-leaf contract holds on it
+    //    in-batch non-representatives (component-min over verified
+    //    in-batch pairs) and every batch doc matching a kept doc, read off
+    //    the staged pairs in one job, drop in ONE anti-join against a
+    //    local frame
     val storedBands = readState(spark, bandsPath, bandsSchema, batchId)
     val storedKept = readState(spark, keptPath, keptSchema, batchId)
     val verified = st.track(verifiedPairs(postSpan, idCol, storedBands,
       storedKept, config.nearDupThreshold))
-    val internalLabels = st.track(
-      Dedup.dupClusters(verified.filter(!col("stored"))))
-    val losers = internalLabels.filter(col("id") =!= col("cluster"))
-      .select(col("id"))
-      .union(verified.filter(col("stored")).select(col("id_a").as("id")))
-    // the losers are a subset of the batch's ids — broadcast them like
-    // Decontam.decontaminate broadcasts its batch-bounded flagged set
+    val losers = spark.createDataFrame(
+      java.util.Arrays.asList(nearDupLosers(verified).map(Row(_)): _*),
+      StructType(Seq(StructField("id", LongType))))
     val postNear = st.track(postSpan
       .join(broadcast(losers.select(
         col("id").cast(postSpan.schema(idCol).dataType).as(idCol))),
         Seq(idCol), "left_anti")
       .staged)
 
-    // 3. decontaminate (stateless), 4. quality + split (stateless)
-    val nearKept = postNear.drop("__bands", "__sh")
-    val postDecontam = eval match {
-      case Some(ev) => Decontam.decontaminate(nearKept, ev, idCol, textCol,
-        n = config.decontaminateNgram)
-      case None => nearKept
+    // 3. decontaminate, 4. quality + split: stateless per doc, so all
+    //    three ride the projection that stages `kept`. The eval n-gram
+    //    probe reads the staged 3-gram hashes when n = 3 and hashes the
+    //    text in the same projection otherwise
+    val clean = eval match {
+      case Some(ev) =>
+        val n = config.decontaminateNgram
+        Decontam.keepUncontaminated(
+          if (n == 3) col("__sh") else Dedup.shingleHashes64(col(textCol), n),
+          Decontam.evalGramHashes(ev, textCol, n))
+      case None => lit(true)
     }
     val kept = Mixing.splitAssign(
-      postDecontam
+      postNear.filter(clean).drop("__bands", "__sh")
         .withColumn("quality", TextAnalysis.qualityScore(col(textCol)))
         .withColumn("n_tokens",
           TextAnalysis.tokenCount(col(textCol)).cast("long"))
@@ -414,6 +428,62 @@ object StreamingCuration {
         .isNotNull)
       .select(col("id_a"), col("id_b"), col("stored"))
       .staged
+  }
+
+  /** The batch ids near dedup drops, read off `verified` (the staged
+    * [[verifiedPairs]] frame) in ONE job: every batch doc `id_a` with a
+    * stored match, plus every in-batch edge endpoint that is not the min
+    * id of its connected component, found by union-find on the driver.
+    * Equals the losers of `Dedup.dupClusters(verified.filter(!stored))`
+    * plus the stored matches (a StreamingSpec twin), without label
+    * rounds, so a component of any diameter collapses where dupClusters
+    * throws past its `maxRounds`.
+    *
+    * Driver traffic is batch-bounded: the in-batch edges are the verified
+    * part of the capped pair enumeration, and each partition ships its
+    * stored matches as distinct batch ids. [[reconcileKept]] keeps
+    * dupClusters, because its edge set is store-sized. */
+  private[graft] def nearDupLosers(verified: DataFrame): Array[Long] = {
+    import org.apache.spark.sql.execution.SQLExecution
+    val qe = verified.select(col("id_a"), col("id_b"), col("stored"))
+      .queryExecution
+    val parts = SQLExecution.withNewExecutionId(qe, Some("nearDupLosers")) {
+      qe.toRdd.mapPartitions { rows =>
+        val edges = Array.newBuilder[Long]
+        val stored = scala.collection.mutable.HashSet.empty[Long]
+        rows.foreach { r =>
+          if (r.getBoolean(2)) stored += r.getLong(0)
+          else { edges += r.getLong(0); edges += r.getLong(1) }
+        }
+        Iterator.single((edges.result(), stored.toArray))
+      }.collect()
+    }
+    (componentLosers(parts.flatMap(_._1)) ++ parts.flatMap(_._2)).distinct
+  }
+
+  /** Every node of an undirected edge list (`edges` flat: a0, b0, a1,
+    * b1, …) except the min id of its connected component: union-find that
+    * always roots a merged component at the smaller root, with path
+    * compression. */
+  private def componentLosers(edges: Array[Long]): Array[Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    var i = 0
+    while (i < edges.length) {
+      val (a, b) = (edges(i), edges(i + 1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    parent.keys.toArray.filter(k => find(k) != k)
   }
 
   /** Union of every retraction tombstone recorded so far (one `id`

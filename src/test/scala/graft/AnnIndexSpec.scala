@@ -688,22 +688,27 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
+  /** `df` with the embedding of `id` replaced by `v`. */
+  private def spoil(df: org.apache.spark.sql.DataFrame, id: Long,
+      v: org.apache.spark.sql.Column) = df.withColumn("embedding",
+    when(col("vec_id") === id, v).otherwise(col("embedding")))
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  /** `f` fails with a message naming `op`, the id and a null or NaN. */
+  private def refused(op: String, id: Long)(f: => Any): Unit = {
+    val e = intercept[Exception](f)
+    assert(messages(e).exists(m => m.contains(op) && m.contains(s"id $id ") &&
+      (m.contains("null") || m.contains("NaN"))), messages(e))
+  }
+
   test("null and NaN vectors are refused by id in build, append, upsert and probe routing; the index stays intact") {
     val vPath = tmpPath("ivf_bad_vectors")
     val slice = embs.filter(col("vec_id") < 300)
     val dim = slice.select(size(col("embedding"))).head().getInt(0)
     val nan = array((lit(Float.NaN) +: Seq.fill(dim - 1)(lit(0f))): _*)
     val nul = lit(null).cast(slice.schema("embedding").dataType)
-    def spoil(df: org.apache.spark.sql.DataFrame, id: Long,
-        v: org.apache.spark.sql.Column) = df.withColumn("embedding",
-      when(col("vec_id") === id, v).otherwise(col("embedding")))
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    def refused(op: String, id: Long)(f: => Any): Unit = {
-      val e = intercept[Exception](f)
-      assert(messages(e).exists(m => m.contains(op) && m.contains(s"id $id ") &&
-        (m.contains("null") || m.contains("NaN"))), messages(e))
-    }
     Ann.buildIvfIndex(slice, "vec_id", "embedding", vPath, numCentroids = 8)
     val before = Ann.readIndexCorpus(spark, vPath).count()
     Seq(nan, nul).foreach { bad =>
@@ -743,6 +748,37 @@ class AnnIndexSpec extends SparkSpec {
     Ann.upsertIntoIvfIndex(slice.filter(col("vec_id") < 10), "vec_id",
       "embedding", vPath)
     assert(Ann.readIndexCorpus(spark, vPath).count() === before)
+  }
+
+  test("in-memory ivfTopK, ivfTopKInt8 and semDedupPairs refuse null and NaN vectors by id") {
+    val slice = embs.filter(col("vec_id") < 300)
+    val dim = slice.select(size(col("embedding"))).head().getInt(0)
+    val nan = array((lit(Float.NaN) +: Seq.fill(dim - 1)(lit(0f))): _*)
+    val nul = lit(null).cast(slice.schema("embedding").dataType)
+    val probes = slice.filter(col("vec_id") < 3)
+    val topKs = Seq[(String, (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame)](
+      "ivfTopK" -> ((c, p, iters) => Ann.ivfTopK(c, p, "vec_id", "embedding",
+        k = 3, numCentroids = 8, lloydIters = iters)),
+      "ivfTopKInt8" -> ((c, p, iters) => Ann.ivfTopKInt8(c, p, "vec_id",
+        "embedding", k = 3, numCentroids = 8, lloydIters = iters)))
+    Seq(nan, nul).foreach { bad =>
+      topKs.foreach { case (op, topK) =>
+        // a centroid seed, a row only the list assignment reads, a probe
+        refused(op, 7L)(topK(spoil(slice, 7L, bad), probes, 1).collect())
+        refused(op, 250L)(topK(spoil(slice, 250L, bad), probes, 0).collect())
+        refused(op, 1L)(topK(slice, spoil(probes, 1L, bad), 1).collect())
+      }
+      refused("semDedupPairs", 250L) {
+        Ann.semDedupPairs(spoil(slice, 250L, bad), "vec_id", "embedding",
+          0.99, numCentroids = 8, lloydIters = 0)
+      }
+    }
+    // clean inputs still pass
+    topKs.foreach { case (_, topK) =>
+      assert(topK(slice, probes, 1).count() > 0)
+    }
+    Ann.semDedupPairs(slice, "vec_id", "embedding", 0.99, numCentroids = 8)
   }
 
   test("index search prunes at the path level: only probed lists are opened") {

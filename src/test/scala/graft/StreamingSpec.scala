@@ -492,26 +492,26 @@ class StreamingSpec extends SparkSpec {
     curate(1)
     val (kept, count) = jobsDuring(curate(2))
     assert(kept.select("doc_id").collect().map(_.getLong(0)).toSet === Set(21L))
-    // one feature staging, one candidate-and-verify pass, an edge-seeded
-    // dupClusters and one broadcast loser anti-join: 26 jobs here, where
-    // the separate bands/shingles stagings, the two pair passes, the
-    // identity-seeded clusters and the two anti-joins ran 37
-    assert(count.jobs <= 28, s"the third batch ran ${count.jobs} jobs")
+    // one feature staging, one candidate-and-verify pass, one read of its
+    // staged pairs for the losers, one broadcast loser anti-join, and the
+    // eval probe inside the staging of the kept rows: 20 jobs here, where
+    // the label rounds of dupClusters and the exploding decontamination
+    // join ran 26
+    assert(count.jobs <= 21, s"the third batch ran ${count.jobs} jobs")
   }
 
-  test("fused candidate-and-verify pass equals the two-pass in-batch and batch-vs-store formulation") {
+  /** A micro-batch, its stored `kept/` docs and an in-batch bucket cap
+    * that the batch's five-member clique exceeds. 40-token documents: one
+    * swapped token changes 3 of 38 trigram shingles, so one swap apart is
+    * J = 35/41 ≈ 0.854 ≥ 0.8 and two swaps apart J = 32/44 ≈ 0.727 < 0.8. */
+  private def nearDupFixture()
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Int) = {
     import spark.implicits._
-    import graft.operators.Dedup
-    import graft.streaming.StreamingCuration
-    // 40-token documents: one swapped token changes 3 of 38 trigram
-    // shingles, so one swap apart is J = 35/41 ≈ 0.854 ≥ 0.8 and two swaps
-    // apart J = 32/44 ≈ 0.727 < 0.8
     def doc(pre: String, swaps: (Int, String)*): String = {
       val w = (0 until 40).map(i => s"$pre$i").toArray
       swaps.foreach { case (i, t) => w(i) = t }
       w.mkString(" ")
     }
-    val cap = 3
     val batch = (
       // five pairwise near-dups: buckets of up to five ids, over the cap
       (1L to 5L).map(i => (i, doc("a", 35 -> s"v$i"))) ++
@@ -529,6 +529,13 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val stored = Seq((30L, doc("s")), (40L, doc("t")),
       (60L, doc("u"))).toDF("id", "text")
+    (batch, stored, 3)
+  }
+
+  test("fused candidate-and-verify pass equals the two-pass in-batch and batch-vs-store formulation") {
+    import graft.operators.Dedup
+    import graft.streaming.StreamingCuration
+    val (batch, stored, cap) = nearDupFixture()
     val storedBands = Dedup.lshBands(stored, "id", "text")
     val batchBands = Dedup.lshBands(batch, "doc_id", "text")
     val maxBucket = batchBands.groupBy("band", "band_sig").count()
@@ -576,6 +583,95 @@ class StreamingSpec extends SparkSpec {
       "batch ids matched against the store, including one in both")
     assert(store.contains((29L, 30L)) && !internal.contains((29L, 30L)),
       "an id in both the batch and the store verifies with each side's text")
+  }
+
+  test("near-dup losers: the driver union-find equals dupClusters' non-representatives plus the stored matches") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    import graft.streaming.StreamingCuration
+    type Verified = org.apache.spark.sql.DataFrame
+    // the rule the union-find replaces: component-min labels of the
+    // in-batch edges, and every batch doc with a stored match
+    def twin(v: Verified): Set[Long] =
+      (Dedup.dupClusters(v.filter(!col("stored")))
+        .filter(col("id") =!= col("cluster")).select(col("id"))
+        .union(v.filter(col("stored")).select(col("id_a")))
+        .collect().map(_.getLong(0))).toSet
+    def losers(v: Verified): Set[Long] = {
+      val got = StreamingCuration.nearDupLosers(v)
+      assert(got.length === got.distinct.length, "losers repeat")
+      got.toSet
+    }
+    def edges(e: (Long, Long, Boolean)*): Verified =
+      e.toDF("id_a", "id_b", "stored").repartition(3)
+
+    // verifiedPairs over the fixture: an over-cap five-member clique
+    // (star-collapsed at cap 3), the 20~21~22 chain, stored matches, and
+    // docs with no edge
+    val (batch, stored, cap) = nearDupFixture()
+    val feats = Dedup.withBandSigs(batch, "text", "__bands")
+      .withColumn("__sh", Dedup.shingleHashes64(col("text"), 3))
+    val verified = StreamingCuration.verifiedPairs(feats, "doc_id",
+      Dedup.lshBands(stored, "id", "text"), stored, 0.8, maxBucket = cap)
+    val fixture = losers(verified)
+    assert(fixture === twin(verified))
+    assert(Set(2L, 3L, 4L, 5L, 21L, 22L, 29L, 30L, 41L).subsetOf(fixture) &&
+      !fixture.contains(1L) && !fixture.contains(20L) &&
+      !fixture.contains(50L) && !fixture.contains(51L), fixture)
+
+    // a clique whose ids a stored match also reaches, and no edges at all
+    val clique = edges((7L, 8L, false), (7L, 9L, false), (8L, 9L, false),
+      (9L, 12L, true), (9L, 13L, true), (11L, 12L, true))
+    assert(losers(clique) === Set(8L, 9L, 11L))
+    assert(losers(clique) === twin(clique))
+    val none = edges()
+    assert(losers(none).isEmpty && twin(none).isEmpty)
+
+    // a 30-hop chain: dupClusters refuses it at its 20 rounds, the
+    // union-find collapses it to its min id
+    val chain = edges((0L until 30L).reverse.map(i => (i, i + 1, false)): _*)
+    intercept[IllegalStateException](twin(chain))
+    assert(losers(chain) === (1L to 30L).toSet)
+  }
+
+  test("eval n-gram probe in the staging projection keeps the ids Decontam.decontaminate keeps") {
+    import spark.implicits._
+    import graft.operators.{Decontam, Dedup}
+    val train = Seq[(Long, String)](
+      (1L, "the secret benchmark answer is forty two obviously"),
+      (2L, null),
+      (3L, "two"),
+      (4L, "answer is"),
+      (5L, "an unrelated document about columnar storage"),
+      (6L, "noise words then forty two obviously at the end"),
+      (7L, "Answer  IS forty"),
+      (8L, "")).toDF("doc_id", "text")
+    val evals = Map(
+      "overlapping" -> Seq[(Long, String)](
+        (100L, "the secret benchmark answer is forty two obviously"),
+        (101L, null)).toDF("doc_id", "text"),
+      "empty" -> Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "disjoint" -> Seq[(Long, String)](
+        (102L, "nothing here appears in any training document")).toDF("doc_id", "text"))
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    for (n <- Seq(2, 3); (name, ev) <- evals) {
+      val probe = train.filter(Decontam.keepUncontaminated(
+        Dedup.shingleHashes64(col("text"), n),
+        Decontam.evalGramHashes(ev, "text", n)))
+      assert(ids(probe) === ids(Decontam.decontaminate(train, ev, "doc_id",
+        "text", n = n)), s"n = $n, $name eval")
+    }
+    // the fixture's shapes all show up: NULL text and docs shorter than n
+    // stay kept, any shared gram drops a doc
+    val n2 = ids(train.filter(Decontam.keepUncontaminated(
+      Dedup.shingleHashes64(col("text"), 2),
+      Decontam.evalGramHashes(evals("overlapping"), "text", 2))))
+    assert(n2 === Set(2L, 3L, 5L, 7L, 8L))
+    val n3 = ids(train.filter(Decontam.keepUncontaminated(
+      Dedup.shingleHashes64(col("text"), 3),
+      Decontam.evalGramHashes(evals("overlapping"), "text", 3))))
+    assert(n3 === Set(2L, 3L, 4L, 5L, 7L, 8L))
   }
 
   test("streaming curation with span dedup: fold equals the one-shot batch pipeline") {
