@@ -1382,19 +1382,15 @@ object Bench {
     val tBloomFilteredCold = coldMedian("x_bloom_filtered_cold_sec")(
       pointLookup(liUidBloom))
     if (dropCachesOk) canaryPost()
-    // Grouped adaptive ladder AT its 10⁶-group contract ceiling (round-10
-    // verdict item 8: maxGroups was lifted 10⁴ → 10⁶ and spec'd at 10⁵;
-    // this stamps the ceiling itself with a measurement). Synthetic
-    // codegen frame, no IO — the probe isolates the ladder machinery:
-    // the 10⁶-key broadcast active-set frames, the per-round 10⁶-group
-    // moment aggregations + collects, the driver sketch map, and the
-    // 10⁶-row result assembly. exactBelow=0 keeps every group on the
-    // LADDER route (the contract under test — the default would route
-    // these small groups to the one-shot exact job). ONCE-run, not
-    // stableMedian: a ~30 s contract stamp would cost 4 runs in a median
-    // batch for no extra information (LadderProbe holds the sizing runs:
-    // 56–66 s at 16–64 rows/group, scan-size-insensitive — the cost is
-    // the 10⁶-cardinality aggregations themselves).
+    // Grouped adaptive ladder at 10⁶ groups. Synthetic codegen frame,
+    // no IO — the lane isolates the ladder itself: one 10⁶-group
+    // aggregate of every rung's conditional moments, the per-group rung
+    // selection projection and the 10⁶-row result sort. exactBelow=0
+    // keeps every group on the LADDER route (the default would answer
+    // these small groups from the exact sum instead). ONCE-run, not
+    // stableMedian: a multi-second stamp would cost 4 runs in a median
+    // batch for no extra information — the cost is the 10⁶-cardinality
+    // aggregation itself.
     canaryPre("x_grouped_ladder_1m_groups_sec")
     val tLadder1M = {
       val groups = 1000000L

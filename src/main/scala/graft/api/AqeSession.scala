@@ -86,11 +86,13 @@ final case class ApproxTable(df: DataFrame, samplingKey: Column) {
     adaptiveAgg(AggKind.Avg, value, errorThresholdPct)
 
   /** GROUP BY adaptive: the per-group deterministic CLT ladder
-    * ([[AdaptiveExecutor.runGroupedDeterministic]]) — each group stops at
-    * ITS first converged round over the table's sampling key, sub-floor
+    * ([[AdaptiveExecutor.runGroupedDeterministic]]) — each group takes
+    * ITS first converged rung over the table's sampling key, sub-floor
     * groups route exact, NULL groups report as SQL NULL. SUM, AVG (mean
     * CI, no scale factor) and COUNT (n-moment alone), the same contract
-    * as the CLI's `--error` + GROUP BY. One row per group:
+    * as the CLI's `--error` + GROUP BY. Every rung of every group comes
+    * from one aggregate over one scan: an early stop saves driver work,
+    * not scans or jobs. One row per group, ordered by group:
     * (group, n_rows, sum_est, ci_lower, ci_upper, n_used, rounds_used,
     * status). */
   def adaptiveAggBy(agg: AggKind, value: Column, group: Column,

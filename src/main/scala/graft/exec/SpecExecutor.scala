@@ -130,7 +130,8 @@ object SpecExecutor {
               "use a row-level design for other aggregates)")
         }
         // valueCol is already lit(1L) for COUNT(*); for COUNT(col) the
-        // ladder's count(xc) moment is non-null-aware, matching SQL
+        // ladder's count(xc) moment is non-null-aware, matching SQL. The
+        // ladder's rows come ordered by group.
         AdaptiveExecutor.runGroupedDeterministic(base, valueCol, key,
             col(g), errorThresholdPct = a.errorThresholdPct,
             confidence = a.confidence, agg = ladderAgg)
@@ -138,7 +139,6 @@ object SpecExecutor {
             col("ci_lower").as(s"${alias}_ci_lower"),
             col("ci_upper").as(s"${alias}_ci_upper"),
             col("n_used").as(s"${alias}_n"), col("status"))
-          .orderBy(col(g))
       case (Some(g), _) if spec.withCi =>
         t.approxAggCiBy(spec.agg, valueCol, Seq(col(g)), spec.sampling, alias,
           spec.confidence).orderBy(col(g))

@@ -404,7 +404,9 @@ object Int8Cosine {
   * Centroids are expected L2-NORMALIZED by the caller, which makes
   * dot-product order == cosine order for any fixed input vector (the
   * row's own norm is a positive constant across candidates).
-  * Returns array<int> of length nProbe (k >= nProbe). */
+  * Returns array<int> of length nProbe (k >= nProbe). A vector whose
+  * length is not the centroids' dimension throws: it has no distance to
+  * them, and scoring a prefix would route it silently. */
 case class TopCentroids(child: Expression, centroids: Array[Double],
     k: Int, nProbe: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -440,11 +442,15 @@ case class TopCentroids(child: Expression, centroids: Array[Double],
       val best = ctx.freshName("best"); val bestScore = ctx.freshName("bestScore")
       val getV = if (isFloat) s"(double) $v.getFloat($i)" else s"$v.getDouble($i)"
       s"""
+         |int $n = $v.numElements();
+         |if ($n != $dim) {
+         |  throw new IllegalArgumentException("top_centroids: a vector of " +
+         |    $n + " components against centroids of dimension $dim");
+         |}
          |double[] $scores = new double[$k];
          |for (int $c = 0; $c < $k; $c++) {
          |  double $acc = 0.0;
          |  int $base = $c * $dim;
-         |  int $n = java.lang.Math.min($v.numElements(), $dim);
          |  for (int $i = 0; $i < $n; $i++) {
          |    $acc += ($getV) * $cRef[$base + $i];
          |  }
@@ -480,12 +486,15 @@ object TopCentroids {
   def top(v: ArrayData, vFloat: Boolean, centroids: Array[Double], k: Int,
       nProbe: Int): Array[Int] = {
     val dim = centroids.length / k
+    val n = v.numElements()
+    if (n != dim) throw new IllegalArgumentException(
+      s"top_centroids: a vector of $n components against centroids of " +
+        s"dimension $dim")
     val scores = new Array[Double](k)
     var c = 0
     while (c < k) {
       var acc = 0.0
       val base = c * dim
-      val n = math.min(v.numElements(), dim)
       var i = 0
       while (i < n) {
         val x = if (vFloat) v.getFloat(i).toDouble else v.getDouble(i)

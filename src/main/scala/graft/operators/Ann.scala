@@ -205,8 +205,8 @@ object Ann {
         ColumnShim.expression(col(vecCol)), flat, numCentroids, nP))
 
     val vectors = requireIndexableVectors(corpus, idCol, vecCol, "ivfTopK")
-    val flat = lloydCentroids(vectors, idCol, vecCol, numCentroids,
-      lloydIters).flatten.toArray
+    val flat = lloydCentroids(corpus, idCol, vecCol, numCentroids,
+      lloydIters, "ivfTopK").flatten.toArray
     val c = vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"),
       topCentroidsCol(flat, 1).getItem(0).as("cid"))
     val p = requireIndexableVectors(probes, idCol, vecCol, "ivfTopK")
@@ -247,8 +247,8 @@ object Ann {
 
     val vectors = requireIndexableVectors(corpus, idCol, vecCol,
       "ivfTopKInt8")
-    val flat = lloydCentroids(vectors, idCol, vecCol, numCentroids,
-      lloydIters).flatten.toArray
+    val flat = lloydCentroids(corpus, idCol, vecCol, numCentroids,
+      lloydIters, "ivfTopKInt8").flatten.toArray
     val c = vectors.select(col(idCol).as("neighbor_id"),
       VectorOps.int8Code(col(vecCol)).as("ccode"),
       topCentroidsCol(flat, 1).getItem(0).as("cid"))
@@ -344,25 +344,14 @@ object Ann {
     import graft.functions.TopCentroids
     require(codec == "float" || codec == "int8", s"unknown codec $codec")
     requireIntegralId(corpus, idCol, "buildIvfIndex")
-    val vectors = requireIndexableVectors(corpus, idCol, vecCol,
-      "buildIvfIndex")
     val spark = corpus.sparkSession
     val fs = hadoopFs(spark, path)
-    // trained before the reset: training reads every vector, so a
-    // refused one fails the build while an existing index stays intact
-    val centroids = lloydCentroids(vectors, idCol, vecCol, numCentroids,
-      lloydIters)
-    // full reset, manifests FIRST: with no manifest the path reads as
-    // "not built", so a crash anywhere inside a rebuild is retried as a
-    // rebuild (idempotent overwrite) instead of upserting over rubble
-    listManifests(fs, path).foreach(m =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$m"), false))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/corpus"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/blooms"), true)
+    // the lowest-id vector fixes the index's dimension
+    val centroids = lloydCentroids(corpus, idCol, vecCol, numCentroids,
+      lloydIters, "buildIvfIndex")
+    val vectors = requireIndexableVectors(corpus, idCol, vecCol,
+      "buildIvfIndex", Some(centroids.head.length))
     val flat = centroids.flatten.toArray
-    import spark.implicits._
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/centroids"), true)
-    writeCentroids(spark, path, 0L, centroids)
     val assign = ColumnShim.column(TopCentroids(
       ColumnShim.expression(col(vecCol)), flat, numCentroids, 1)).getItem(0)
     val payload =
@@ -389,10 +378,21 @@ object Ann {
     // maintenance ops never stack staging generations in cluster
     // storage (stacked frames also shifted suite-wide GC in the r11
     // bench — see PLANS.md round-12 notes).
+    // Staged before the reset: staging reads every vector, so a refused
+    // one fails the build while an existing index stays intact.
     val content = vectors.select(col(idCol).as("id"), payload,
         assign.as("cid"))
       .staged
     try {
+      // full reset, manifests FIRST: with no manifest the path reads as
+      // "not built", so a crash anywhere inside a rebuild is retried as a
+      // rebuild (idempotent overwrite) instead of upserting over rubble
+      listManifests(fs, path).foreach(m =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$m"), false))
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/corpus"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/blooms"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/centroids"), true)
+      writeCentroids(spark, path, 0L, centroids)
       stageConcurrently(
         write = content
           .withColumn("gen", lit(0L))
@@ -1045,8 +1045,6 @@ object Ann {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
     requireIntegralId(newVecs, idCol, "appendToIvfIndex")
-    val vectors = requireIndexableVectors(newVecs, idCol, vecCol,
-      "appendToIvfIndex")
     val spark = newVecs.sparkSession
     val meta = readManifest(spark, path)
     val (metaGen, gens) = (meta.gen, meta.gens)
@@ -1055,7 +1053,9 @@ object Ann {
     // metaGen+1, so skipping the sweep would PUBLISH its partial rows
     // as live data (resurrected deletes, duplicated neighbors)
     gcStaleGens(spark, path, meta)
-    val (flat, numCentroids, _) = loadCentroids(spark, path, meta)
+    val (flat, numCentroids, dim) = loadCentroids(spark, path, meta)
+    val vectors = requireIndexableVectors(newVecs, idCol, vecCol,
+      "appendToIvfIndex", Some(dim))
     // codec is a property of the existing index: appended rows must match
     val int8 = meta.int8
     val assign = ColumnShim.column(TopCentroids(
@@ -1114,20 +1114,27 @@ object Ann {
   }
 
   /** `df` with `vecCol` refused, naming `op` and the row's id, wherever a
-    * vector is null or has a NaN component. A NaN scores NaN against every
-    * centroid, so [[graft.functions.TopCentroids]] finds no nearest list;
-    * a null vector has no list at all. The check is a projection: it runs
+    * vector is null, has a NaN component or, when the index's `dim` is
+    * given, has another number of components. A NaN scores NaN against
+    * every centroid, so [[graft.functions.TopCentroids]] finds no nearest
+    * list; a null vector has no list at all; a vector of another length
+    * has no distance to the centroids. The check is a projection: it runs
     * in the first pass that reads the vectors and adds no job. Spark
     * orders NaN above every number, so `array_max` is NaN exactly when a
     * component is. */
   private def requireIndexableVectors(df: DataFrame, idCol: String,
-      vecCol: String, op: String): DataFrame = {
+      vecCol: String, op: String, dim: Option[Int] = None): DataFrame = {
     val v = col(vecCol)
-    df.withColumn(vecCol, when(v.isNull || isnan(array_max(v)),
+    val fault = dim.foldLeft(when(v.isNull, lit("is null"))
+        .when(isnan(array_max(v)), lit("has a NaN component"))) { (f, d) =>
+      f.when(size(v) =!= d, concat(lit("has "), size(v).cast("string"),
+        lit(s" components where the index has $d")))
+    }
+    df.withColumn(vecCol, when(fault.isNotNull,
       raise_error(concat(lit(s"$op: the vector of id "),
         coalesce(col(idCol).cast("string"), lit("null")),
-        lit(s" in column '$vecCol' is null or has a NaN component; an IVF " +
-          "index cannot place it in any list")))).otherwise(v))
+        lit(s" in column '$vecCol' "), fault,
+        lit("; an IVF index cannot place it in any list")))).otherwise(v))
   }
 
   /** Fail loudly when `idCol` is not integral: index ids are normalized
@@ -1246,13 +1253,13 @@ object Ann {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
     requireIntegralId(newVecs, idCol, "upsertIntoIvfIndex")
-    val vectors = requireIndexableVectors(newVecs, idCol, vecCol,
-      "upsertIntoIvfIndex")
     val spark = newVecs.sparkSession
     val meta = readManifest(spark, path)
     val (metaGen, gens) = (meta.gen, meta.gens)
     gcStaleGens(spark, path, meta) // sweep crashed-op staging first
-    val (flat, numCentroids, _) = loadCentroids(spark, path, meta)
+    val (flat, numCentroids, dim) = loadCentroids(spark, path, meta)
+    val vectors = requireIndexableVectors(newVecs, idCol, vecCol,
+      "upsertIntoIvfIndex", Some(dim))
     val int8 = meta.int8
     val assign = ColumnShim.column(TopCentroids(
       ColumnShim.expression(col(vecCol)), flat, numCentroids, 1)).getItem(0)
@@ -1389,7 +1396,8 @@ object Ann {
     val k = numCentroids.getOrElse(curK)
     val corpus = readLists(spark, path, meta.gens, None)
       .select(col("id"), col("vec"))
-    val centroids = lloydCentroids(corpus, "id", "vec", k, lloydIters)
+    val centroids = lloydCentroids(corpus, "id", "vec", k, lloydIters,
+      "retrainIvfIndex")
     val newGen = meta.gen + 1
     // stage: centroids first, then the re-assigned lists — both invisible
     // until the manifest flips
@@ -1479,8 +1487,9 @@ object Ann {
     * probe set is small by contract; a local frame collects without a job,
     * a distributed one in one — and each row is routed there by
     * [[graft.functions.TopCentroids.top]], the function the expression
-    * evaluates. A probe whose vector is null or has a NaN component has no
-    * nearest list and is refused, naming its id. Ids are kept as longs
+    * evaluates. A probe whose vector is null, has a NaN component or has
+    * another number of components than the centroids has no nearest list
+    * and is refused, naming its id. Ids are kept as longs
     * when `keepIds` (else null). Returns the routed rows and whether the
     * vectors hold floats (else doubles). */
   private def routeProbes(probes: DataFrame, idCol: String, keepIds: Boolean,
@@ -1509,6 +1518,9 @@ object Ann {
       if ((0 until v.numElements()).exists(i =>
           if (vFloat) v.getFloat(i).isNaN else v.getDouble(i).isNaN))
         refuse("has a NaN component")
+      if (v.numElements() * numCentroids != flat.length)
+        refuse(s"has ${v.numElements()} components where the index has " +
+          s"${flat.length / numCentroids}")
       RoutedProbe(
         if (!keepIds || r.isNullAt(0)) null
         else r.get(0).asInstanceOf[Number].longValue,
@@ -1752,10 +1764,15 @@ object Ann {
     * [[semDedupPairs]]: seeds = the `numCentroids` lowest-id vectors
     * (deterministic, any engine), `lloydIters` rounds of
     * assign-via-[[graft.functions.TopCentroids]] + exact decimal mean
-    * (shuffle ∝ centroids×dim partials, never rows). Returns l2-normalized
-    * centroid rows. */
+    * (shuffle ∝ centroids×dim partials, never rows). The lowest-id
+    * vector's length is the dimension: a null or NaN vector, a seed of
+    * another length, or (in the Lloyd passes) a corpus vector of another
+    * length is refused, naming `op` and its id. `corpus` is unchecked:
+    * each pass wraps it in one refusal projection, never two nested ones,
+    * whose generated code outgrew the JIT's method-size limit. Returns
+    * l2-normalized centroid rows. */
   private def lloydCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      numCentroids: Int, lloydIters: Int): Array[Array[Double]] = {
+      numCentroids: Int, lloydIters: Int, op: String): Array[Array[Double]] = {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
 
@@ -1765,19 +1782,26 @@ object Ann {
       val n = math.sqrt(s)
       if (n > 0) a.map(_ / n) else a
     }
-    val seeds = corpus
+    val seedRows = requireIndexableVectors(corpus, idCol, vecCol, op)
       .select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"))
       .orderBy(col("__id")).limit(numCentroids).collect()
-      .map(_.getSeq[Float](1).toArray.map(_.toDouble))
-    require(seeds.length == numCentroids,
+    require(seedRows.length == numCentroids,
       s"corpus smaller than numCentroids=$numCentroids")
+    val seeds = seedRows.map(_.getSeq[Float](1).toArray.map(_.toDouble))
+    val dim = seeds.head.length
+    seeds.indices.find(seeds(_).length != dim).foreach { i =>
+      throw new IllegalArgumentException(s"$op: the vector of id " +
+        s"${seedRows(i).get(0)} in column '$vecCol' has ${seeds(i).length} " +
+        s"components where the index has $dim; an IVF index cannot place " +
+        "it in any list")
+    }
     var centroids = seeds.map(l2norm)
-    val dim = centroids.head.length
+    val sized = requireIndexableVectors(corpus, idCol, vecCol, op, Some(dim))
     for (_ <- 0 until lloydIters) {
       val assign = ColumnShim.column(TopCentroids(
         ColumnShim.expression(col(vecCol)), centroids.flatten.toArray,
         numCentroids, 1)).getItem(0)
-      val parts = corpus
+      val parts = sized
         .select(assign.as("cid"), posexplode(col(vecCol)).as(Seq("pos", "x")))
         .groupBy(col("cid"), col("pos"))
         .agg(sum(col("x").cast("decimal(28,10)")).cast("double").as("s"),
@@ -1816,8 +1840,8 @@ object Ann {
     import org.apache.spark.sql.graftshim.ColumnShim
     import graft.functions.TopCentroids
     val vectors = requireIndexableVectors(df, idCol, vecCol, "semDedupPairs")
-    val flat = lloydCentroids(vectors, idCol, vecCol, numCentroids,
-      lloydIters).flatten.toArray
+    val flat = lloydCentroids(df, idCol, vecCol, numCentroids,
+      lloydIters, "semDedupPairs").flatten.toArray
     val cid = ColumnShim.column(TopCentroids(
       ColumnShim.expression(col(vecCol)), flat, numCentroids, 1)).getItem(0)
     val pairs = vectors

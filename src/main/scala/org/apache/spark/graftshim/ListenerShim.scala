@@ -2,9 +2,9 @@ package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
 
-/** `SparkContext.listenerBus` is `private[spark]`, so measurement mains
-  * that read listener-accumulated counters (graft.tools.LadderProbe's
-  * task-result-bytes sum) need an accessor compiled inside the
+/** `SparkContext.listenerBus` is `private[spark]`, so code that reads
+  * listener-accumulated counters (the test suites' `SparkSpec.jobsDuring`
+  * job and task counts) needs an accessor compiled inside the
   * `org.apache.spark` package tree to DRAIN the async bus before reading
   * — a fixed sleep is a race on a loaded machine (round-12 ADVICE). Same
   * pattern as sql.graftshim.ColumnShim; no Spark internals modified. */

@@ -140,6 +140,207 @@ class AdaptiveSpec extends SparkSpec {
       case (n1, n2) => n2 > n1 }, "nested rounds must grow")
   }
 
+  /** Cents of `value` as the key-mod ladders read them: exact to the cent
+    * through DECIMAL(18,2), then a long. */
+  private def cents(value: org.apache.spark.sql.Column) =
+    (value.cast("decimal(18,2)") * lit(100)).cast("long")
+
+  /** The key-mod ladder as one scan per round: `df.count()`, then round r
+    * filters `key % steps(r) == 0` and aggregates its exact-cents
+    * moments, stopping at the first converged round or the last. The
+    * reference semantics [[AdaptiveExecutor.runDeterministic]]'s
+    * one-aggregate ladder must reproduce round for round. */
+  private def perRoundKeyModLadder(df: org.apache.spark.sql.DataFrame,
+      value: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column,
+      steps: Seq[Long], threshold: Double): AdaptiveExecutor.AdaptiveOutcome = {
+    val z = graft.exec.Estimators.zScore(0.95)
+    val totalN = df.count().toDouble
+    var rounds = Vector.empty[AdaptiveExecutor.Round]
+    var done = false
+    while (!done) {
+      val step = steps(rounds.size)
+      val m = df.filter(pmod(key, lit(step)) === 0).select(cents(value).as("xc"))
+        .agg(count(col("xc")).cast("double"),
+          sum(col("xc").cast("decimal(28,0)")).cast("double"),
+          sum((col("xc") * col("xc")).cast("decimal(38,0)")).cast("double"))
+        .head()
+      val n = m.getDouble(0)
+      val sc = if (m.isNullAt(1)) 0.0 else m.getDouble(1)
+      val s2c = if (m.isNullAt(2)) 0.0 else m.getDouble(2)
+      val varc = if (n > 1) (s2c - sc * sc / n) / (n - 1) else 0.0
+      val se = if (n > 0) math.sqrt(varc / n) else Double.PositiveInfinity
+      val (est, margin) =
+        if (n > 0) (sc * (totalN / n) / 100.0, z * se * totalN / 100.0)
+        else (0.0, Double.PositiveInfinity)
+      val rel = graft.exec.Estimators.relativeMarginPct(est, est - margin,
+        est + margin)
+      rounds :+= AdaptiveExecutor.Round(1.0 / step, n.toLong, est,
+        est - margin, est + margin, rel)
+      done = (rel <= threshold && n >= 50) || rounds.size == steps.size
+    }
+    val last = rounds.last
+    val drifted = rounds.size >= 2 && {
+      val prev = rounds(rounds.size - 2)
+      (prev.ciUpper < last.ciLower || last.ciUpper < prev.ciLower) &&
+        prev.estimate != 0.0 &&
+        math.abs(last.estimate - prev.estimate) / math.abs(prev.estimate) * 100.0 > 5.0
+    }
+    val status =
+      if (last.n < 50) ApproximationStatus.InsufficientData
+      else if (drifted) ApproximationStatus.Drifting
+      else if (last.relMarginPct <= threshold) ApproximationStatus.Stable
+      else ApproximationStatus.Drifting
+    AdaptiveExecutor.AdaptiveOutcome(graft.model.ApproxResult(last.estimate,
+      last.ciLower, last.ciUpper, 0.95, rounds.map(_.n).sum, status, 0L),
+      rounds)
+  }
+
+  test("one-aggregate key-mod ladder equals the per-round ladder round for round, in at most 2 jobs") {
+    val li01 = Tables.lineitem(spark, sf001)
+    val wheres = Seq(None, Some("l_quantity BETWEEN 10 AND 30"),
+      Some("l_discount BETWEEN 0.02 AND 0.06"), Some("l_orderkey % 97 = 0"))
+    var roundCounts = Set.empty[Int]
+    for (where <- wheres; threshold <- Seq(0.5, 1.5, 2.0, 5.0)) {
+      val df = where.fold(li01)(c => li01.filter(expr(c)))
+      val want = perRoundKeyModLadder(df, col("l_extendedprice"), liKey,
+        Seq(20L, 10L, 5L), threshold)
+      val (got, jobs) = jobsDuring(AdaptiveExecutor.runDeterministic(df,
+        col("l_extendedprice"), liKey, steps = Seq(20L, 10L, 5L),
+        errorThresholdPct = threshold))
+      val label = s"where=$where threshold=$threshold"
+      assert(got.rounds === want.rounds, label)
+      assert(got.result.copy(millis = 0L) === want.result, label)
+      assert(jobs.jobs <= 2, s"$label ran ${jobs.jobs} jobs")
+      roundCounts += got.rounds.size
+    }
+    // the mix stops at every rung
+    assert(roundCounts === Set(1, 2, 3), roundCounts)
+  }
+
+  private type GroupRow = (Option[String], Long, Option[Double],
+    Option[Double], Option[Double], Long, Int, String)
+
+  /** The grouped key-mod ladder as one scan per round, walked on the
+    * driver: exact totals per group, groups below `50 · steps.last` rows
+    * answer exactly, and every other group takes round after round (one
+    * `key % step` scan each) until its first converged round or the last.
+    * Estimates, margins and verdicts are the same IEEE expressions the
+    * oracle texts replay. The reference semantics
+    * [[AdaptiveExecutor.runGroupedDeterministic]] must reproduce row for
+    * row, bit for bit. */
+  private def perRoundGroupedLadder(df: org.apache.spark.sql.DataFrame,
+      value: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column,
+      group: org.apache.spark.sql.Column, steps: Seq[Long], threshold: Double,
+      agg: String): Seq[GroupRow] = {
+    val z = graft.exec.Estimators.zScore(0.95)
+    val Big = 1e18
+    val base = df.select(group.cast("string").as("g"), key.as("k"),
+      cents(value).as("xc"))
+    def dbl(r: org.apache.spark.sql.Row, i: Int) =
+      if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    val totals = base.groupBy(col("g"))
+      .agg(count(lit(1)), count(col("xc")),
+        sum(col("xc").cast("decimal(28,0)")).cast("double"))
+      .collect().map(r => Option(r.getString(0)) ->
+        ((r.getLong(1), r.getLong(2), Option(r.get(3)).map(_ => r.getDouble(3)))))
+      .toMap
+    val (small, ladder) = totals.partition(_._2._1 < 50L * steps.last)
+    val exact: Seq[GroupRow] = small.toSeq.map { case (g, (nAll, nx, s)) =>
+      val v = agg match {
+        case "sum" => if (nx == 0) None else s.map(_ / 100.0)
+        case "avg" => if (nx == 0) None else s.map(_ / 100.0 / nx.toDouble)
+        case _ => Some(nx.toDouble)
+      }
+      (g, nAll, v, v, v, nAll, 0, "Exact")
+    }
+    var active = ladder.keySet
+    var cumN = Map.empty[Option[String], Long].withDefaultValue(0L)
+    var prev = Map.empty[Option[String], (Double, Double)]
+    val sampled = Seq.newBuilder[GroupRow]
+    steps.zipWithIndex.foreach { case (step, i) =>
+      if (active.nonEmpty) {
+        val m = base.filter(pmod(col("k"), lit(step)) === 0).groupBy(col("g"))
+          .agg(count(col("xc")).cast("double"),
+            sum(col("xc").cast("decimal(28,0)")).cast("double"),
+            sum((col("xc") * col("xc")).cast("decimal(38,0)")).cast("double"))
+          .collect().map(r => Option(r.getString(0)) ->
+            ((r.getDouble(1), dbl(r, 2), dbl(r, 3)))).toMap
+        active.foreach { g =>
+          val (n, sc, s2c) = m.getOrElse(g, (0.0, 0.0, 0.0))
+          val nn = ladder(g)._1.toDouble
+          def se = math.sqrt(((s2c - sc * sc / n) / (n - 1.0)) / n)
+          val (est, mar) = agg match {
+            case "sum" => (if (n > 0.0) sc * (nn / n) / 100.0 else 0.0,
+              if (n > 1.0) z * se * nn / 100.0 else Big)
+            case "avg" => (if (n > 0.0) (sc / n) / 100.0 else 0.0,
+              if (n > 1.0) z * se / 100.0 else Big)
+            case _ => (n * step.toDouble,
+              if (n > 0.0) (z * step.toDouble) * math.sqrt(n * (1.0 - 1.0 / step.toDouble))
+              else Big)
+          }
+          val rel = if (est != 0.0 && mar < Big)
+              100.0 * (((est + mar) - (est - mar)) / 2.0) / math.abs(est)
+            else Big
+          if ((rel <= threshold && n >= 50.0) || i == steps.size - 1) {
+            val drifted = prev.get(g).exists { case (pe, pm) =>
+              ((pe + pm < est - mar) || (est + mar < pe - pm)) && pe != 0.0 &&
+                math.abs(est - pe) / math.abs(pe) * 100.0 > 5.0
+            }
+            val status =
+              if (n < 50.0) "InsufficientData"
+              else if (drifted) "Drifting"
+              else if (rel <= threshold) "Stable"
+              else "Drifting"
+            sampled += ((g, ladder(g)._1, Some(est), Some(est - mar),
+              Some(est + mar), cumN(g) + n.toLong, i + 1, status))
+            active -= g
+          } else {
+            cumN += g -> (cumN(g) + n.toLong)
+            prev += g -> ((est, mar))
+          }
+        }
+      }
+    }
+    (exact ++ sampled.result()).sortBy(_._1)
+  }
+
+  test("one-aggregate grouped ladder equals the per-round grouped ladder row for row, in at most 4 jobs") {
+    // groups of 80k, 40k and 20k rows stop at rungs 1, 2 and 3 of the
+    // 20 ⊃ 10 ⊃ 5 ladder at a 2% threshold (and elsewhere at others);
+    // beside them a NULL group, a 150-row exact-route group, an all-NULL
+    // group on each route (120 and 600 rows), all keyed by id
+    val df = spark.range(146870).select(col("id").as("k"),
+      when(col("id") >= 146000 && col("id") < 146720, lit(null).cast("double"))
+        .otherwise(pmod(xxhash64(col("id")), lit(100000L)) / 100.0).as("v"),
+      when(col("id") < 80000, lit("a"))
+        .when(col("id") < 120000, lit("b"))
+        .when(col("id") < 140000, lit("c"))
+        .when(col("id") < 146000, lit(null).cast("string"))
+        .when(col("id") < 146120, lit("nullv_small"))
+        .when(col("id") < 146720, lit("nullv_big"))
+        .otherwise(lit("tiny")).as("g"))
+    for (agg <- Seq("sum", "avg", "count")) {
+      var roundsSeen = Set.empty[Int]
+      for (threshold <- Seq(2.0, 3.0, 5.0)) {
+        val want = perRoundGroupedLadder(df, col("v"), col("k"), col("g"),
+          Seq(20L, 10L, 5L), threshold, agg)
+        val (rows, jobs) = jobsDuring(AdaptiveExecutor.runGroupedDeterministic(
+          df, col("v"), col("k"), col("g"), steps = Seq(20L, 10L, 5L),
+          errorThresholdPct = threshold, agg = agg).collect())
+        def opt(r: org.apache.spark.sql.Row, i: Int) =
+          if (r.isNullAt(i)) None else Some(r.getDouble(i))
+        val got: Seq[GroupRow] = rows.toSeq.map(r => (Option(r.getString(0)),
+          r.getLong(1), opt(r, 2), opt(r, 3), opt(r, 4), r.getLong(5),
+          r.getInt(6), r.getString(7)))
+        val label = s"agg=$agg threshold=$threshold"
+        assert(got === want, label)
+        assert(jobs.jobs <= 4, s"$label ran ${jobs.jobs} jobs")
+        roundsSeen ++= got.map(_._7)
+      }
+      assert(roundsSeen === Set(0, 1, 2, 3), s"$agg: $roundsSeen")
+    }
+  }
+
   test("grouped ladder: exact routing below the floor, replayable, CIs bracket, sampled groups converge per group") {
     import spark.implicits._
     // planted strata: two big groups (ladder) + one tiny group (exact)
@@ -179,9 +380,9 @@ class AdaptiveSpec extends SparkSpec {
     // round-6 ADVICE: isin() never matches SQL NULL, so an un-coalesced
     // null group either reported est=0 (ladder) or vanished (exact route).
     // round-7 ADVICE closed the follow-up: the old "__null__" string
-    // sentinel collided with a genuine group of that value. Group keys now
-    // travel in an injective escaped form, so a NULL group and a literal
-    // "__null__" group coexist: 2000 null + 2000 '__null__' + 2000 'g'
+    // sentinel collided with a genuine group of that value. A plain GROUP
+    // BY keeps them apart, so a NULL group and a literal "__null__" group
+    // coexist: 2000 null + 2000 '__null__' + 2000 'g'
     // rows of a constant value all ride the ladder (>= exactCut 250), and
     // a constant has zero variance, so every estimate must be EXACTLY
     // n*10 — a group that lost or absorbed foreign moments cannot fake
@@ -237,23 +438,6 @@ class AdaptiveSpec extends SparkSpec {
       AdaptiveExecutor.runGroupedDeterministic(df, col("v"), col("k"),
         col("g"), agg = "median")
     }
-  }
-
-  test("grouped ladder refuses group cardinalities above the maxGroups contract") {
-    import spark.implicits._
-    // round-8 verdict item 4 (bound now guards the broadcast active-set
-    // frame — the round-12 rewrite removed the driver sketch maps): a
-    // caller beyond the contract must get a loud error up front.
-    val df = spark.range(200).select(col("id").as("k"),
-      lit(1.0).as("v"), col("id").cast("string").as("g"))
-    val e = intercept[IllegalArgumentException] {
-      AdaptiveExecutor.runGroupedDeterministic(df, col("v"), col("k"),
-        col("g"), maxGroups = 100)
-    }
-    assert(e.getMessage.contains("maxGroups"))
-    // at or below the threshold it runs
-    assert(AdaptiveExecutor.runGroupedDeterministic(df, col("v"), col("k"),
-      col("g"), maxGroups = 200).count() === 200L)
   }
 
   test("grouped ladder scales to 10^5 groups through the broadcast active-set join") {

@@ -696,11 +696,12 @@ class AnnIndexSpec extends SparkSpec {
   private def messages(t: Throwable): Seq[String] =
     if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
 
-  /** `f` fails with a message naming `op`, the id and a null or NaN. */
+  /** `f` fails with a message naming `op`, the id and a null, a NaN or a
+    * wrong number of components. */
   private def refused(op: String, id: Long)(f: => Any): Unit = {
     val e = intercept[Exception](f)
     assert(messages(e).exists(m => m.contains(op) && m.contains(s"id $id ") &&
-      (m.contains("null") || m.contains("NaN"))), messages(e))
+      Seq("null", "NaN", "components").exists(m.contains)), messages(e))
   }
 
   test("null and NaN vectors are refused by id in build, append, upsert and probe routing; the index stays intact") {
@@ -709,9 +710,13 @@ class AnnIndexSpec extends SparkSpec {
     val dim = slice.select(size(col("embedding"))).head().getInt(0)
     val nan = array((lit(Float.NaN) +: Seq.fill(dim - 1)(lit(0f))): _*)
     val nul = lit(null).cast(slice.schema("embedding").dataType)
+    // a prefix of the vector, and the vector with one more component
+    val short = org.apache.spark.sql.functions.slice(col("embedding"), 1,
+      dim - 1)
+    val long = concat(col("embedding"), array(lit(0.5f)))
     Ann.buildIvfIndex(slice, "vec_id", "embedding", vPath, numCentroids = 8)
     val before = Ann.readIndexCorpus(spark, vPath).count()
-    Seq(nan, nul).foreach { bad =>
+    Seq(nan, nul, short, long).foreach { bad =>
       // a refused rebuild leaves the existing index readable
       refused("buildIvfIndex", 7L) {
         Ann.buildIvfIndex(spoil(slice, 7L, bad), "vec_id", "embedding", vPath,
