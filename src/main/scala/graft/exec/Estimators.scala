@@ -337,9 +337,14 @@ object Estimators {
   def hybridGroupSum(df: DataFrame, keyCol: String, value: Column,
       sampleKey: Column, step: Long, minGroupSize: Long): DataFrame = {
     val vd = value.cast("decimal(18,2)")
-    val base = df.groupBy(col(keyCol)).agg(
-      count(lit(1)).as("n_rows"),
-      sum(when(pmod(sampleKey, lit(step)) === 0, vd)).as("__s_samp"))
+    // the sampled sum as an aggregate FILTER, not sum(when(…)): a decimal
+    // SUM writes its buffer back on every row it is fed, NULL or not, so
+    // only the FILTER form skips the unsampled rows
+    val base = df.select(col(keyCol), vd.as("__v"),
+        (pmod(sampleKey, lit(step)) === 0).as("__in"))
+      .groupBy(col(keyCol)).agg(
+        count(lit(1)).as("n_rows"),
+        expr("sum(__v) FILTER (WHERE __in)").as("__s_samp"))
     val small = base.filter(col("n_rows") < minGroupSize).select(col(keyCol))
     val exactSmall = df.join(broadcast(small), Seq(keyCol), "left_semi")
       .groupBy(col(keyCol)).agg(sum(vd).as("__s_exact"))

@@ -270,7 +270,9 @@ case class SortedLongJaccardGE(left: Expression, right: Expression,
 /** How many elements of a long array occur in a fixed SORTED DISTINCT
   * long set — the per-doc probe of a doc's [[WordNgramHashes]] against
   * an eval set's n-gram hashes ([[graft.operators.Decontam
-  * .keepUncontaminated]]). One binary search per element, so a doc costs
+  * .keepUncontaminated]]), and of a one-element id array against a
+  * micro-batch's near-dup losers ([[graft.streaming.StreamingCuration
+  * .withoutIds]]). One binary search per element, so a doc costs
   * O(|doc| log |set|) with no explode and no join. Over distinct input
   * elements (the [[WordNgramHashes]] contract) the count is the doc's
   * overlap count. The set is a reference object of the generated class,

@@ -1787,7 +1787,8 @@ object Ann {
       .orderBy(col("__id")).limit(numCentroids).collect()
     require(seedRows.length == numCentroids,
       s"corpus smaller than numCentroids=$numCentroids")
-    val seeds = seedRows.map(_.getSeq[Float](1).toArray.map(_.toDouble))
+    // float or double components: read either through Number
+    val seeds = seedRows.map(_.getSeq[Number](1).toArray.map(_.doubleValue))
     val dim = seeds.head.length
     seeds.indices.find(seeds(_).length != dim).foreach { i =>
       throw new IllegalArgumentException(s"$op: the vector of id " +

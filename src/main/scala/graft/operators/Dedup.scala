@@ -185,16 +185,17 @@ object Dedup {
     * the aggregate form (DedupSpec locks kernel ≡ aggregate): min over the
     * n-gram multiset equals min over the distinct-shingle set, and docs
     * with no shingles return NULL here exactly where explode emitted no
-    * row. Band sigs hash the same "m0,m1,.." strings as before. */
+    * row. The band signatures come from the [[graft.functions.BandSigs]]
+    * kernel in the same projection ([[bandSigArray]]); they hash the same
+    * "m0,m1,.." strings the declarative `xxhash64(concat_ws(…))` form
+    * hashed, so every band row is unchanged. A NULL signature yields a
+    * NULL band array, which posexplode turns into no rows. */
   def lshBands(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = LshShingleN, numHashes: Int = LshHashes,
-      bands: Int = LshBands, seed: Long = LshSeed): DataFrame = {
-    val sig = df.select(col(idCol),
-        minhashSig(col(textCol), shingleN, numHashes, seed).as("mh"))
-      .filter(col("mh").isNotNull)
-    sig.select(col(idCol), posexplode(bandSigArray(col("mh"), numHashes, bands)))
+      bands: Int = LshBands, seed: Long = LshSeed): DataFrame =
+    df.select(col(idCol), posexplode(bandSigArray(
+        minhashSig(col(textCol), shingleN, numHashes, seed), numHashes, bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_sig")
-  }
 
   /** The scan-stage [[graft.functions.MinHashSig]] kernel as a column:
     * the whole signature per document, NULL when it has no shingles. */
@@ -207,16 +208,14 @@ object Dedup {
 
   /** Band `b`'s signature is the xxhash64 of signature elements
     * `[b·rows, (b+1)·rows)` joined by "," — the array [[lshBands]]
-    * explodes, indexed by band. Reference `mh` as a projected column:
-    * every band re-reads it. */
+    * explodes, indexed by band — computed by the
+    * [[graft.functions.BandSigs]] kernel in one call per document
+    * (BandSigsSpec pins it to the declarative `xxhash64(concat_ws(…))`
+    * form). */
   private def bandSigArray(mh: Column, numHashes: Int, bands: Int): Column = {
+    import org.apache.spark.sql.graftshim.ColumnShim
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    array((0 until bands).map { bnd =>
-      xxhash64(concat_ws(",",
-        (bnd * rows until (bnd + 1) * rows)
-          .map(i => element_at(mh, i + 1)): _*))
-    }: _*)
+    ColumnShim.column(graft.functions.BandSigs(ColumnShim.expression(mh), bands))
   }
 
   /** [[lshBands]]' default geometry: shingle size, signature length,
@@ -234,11 +233,9 @@ object Dedup {
     * the document instead of as corpus × bands rows. */
   private[graft] def withBandSigs(df: DataFrame, textCol: String,
       outCol: String): DataFrame =
-    df.withColumn("__mh", minhashSig(col(textCol), LshShingleN, LshHashes,
-        LshSeed))
-      .withColumn(outCol, when(col("__mh").isNotNull,
-        bandSigArray(col("__mh"), LshHashes, LshBands)))
-      .drop("__mh")
+    df.withColumn(outCol, bandSigArray(
+      minhashSig(col(textCol), LshShingleN, LshHashes, LshSeed),
+      LshHashes, LshBands))
 
   /** All ordered pairs (a<b) from a sorted id array, as an expression. */
   private def pairCombos(ids: Column): Column =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -27,7 +27,10 @@ import graft.operators.{Decontam, Dedup, Mixing, TextAnalysis}
   *                      in-batch component member but its min id — are
   *                      read off the staged pairs in one job and
   *                      collapsed by union-find on the driver
-  *                      ([[nearDupLosers]])
+  *                      ([[nearDupLosers]]), then dropped by a
+  *                      binary-search probe of their sorted ids in the
+  *                      projections that read the staged frame
+  *                      ([[withoutIds]])
   *   3. decontaminate — the doc's staged 3-gram hashes (or, for another
   *                      n, its n-gram hashes) probed against the eval
   *                      set's sorted hash array (stateless per doc)
@@ -73,21 +76,23 @@ import graft.operators.{Decontam, Dedup, Mixing, TextAnalysis}
   *
   * 100 TB posture: per batch, one scan of the batch and ONE feature
   * staging — the post-exact (or post-span) frame with its band-signature
-  * array and hashed shingles computed in the same stage; one bucket
+  * array (one [[graft.functions.BandSigs]] call per doc) and hashed
+  * shingles computed in the same stage; one bucket
   * shuffle chain, where the batch's band rows meet the stored `bands/`
   * rows semi-joined on the batch's (band, band_sig) keys, so the stored
   * side is a growing but bucketable index that is never grouped whole,
   * and its batch-vs-store pairs stream out of chained explodes, so a hot
   * stored bucket never becomes one in-memory row of pairs; one verify
   * over the batch docs and the matched `kept/` docs; one read of the
-  * verified pairs for the losers; one anti-join of the losers; and the
-  * eval probe inside the kept rows' staging projection, with no explode,
-  * shuffle or join. The state deltas are projections of staged frames.
-  * Two hops cross the driver, both bounded: the losers read is
-  * batch-bounded (the verified in-batch edges of the capped pair
-  * enumeration, and each partition's distinct batch ids with a stored
-  * match), and the eval n-gram hash array is eval-bounded, by the same
-  * contract that lets [[graft.operators.Decontam]] broadcast it. After
+  * verified pairs for the losers; and two probes of sorted driver-local
+  * arrays, the losers' ids and the eval n-gram hashes, inside the
+  * projections that read the staged frame, with no explode, shuffle or
+  * join. The state deltas are projections of staged frames. Both arrays
+  * cross the driver bounded: the losers are batch-bounded (the verified
+  * in-batch edges of the capped pair enumeration, and each partition's
+  * distinct batch ids with a stored match), and the eval n-gram hash
+  * array is eval-bounded, by the same contract that lets
+  * [[graft.operators.Decontam]] broadcast it. After
   * thousands of batches the one-delta-dir-per-batch layout decays into
   * the classic small-files problem (listing + parquet footer reads
   * dominate every batch) — fold old deltas into a single snapshot with
@@ -278,20 +283,14 @@ object StreamingCuration {
     //    buckets and the stored index rows sharing them, then the
     //    in-batch non-representatives (component-min over verified
     //    in-batch pairs) and every batch doc matching a kept doc, read off
-    //    the staged pairs in one job, drop in ONE anti-join against a
-    //    local frame
+    //    the staged pairs in one job, drop by a binary-search probe of
+    //    the sorted loser ids. postNear is not staged: each of its three
+    //    consumers re-reads postSpan's checkpoint through the probe
     val storedBands = readState(spark, bandsPath, bandsSchema, batchId)
     val storedKept = readState(spark, keptPath, keptSchema, batchId)
     val verified = st.track(verifiedPairs(postSpan, idCol, storedBands,
       storedKept, config.nearDupThreshold))
-    val losers = spark.createDataFrame(
-      java.util.Arrays.asList(nearDupLosers(verified).map(Row(_)): _*),
-      StructType(Seq(StructField("id", LongType))))
-    val postNear = st.track(postSpan
-      .join(broadcast(losers.select(
-        col("id").cast(postSpan.schema(idCol).dataType).as(idCol))),
-        Seq(idCol), "left_anti")
-      .staged)
+    val postNear = withoutIds(postSpan, idCol, nearDupLosers(verified).sorted)
 
     // 3. decontaminate, 4. quality + split: stateless per doc, so all
     //    three ride the projection that stages `kept`. The eval n-gram
@@ -459,6 +458,17 @@ object StreamingCuration {
       }.collect()
     }
     (componentLosers(parts.flatMap(_._1)) ++ parts.flatMap(_._2)).distinct
+  }
+
+  /** The rows of `df` whose `idCol` is not in `sortedIds` (sorted,
+    * distinct): one [[graft.functions.SortedLongHits]] binary search per
+    * row, with no join and no exchange. The id is compared as a long; a
+    * NULL id matches nothing and stays. */
+  private[graft] def withoutIds(df: DataFrame, idCol: String,
+      sortedIds: Array[Long]): DataFrame = {
+    import org.apache.spark.sql.graftshim.ColumnShim
+    df.filter(ColumnShim.column(graft.functions.SortedLongHits(
+      ColumnShim.expression(array(col(idCol).cast("long"))), sortedIds)) === 0)
   }
 
   /** Every node of an undirected edge list (`edges` flat: a0, b0, a1,

@@ -27,6 +27,18 @@ class AnnIndexSpec extends SparkSpec {
     assert(fromIndex.nonEmpty)
   }
 
+  test("ivfTopK over array<double> vectors returns the pairs of the float column") {
+    val doubles = embs.withColumn("embedding",
+      col("embedding").cast("array<double>"))
+    def pairs(corpus: org.apache.spark.sql.DataFrame) =
+      Ann.ivfTopK(corpus, corpus.filter(col("vec_id") < 10), "vec_id",
+          "embedding", k = 5, numCentroids = 16, nProbe = 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val fromFloat = pairs(embs)
+    assert(fromFloat.nonEmpty)
+    assert(pairs(doubles) === fromFloat)
+  }
+
   private def triples(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 

@@ -493,11 +493,11 @@ class StreamingSpec extends SparkSpec {
     val (kept, count) = jobsDuring(curate(2))
     assert(kept.select("doc_id").collect().map(_.getLong(0)).toSet === Set(21L))
     // one feature staging, one candidate-and-verify pass, one read of its
-    // staged pairs for the losers, one broadcast loser anti-join, and the
-    // eval probe inside the staging of the kept rows: 20 jobs here, where
-    // the label rounds of dupClusters and the exploding decontamination
-    // join ran 26
-    assert(count.jobs <= 21, s"the third batch ran ${count.jobs} jobs")
+    // staged pairs for the losers, and the loser and eval probes inside
+    // the projections that read the feature staging: 18 jobs here, where
+    // the staged broadcast loser anti-join ran 20, and the label rounds
+    // of dupClusters and the exploding decontamination join ran 26
+    assert(count.jobs <= 19, s"the third batch ran ${count.jobs} jobs")
   }
 
   /** A micro-batch, its stored `kept/` docs and an in-batch bucket cap
@@ -632,6 +632,34 @@ class StreamingSpec extends SparkSpec {
     val chain = edges((0L until 30L).reverse.map(i => (i, i + 1, false)): _*)
     intercept[IllegalStateException](twin(chain))
     assert(losers(chain) === (1L to 30L).toSet)
+  }
+
+  test("near-dup loser probe keeps the ids the broadcast left_anti join kept, for long and int ids") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    import graft.streaming.StreamingCuration
+    val (batch, stored, cap) = nearDupFixture()
+    val feats = Dedup.withBandSigs(batch, "text", "__bands")
+      .withColumn("__sh", Dedup.shingleHashes64(col("text"), 3))
+    val losers = StreamingCuration.nearDupLosers(StreamingCuration.verifiedPairs(
+      feats, "doc_id", Dedup.lshBands(stored, "id", "text"), stored, 0.8,
+      maxBucket = cap))
+    assert(losers.nonEmpty)
+    // the fixture plus a NULL id, which neither form may drop
+    val docs = batch.union(Seq((Option.empty[Long], "no id")).toDF("doc_id", "text"))
+    for (idType <- Seq("long", "int")) {
+      val typed = docs.withColumn("doc_id", col("doc_id").cast(idType))
+      def ids(df: org.apache.spark.sql.DataFrame): Seq[Option[Long]] =
+        df.select(col("doc_id").cast("long")).collect()
+          .map(r => Option(r.get(0)).map(_.asInstanceOf[Long])).toSeq.sorted
+      val joined = typed.join(broadcast(losers.toSeq.toDF("id")
+          .select(col("id").cast(idType).as("doc_id"))),
+        Seq("doc_id"), "left_anti")
+      val probed = StreamingCuration.withoutIds(typed, "doc_id", losers.sorted)
+      assert(ids(probed) === ids(joined), idType)
+      assert(ids(probed).contains(None) && ids(probed).contains(Some(1L)) &&
+        !ids(probed).contains(Some(2L)), idType)
+    }
   }
 
   test("eval n-gram probe in the staging projection keeps the ids Decontam.decontaminate keeps") {
