@@ -27,23 +27,6 @@ final case class QueryDef(
     /** included in the per-round Bench headline set */
     headline: Boolean = false)
 
-/** Plan helpers shared across inventory files. */
-object QueryOps {
-  /** Deterministic total order for a BOUNDED-cardinality result (grouped
-    * rollups over low-cardinality keys — return flags, nations, sources,
-    * change types): single-partition sort instead of a global `orderBy`.
-    * The orderBy pays a range-partitioner SAMPLING pass plus a range
-    * exchange per execution to order rows that fit one task at ANY scale
-    * (round-14; guide §2.4 — "an orderBy used only to make output
-    * deterministic"). coalesce(1) adds no exchange (narrow merge of the
-    * final agg's already-tiny output) and sortWithinPartitions of one
-    * partition IS a total order, so the row sequence is identical to
-    * `orderBy(cols)`. Only for results whose cardinality is bounded by a
-    * dimension domain, never corpus-sized ones. */
-  def orderedSmall(df: DataFrame, cols: Column*): DataFrame =
-    df.coalesce(1).sortWithinPartitions(cols: _*)
-}
-
 /** Oracle-SQL fragments shared across inventory files. */
 object OracleSnippets {
   /** Shared-shingle BLOCKED exact-Jaccard pair CTEs over `documents`

@@ -274,7 +274,12 @@ object AdaptiveExecutor {
     *
     * The result stays distributed, one row per group, ordered by
     * `group`: (group, n_rows, sum_est, ci_lower, ci_upper, n_used,
-    * rounds_used, status). Nothing group-sized reaches the driver.
+    * rounds_used, status). Nothing group-sized reaches the driver. The
+    * order is a distributed `orderBy`, right for a library result that
+    * may hold 10⁶ groups and be written or counted (Catalyst drops the
+    * sort under `.count()`). The CLI, whose answers are collected whole,
+    * takes the unordered core [[groupedLadder]] and orders it in one
+    * partition ([[graft.QueryOps.orderedSmall]]) instead.
     *
     * Everything is a pure function of the data (decimal-exact moments,
     * one cast to double, fixed IEEE expression order), so a foreign
@@ -285,6 +290,21 @@ object AdaptiveExecutor {
     * texts (do not refactor the arithmetic). Non-finite margins use the
     * 1e18 sentinel (not Infinity) so the replay stays hashable. */
   def runGroupedDeterministic(df: DataFrame, value: Column, key: Column,
+      group: Column,
+      steps: Seq[Long] = Seq(20L, 10L, 5L),
+      errorThresholdPct: Double = 2.0,
+      confidence: Double = 0.95,
+      driftTolerancePct: Double = 5.0,
+      exactBelow: Long = -1L,
+      agg: String = "sum"): DataFrame =
+    groupedLadder(df, value, key, group, steps, errorThresholdPct,
+        confidence, driftTolerancePct, exactBelow, agg)
+      // nulls first (Spark's default ASC null ordering)
+      .orderBy(col("group"))
+
+  /** [[runGroupedDeterministic]] without its final order: the same rows
+    * in no particular order, for a caller that orders them itself. */
+  private[exec] def groupedLadder(df: DataFrame, value: Column, key: Column,
       group: Column,
       steps: Seq[Long] = Seq(20L, 10L, 5L),
       errorThresholdPct: Double = 2.0,
@@ -392,8 +412,6 @@ object AdaptiveExecutor {
           .when(picked(drifted), lit("Drifting"))
           .when(picked(rel) <= lit(errorThresholdPct), lit("Stable"))
           .otherwise(lit("Drifting")).as("status"))
-      // nulls first (Spark's default ASC null ordering)
-      .orderBy(col("group"))
   }
 
   /** Deterministic twin of [[run]] — the oracle-gatable form of the CLT

@@ -3,6 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryOps.orderedSmall
 import graft.api.AqeSession
 import graft.model.{AggKind, ApproxSpec, SamplingStrategy}
 
@@ -20,6 +21,25 @@ import graft.model.{AggKind, ApproxSpec, SamplingStrategy}
   * row key when it has one (lineitem's `l_orderkey`/`l_linenumber` fold —
   * two integer columns, so the sample scan keeps Catalyst's column
   * pruning), else the full-row content hash.
+  *
+  * Every grouped answer comes back ordered by its group column, NULL group
+  * first, sorted in ONE partition ([[graft.QueryOps.orderedSmall]]), not by
+  * a global `orderBy`, whose range partitioner adds a sampling job and an
+  * exchange. So a query runs only the jobs its aggregate needs: under AQE
+  * 2 for every form (the partial aggregate's map stage and the final
+  * stage) but priority, whose two-phase per-group top-(k+1) shuffles
+  * twice (3). The bound: a CLI answer is shown or collected whole, so the
+  * one task that merges and sorts the groups holds no more rows than the
+  * driver receives anyway. The cost: for a high-cardinality GROUP BY shown
+  * with `show(100)`, the final aggregate runs in one task, where the global
+  * sort ran a parallel top-k (`TakeOrderedAndProject`). The library
+  * surfaces ([[graft.api.AqeSession]],
+  * [[AdaptiveExecutor.runGroupedDeterministic]]) keep the distributed
+  * orderBy: their results may hold 10⁶ groups and be counted or written.
+  *
+  * `--method file` reads the picked part-files with the table's own schema
+  * ([[graft.sources.FileSampling.fromTable]]), so it runs no footer
+  * inference job either.
   */
 object SpecExecutor {
 
@@ -45,8 +65,7 @@ object SpecExecutor {
         // as clusters: scale = totalFiles/picked, CI from between-file
         // variance — the design-honest interval (a row-level SRS formula
         // would under-cover whenever files are internally homogeneous).
-        val sf = graft.sources.FileSampling.fromFiles(
-          spark, base0.inputFiles.toIndexedSeq, fl.step, fl.offset)
+        val sf = graft.sources.FileSampling.fromTable(base0, fl.step, fl.offset)
         val sampled = spec.where.map(w => sf.df.filter(expr(w))).getOrElse(sf.df)
         val scale = sf.scaleFactor
         if (spec.withCi) spec.agg match {
@@ -101,10 +120,10 @@ object SpecExecutor {
             // group gets its own size-k sample and threshold τ_g
             // (Skew.priorityPerKey, shard-salted two-phase top-(k+1); a
             // hot group never pins one reducer)
-            graft.operators.Skew.priorityPerKey(base, Seq(g), key, weight, p.k)
+            orderedSmall(graft.operators.Skew.priorityPerKey(base, Seq(g),
+                key, weight, p.k)
               .select(col(g), col("sum_est").as(alias),
-                col("n_used").as(s"${alias}_n"))
-              .orderBy(col(g))
+                col("n_used").as(s"${alias}_n")), col(g))
         }
       case (None, a: SamplingStrategy.Adaptive) =>
         val r = AdaptiveExecutor.run(base, valueCol, spec.agg, a)
@@ -131,20 +150,20 @@ object SpecExecutor {
         }
         // valueCol is already lit(1L) for COUNT(*); for COUNT(col) the
         // ladder's count(xc) moment is non-null-aware, matching SQL. The
-        // ladder's rows come ordered by group.
-        AdaptiveExecutor.runGroupedDeterministic(base, valueCol, key,
+        // unordered ladder core, ordered here like every grouped answer.
+        orderedSmall(AdaptiveExecutor.groupedLadder(base, valueCol, key,
             col(g), errorThresholdPct = a.errorThresholdPct,
             confidence = a.confidence, agg = ladderAgg)
           .select(col("group").as(g), col("sum_est").as(alias),
             col("ci_lower").as(s"${alias}_ci_lower"),
             col("ci_upper").as(s"${alias}_ci_upper"),
-            col("n_used").as(s"${alias}_n"), col("status"))
+            col("n_used").as(s"${alias}_n"), col("status")), col(g))
       case (Some(g), _) if spec.withCi =>
-        t.approxAggCiBy(spec.agg, valueCol, Seq(col(g)), spec.sampling, alias,
-          spec.confidence).orderBy(col(g))
+        orderedSmall(t.approxAggCiBy(spec.agg, valueCol, Seq(col(g)),
+          spec.sampling, alias, spec.confidence), col(g))
       case (Some(g), _) =>
-        t.approxAggBy(spec.agg, valueCol, Seq(col(g)), spec.sampling, alias)
-          .orderBy(col(g))
+        orderedSmall(t.approxAggBy(spec.agg, valueCol, Seq(col(g)),
+          spec.sampling, alias), col(g))
       case (None, _) if spec.withCi =>
         t.approxAggCi(spec.agg, valueCol, spec.sampling, alias, spec.confidence)
       case (None, _) =>

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Checkpoints.StageOps
-
 /** Skew-mitigation operators for hot keys (north-star scale concern; the
   * reference is single-node and has no notion of partition skew).
   *
@@ -106,15 +104,15 @@ object Skew {
       .withColumn("ps_prio", col("ps_w") * lit(m.toDouble) / h)
     val top = topNPerKey(prioritized, groupCols,
       Seq(col("ps_prio").desc, col("ps_key").asc), n = k + 1)
-      // ≤ (k+1)·groups rows feeding two branches (τ_g and the estimator
-      // join): materialize once so the two-phase window scan runs once
-      .staged
     val gk = groupCols.map(col)
-    val tau = top.groupBy(gk: _*)
-      .agg(when(count(lit(1)) === lit(k + 1), min(col("ps_prio")))
-        .otherwise(lit(0.0)).as("ps_tau"))
-    top.filter(col("rank") <= lit(k.toLong))
-      .join(tau, groupCols)
+    // τ_g: the (k+1)-th priority when the group has k+1 rows, else 0,
+    // taken by a window over the group, where the NULL group keeps its
+    // rows (an equi-join with a per-group τ frame drops them); the
+    // estimator's aggregate reuses the window's partitioning
+    val tau = max(when(col("rank") === lit(k + 1L), col("ps_prio")))
+      .over(org.apache.spark.sql.expressions.Window.partitionBy(gk: _*))
+    top.withColumn("ps_tau", coalesce(tau, lit(0.0)))
+      .filter(col("rank") <= lit(k.toLong))
       .groupBy(gk: _*)
       .agg(
         sum(round(greatest(col("ps_w"), col("ps_tau")), 4)

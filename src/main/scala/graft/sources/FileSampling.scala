@@ -1,7 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+  SubqueryAlias, View}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 import graft.exec.SampledFrame
 import graft.model.SamplingStrategy
@@ -41,11 +47,42 @@ object FileSampling {
     fromFiles(spark, files.toIndexedSeq, step, offset)
   }
 
-  /** Same design over an explicit file list (e.g. `df.inputFiles` of a
-    * registered table — the SpecExecutor `--method file` route): sort for
-    * a deterministic assignment, keep indices ≡ offset (mod step). */
+  /** Same design over an explicit file list: sort for a deterministic
+    * assignment, keep indices ≡ offset (mod step). The picked files'
+    * schema is inferred from their footers. */
   def fromFiles(spark: SparkSession, files: Seq[String], step: Int,
-      offset: Int = 0): SampledFrame = {
+      offset: Int = 0): SampledFrame =
+    sample(spark, files, None, step, offset)
+
+  /** Same design over the part-files of a registered table (the
+    * SpecExecutor `--method file` route). When the table is a plain
+    * parquet relation (a view of it included), the picked files are read
+    * with that relation's data schema, so no job runs to infer a schema
+    * from their footers (`spark.read.parquet` without a schema starts a
+    * `mergeSchemasInParallel` job). Any other table — a projection, a
+    * partitioned relation, another format — falls back to inference over
+    * the picked files, as [[fromFiles]] does. */
+  def fromTable(table: DataFrame, step: Int, offset: Int = 0): SampledFrame =
+    sample(table.sparkSession, table.inputFiles.toIndexedSeq,
+      parquetDataSchema(table.queryExecution.analyzed), step, offset)
+
+  /** The data schema of `plan` when it is a plain, unpartitioned parquet
+    * relation under any number of aliases and views. */
+  private def parquetDataSchema(plan: LogicalPlan): Option[StructType] =
+    plan match {
+      case SubqueryAlias(_, child) => parquetDataSchema(child)
+      case v: View => parquetDataSchema(v.child)
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation
+            if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
+              r.partitionSchema.isEmpty => Some(r.dataSchema)
+        case _ => None
+      }
+      case _ => None
+    }
+
+  private def sample(spark: SparkSession, files: Seq[String],
+      schema: Option[StructType], step: Int, offset: Int): SampledFrame = {
     require(step >= 1 && offset >= 0 && offset < step)
     val sortedFiles = files.sorted
     require(sortedFiles.nonEmpty, "no parquet part-files to sample")
@@ -55,7 +92,8 @@ object FileSampling {
     require(picked.nonEmpty,
       s"offset $offset selects no files (have ${sortedFiles.length}, step $step)")
     val scale = sortedFiles.length.toDouble / picked.length
-    SampledFrame(spark.read.parquet(picked: _*), scale,
+    val reader = schema.fold(spark.read)(spark.read.schema(_))
+    SampledFrame(reader.parquet(picked: _*), scale,
       SamplingStrategy.FileLevel(step, offset))
   }
 }

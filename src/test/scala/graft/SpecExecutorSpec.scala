@@ -290,6 +290,20 @@ class SpecExecutorSpec extends SparkSpec {
       spark, multi.inputFiles.toIndexedSeq, 4, 0)
     assert(sf.df.inputFiles.length === 2 && multi.inputFiles.length === 8)
     assert(sf.scaleFactor === 4.0)
+    // over the registered table the picked files are read with its schema:
+    // building the answer runs no footer-inference job, and the sample is
+    // the rows an inferred-schema read of the same files gives
+    assert(jobsDuring(SpecExecutor.run(spark, spec))._2.jobs === 0)
+    val tableSf = graft.sources.FileSampling.fromTable(spark.table("lineitem_multi"), 4)
+    def moneySum(d: org.apache.spark.sql.DataFrame) =
+      d.agg(sum(col("l_extendedprice").cast("decimal(18,2)")), count(lit(1))).head()
+    assert(tableSf.df.schema === sf.df.schema)
+    assert(tableSf.df.inputFiles.toSet === sf.df.inputFiles.toSet)
+    assert(moneySum(tableSf.df) === moneySum(sf.df))
+    // a table that is not a plain file relation falls back to inference
+    val projected = graft.sources.FileSampling.fromTable(
+      multi.withColumn("extra", lit(1)), 4)
+    assert(projected.df.schema === sf.df.schema)
     // GROUP BY must refuse loudly (group coverage per file uncontrolled)
     val g = QueryParser.parse(
       "SELECT SUM(l_extendedprice) FROM lineitem_multi GROUP BY l_returnflag")
@@ -355,5 +369,148 @@ class SpecExecutorSpec extends SparkSpec {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(ex).exists(_.contains("non-negative")),
       s"expected the non-negative weight guard, got: ${messages(ex)}")
+  }
+
+  /** sf0.001 lineitem registered as `lineitem` in a session of its own,
+    * with the return flag NULL on every first line item, so grouped
+    * answers carry a NULL group. The suite's own views stay untouched. */
+  private def nullGroupSession(): org.apache.spark.sql.SparkSession = {
+    import org.apache.spark.sql.functions._
+    val s = spark.newSession()
+    Tables.lineitem(s, sf0001).withColumn("l_returnflag",
+        when(col("l_linenumber") === 1, lit(null).cast("string"))
+          .otherwise(col("l_returnflag")))
+      .createOrReplaceTempView("lineitem")
+    s
+  }
+
+  /** Every grouped CLI form over GROUP BY `g`, labelled. */
+  private def groupedForms(g: String): Seq[(String, graft.model.ApproxSpec)] = {
+    import graft.model.SamplingStrategy
+    def q(agg: String) =
+      s"SELECT $agg FROM lineitem WHERE l_quantity BETWEEN 5 AND 40 GROUP BY $g"
+    Seq(
+      "exact" -> QueryParser.parse(q("AVG(l_quantity)")),
+      "uniform" -> QueryParser.parse(q("COUNT(*)"), samplePercent = Some(10.0)),
+      "systematic" -> QueryParser.parse(q("SUM(l_extendedprice)"))
+        .copy(sampling = SamplingStrategy.Systematic(10L)),
+      "ci" -> QueryParser.parse(q("SUM(l_extendedprice)"),
+        samplePercent = Some(10.0), withCi = true),
+      "priority" -> QueryParser.parse(q("SUM(l_extendedprice)"))
+        .copy(sampling = SamplingStrategy.Priority(20)),
+      "adaptive" -> QueryParser.parse(q("AVG(l_extendedprice)"),
+        errorThresholdPct = Some(5.0)))
+      .map { case (form, spec) => s"$form by $g" -> spec }
+  }
+
+  /** A grouped CLI answer built as the executor built it before it sorted
+    * in one partition: the same aggregate, ended by a global `orderBy`. */
+  private def orderByTwin(s: org.apache.spark.sql.SparkSession,
+      spec: graft.model.ApproxSpec): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    import graft.model.{AggKind, SamplingStrategy}
+    val g = spec.groupBy.get
+    val base = spec.where.foldLeft(s.table(spec.table))((d, w) => d.filter(expr(w)))
+    val key = Tables.samplingKey(spec.table, base)
+    val value = if (spec.column == "*") lit(1L) else col(spec.column)
+    val alias = s"${spec.agg.sqlName}_${if (spec.column == "*") "all" else spec.column}"
+    val answer = spec.sampling match {
+      case p: SamplingStrategy.Priority =>
+        graft.operators.Skew.priorityPerKey(base, Seq(g), key,
+            if (spec.agg == AggKind.Count) lit(1.0) else value, p.k)
+          .select(col(g), col("sum_est").as(alias), col("n_used").as(s"${alias}_n"))
+      case a: SamplingStrategy.Adaptive =>
+        graft.exec.AdaptiveExecutor.runGroupedDeterministic(base, value, key,
+            col(g), errorThresholdPct = a.errorThresholdPct,
+            confidence = a.confidence, agg = spec.agg.sqlName)
+          .select(col("group").as(g), col("sum_est").as(alias),
+            col("ci_lower").as(s"${alias}_ci_lower"),
+            col("ci_upper").as(s"${alias}_ci_upper"),
+            col("n_used").as(s"${alias}_n"), col("status"))
+      case design =>
+        val t = graft.api.AqeSession(s).table(base, key)
+        if (spec.withCi) t.approxAggCiBy(spec.agg, value, Seq(col(g)), design,
+          alias, spec.confidence)
+        else t.approxAggBy(spec.agg, value, Seq(col(g)), design, alias)
+    }
+    answer.orderBy(col(g))
+  }
+
+  test("grouped CLI answers equal their orderBy twins row for row and in order, in at most 2 jobs each (3 for priority)") {
+    import graft.model.SamplingStrategy
+    val s = nullGroupSession()
+    // l_orderkey has ~1,500 groups on sf0.001, against 4 shuffle partitions
+    for (g <- Seq("l_returnflag", "l_orderkey"); (label, spec) <- groupedForms(g)) {
+      val want = orderByTwin(s, spec).collect().toSeq
+      val (got, spent) = jobsDuring(SpecExecutor.run(s, spec).collect().toSeq)
+      assert(got === want, label)
+      if (g == "l_returnflag") assert(got.head.isNullAt(0), s"$label: NULL group first")
+      else assert(got.length > 100, s"$label: ${got.length} groups")
+      // priority's per-group top-(k+1) is two-phase (Skew.topNPerKey), so
+      // it shuffles twice before its final stage; every other form runs
+      // its aggregate's map stage and the final stage
+      val budget = if (spec.sampling.isInstanceOf[SamplingStrategy.Priority]) 3 else 2
+      assert(spent.jobs <= budget, s"$label ran ${spent.jobs} jobs")
+    }
+  }
+
+  test("grouped CLI answers keep their rows and order under 1 or 8 shuffle partitions and with AQE off") {
+    val s = nullGroupSession()
+    val forms = Seq("l_returnflag", "l_orderkey").flatMap(groupedForms)
+    def answers() = forms.map { case (label, spec) =>
+      label -> SpecExecutor.run(s, spec).collect().toSeq }
+    val want = answers()
+    Seq("spark.sql.shuffle.partitions" -> "1", "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.enabled" -> "false").foreach { case (k, v) =>
+      val before = s.conf.getOption(k)
+      s.conf.set(k, v)
+      try answers().zip(want).foreach { case ((label, got), (_, rows)) =>
+        assert(got === rows, s"$label with $k=$v") }
+      finally before.fold(s.conf.unset(k))(s.conf.set(k, _))
+    }
+  }
+
+  test("the aqp_mixed deck's 12 query shapes run at most 24 Spark jobs on sf0.01") {
+    import graft.exec.ApproxPlanner
+    // a session of its own over sf0.01 lineitem in 40 part-files, as the
+    // benchmark lays its table out
+    val s = spark.newSession()
+    val dir = tmpPath("aqp_deck")
+    Tables.lineitem(spark, sf001).repartition(40).write.mode("overwrite")
+      .parquet(Tables.path(dir, "lineitem"))
+    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
+    val qty = " WHERE l_quantity BETWEEN 11 AND 31"
+    val disc = " WHERE l_discount BETWEEN 0.03 AND 0.07"
+    val (sum, avgQ, cnt) =
+      ("SUM(l_extendedprice)", "AVG(l_quantity)", "COUNT(*)")
+    def sql(agg: String, where: String = "", group: String = "") =
+      s"SELECT $agg FROM lineitem$where" +
+        (if (group.isEmpty) "" else s" GROUP BY $group")
+    // (label, sql, --sample, --error, --ci, --method), in the deck's order
+    val deck = Seq(
+      ("exact", sql(sum, qty), None, None, false, None),
+      ("exact grouped", sql(avgQ, group = "l_returnflag"), None, None, false, None),
+      ("file", sql(sum), Some(10.0), None, false, Some("file")),
+      ("file where", sql(cnt, qty), Some(10.0), None, false, Some("file")),
+      ("uniform grouped", sql(cnt, disc, "l_linestatus"), Some(10.0), None, false, None),
+      ("systematic", sql(sum, qty), Some(10.0), None, false, Some("systematic")),
+      ("block", sql(avgQ), Some(10.0), None, false, Some("block")),
+      ("ci grouped", sql(sum, qty, "l_returnflag"), Some(10.0), None, true, None),
+      ("ci", sql(avgQ, disc), Some(10.0), None, true, None),
+      ("adaptive", sql(sum, qty), None, Some(2.0), false, None),
+      ("adaptive count", sql(cnt, disc), None, Some(2.0), false, None),
+      ("adaptive grouped", sql(sum, qty, "l_returnflag"), None, Some(1.0), false, None))
+    val spent = deck.map { case (label, q, sample, error, ci, method) =>
+      val spec = ApproxPlanner.plan(QueryParser.parse(q, samplePercent = sample,
+        errorThresholdPct = error, withCi = ci), method, compat = false, seed = Some(7L))
+      val (rows, count) = jobsDuring(SpecExecutor.run(s, spec).collect())
+      assert(rows.nonEmpty, label)
+      label -> count.jobs
+    }
+    // 2 per query: every grouped answer sorts in one partition (a global
+    // orderBy added a sampling job and a range exchange, 4 per grouped
+    // query) and the file samples read with the table's schema (footer
+    // inference added a job): 34 jobs before either
+    assert(spent.map(_._2).sum <= 24, spent.mkString(", "))
   }
 }
